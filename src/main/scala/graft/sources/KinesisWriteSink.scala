@@ -1,11 +1,14 @@
 package graft.sources
 
 import java.util
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.streaming.ReportsSinkMetrics
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -19,6 +22,13 @@ import graft.pipeline.{BatchProducer, KinesisClient, ProducerConfig, PutRecordsR
   * task runs a [[BatchProducer]] (K1–K7) and the epoch commit carries the
   * delivery stats. Delivery is at-least-once under task retry, the same
   * semantic class as the reference's requeue-at-back.
+  *
+  * Delivery totals: each epoch commit adds its tasks' counts to running
+  * totals for the query run, which the table reports as the progress's
+  * sink metrics (`sentRecords`, `droppedRecords`, `errors`); the
+  * reference exports the same counts as `firehose_to_kinesis_{sent,
+  * dropped,errors}_count` (main.go:27-47, 147-152), and
+  * [[graft.streaming.FirehoseMetricsListener]] does so from the progress.
   *
   * Client injection: DSv2 options are strings, so the sink looks its
   * client factory up by name in [[KinesisClientRegistry]] — production
@@ -50,6 +60,14 @@ object KinesisWriteSink {
   val Schema: StructType = StructType(Seq(
     StructField("data", BinaryType, nullable = false),
     StructField("partition_key", StringType, nullable = false)))
+
+  /** Sink-metric keys of the running delivery totals. `ErrorsMetric`
+    * counts failed PutRecords requests plus failed records of partially
+    * successful requests, as the reference's errors count does.
+    */
+  val SentMetric = "sentRecords"
+  val DroppedMetric = "droppedRecords"
+  val ErrorsMetric = "errors"
 }
 
 /** Name → client-factory registry (JVM-local; executors in a cluster
@@ -76,18 +94,20 @@ final class AcceptAllClient extends KinesisClient {
 }
 
 private[sources] class KinesisTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsWrite {
+    extends Table with SupportsWrite with ReportsSinkMetrics {
+  private val totals = new KinesisTotals
   override def name(): String =
     s"graft-kinesis(${options.getOrDefault("client", "accept")})"
   override def schema(): StructType = KinesisWriteSink.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.STREAMING_WRITE)
+  override def metrics(): util.Map[String, String] = totals.asMetrics
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
           new KinesisStreamingWrite(
-            options.getOrDefault("client", "accept"),
+            options.getOrDefault("client", "accept"), totals,
             ProducerConfig(
               batchSize = options.getOrDefault("batchSize", "500").toInt,
               bufferSize = options.getOrDefault("bufferSize", "5000").toInt,
@@ -105,22 +125,42 @@ private[sources] class KinesisTable(options: CaseInsensitiveStringMap)
 }
 
 private[sources] final case class KinesisCommit(
-    sent: Long, dropped: Long, requestErrors: Long) extends WriterCommitMessage
+    sent: Long, dropped: Long, requestErrors: Long, recordErrors: Long)
+    extends WriterCommitMessage
+
+/** Running delivery totals of one query run (updated by epoch commits on
+  * the driver, read by progress reporting).
+  */
+private[sources] final class KinesisTotals {
+  private val sent, dropped, errors = new AtomicLong
+
+  def add(c: KinesisCommit): Unit = {
+    sent.addAndGet(c.sent)
+    dropped.addAndGet(c.dropped)
+    errors.addAndGet(c.requestErrors + c.recordErrors)
+  }
+
+  def asMetrics: util.Map[String, String] = Map(
+    KinesisWriteSink.SentMetric -> sent.get.toString,
+    KinesisWriteSink.DroppedMetric -> dropped.get.toString,
+    KinesisWriteSink.ErrorsMetric -> errors.get.toString).asJava
+}
 
 private[sources] class KinesisStreamingWrite(
-    clientName: String, config: ProducerConfig) extends StreamingWrite {
+    clientName: String, totals: KinesisTotals, config: ProducerConfig)
+    extends StreamingWrite {
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new KinesisWriterFactory(clientName, config)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val sent = messages.collect { case k: KinesisCommit => k.sent }.sum
-    val dropped = messages.collect { case k: KinesisCommit => k.dropped }.sum
-    if (dropped > 0)
-      // the reference logs drops too (batchproducer.go:347); the commit
-      // hook is where a metrics sink would record them
-      System.err.println(s"[graft-kinesis] epoch $epochId: sent=$sent dropped=$dropped")
+    val commits = messages.collect { case k: KinesisCommit => k }
+    commits.foreach(totals.add)
+    val dropped = commits.map(_.dropped).sum
+    if (dropped > 0) // the reference logs drops too (batchproducer.go:347)
+      System.err.println(
+        s"[graft-kinesis] epoch $epochId: sent=${commits.map(_.sent).sum} dropped=$dropped")
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
@@ -152,7 +192,7 @@ private[sources] class KinesisDataWriter(producer: BatchProducer)
         s"graft-kinesis: $left records undelivered after " +
           s"${producer.config.flushTimeoutMillis} ms flush; failing task for retry")
     val s = producer.stats
-    KinesisCommit(s.sent, s.droppedRecords, s.requestErrors)
+    KinesisCommit(s.sent, s.droppedRecords, s.requestErrors, s.recordErrors)
   }
 
   override def abort(): Unit = () // buffered records discarded; source replays the epoch

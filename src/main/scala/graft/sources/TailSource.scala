@@ -1,12 +1,12 @@
 package graft.sources
 
 import java.io.RandomAccessFile
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -37,9 +37,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - survives truncation/rotation: size < committed offset → reread from
   *    0 (the `--follow=name` semantics).
   *
-  * Scale: one input partition per (file, byte-range) → tailing N files
-  * fans out across executors; a huge burst on one file is still one
-  * partition per batch, bounded by `maxBytesPerFilePerBatch`.
+  * Scale: each micro-batch packs its per-file byte ranges into at most
+  * one task per core (`defaultParallelism`), largest range first, so N
+  * tailed files cost a handful of tasks per trigger rather than N
+  * serial waves, and each task's sink producer fills full batches. A
+  * file's range is never split across tasks, so lines keep their file
+  * order within each file; a burst on one file stays one range per
+  * batch, bounded by `maxBytesPerFilePerBatch`.
   *
   * Usage:
   * {{{
@@ -89,6 +93,29 @@ object TailSource {
     } finally stream.close()
     out.sortBy(_.toString).toSeq
   }
+
+  /** Longest-processing-time-first packing: ranges sorted by byte length,
+    * largest first (path breaks ties), each assigned to the least-loaded
+    * of `min(#ranges, slots)` bins (the lowest index on ties). The largest
+    * bin is within 4/3 of the optimal makespan; bin 0 holds the largest
+    * range, so it is scheduled first. Deterministic for equal inputs.
+    */
+  private[sources] def pack(ranges: Seq[TailRange], slots: Int): Seq[Seq[TailRange]] = {
+    val n = math.min(ranges.size, slots)
+    val bins = Array.fill(n)(mutable.ArrayBuffer[TailRange]())
+    val load = new Array[Long](n)
+    ranges.sortBy(r => (-r.length, r.path)).foreach { r =>
+      val b = load.indices.minBy(load(_))
+      bins(b) += r
+      load(b) += r.length
+    }
+    bins.map(_.toSeq).toSeq
+  }
+}
+
+/** One file's byte range `[start, end)` to read in a micro-batch. */
+private[sources] final case class TailRange(path: String, start: Long, end: Long) {
+  def length: Long = end - start
 }
 
 private[sources] class TailTable(options: CaseInsensitiveStringMap)
@@ -349,29 +376,54 @@ private[sources] class TailMicroBatchStream(
     val e = end.asInstanceOf[TailOffset].offsets
     // No capping here: `end` already carries every admission limit, so
     // committed offsets == bytes actually read, by construction.
-    e.flatMap { case (path, endOff) =>
+    val ranges = e.toSeq.flatMap { case (path, endOff) =>
       val rawStart = s.getOrElse(path, 0L)
       // truncation/rotation: file shrank below committed offset → reread
       val startOff = if (endOff < rawStart) 0L else rawStart
-      if (endOff > startOff)
-        Some(TailInputPartition(path, startOff, endOff, emitEofPartial))
-      else None
-    }.toArray
+      if (endOff > startOff) Some(TailRange(path, startOff, endOff)) else None
+    }
+    val slots = SparkSession.active.sparkContext.defaultParallelism
+    TailSource.pack(ranges, slots)
+      .map(bin => TailInputPartition(bin, emitEofPartial): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[TailInputPartition]
-      new TailPartitionReader(p.path, p.start, p.end, p.emitPartial)
+      new TailRangesReader(p.ranges, p.emitPartial)
     }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] case class TailInputPartition(path: String, start: Long,
-    end: Long, emitPartial: Boolean = false)
+/** One task's share of a micro-batch: whole per-file ranges, read in order. */
+private[sources] case class TailInputPartition(ranges: Seq[TailRange],
+    emitPartial: Boolean = false)
   extends InputPartition
+
+/** Walks a partition's ranges in order, one [[TailPartitionReader]] at a
+  * time, so a task holds at most one range in memory.
+  */
+private[sources] class TailRangesReader(ranges: Seq[TailRange], emitPartial: Boolean)
+    extends PartitionReader[InternalRow] {
+  private val pending = ranges.iterator
+  private var current: TailPartitionReader = _
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      if (!pending.hasNext) return false
+      close()
+      val r = pending.next()
+      current = new TailPartitionReader(r.path, r.start, r.end, emitPartial)
+    }
+    true
+  }
+
+  override def get(): InternalRow = current.get()
+
+  override def close(): Unit = if (current != null) current.close()
+}
 
 /** Reads one file's byte range, emitting complete `\n`-terminated lines
   * (newline stripped, like Spark's text source; the envelope projection

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.util.UUID
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQueryListener, TimeMode, TimerValues, TTLConfig, ValueState}
+
+import graft.sources.KinesisWriteSink
 
 /** Event shape used by the streaming operators (matches the `events`
   * testdata table after Tables.events).
@@ -378,6 +383,14 @@ class UserTotalsProcessor extends StatefulProcessor[Long, StreamEvent, UserSessi
   * events. Counters accumulate per query run; `snapshot` exposes them
   * under the reference's metric names.
   *
+  * Delivery counts come from the sink when its progress carries them:
+  * the `graft-kinesis` sink reports running totals of records delivered
+  * and dropped and of errors ([[graft.sources.KinesisWriteSink]]), and
+  * each progress adds its run's increase since the previous one, so a
+  * restarted run, whose totals start again at 0, never moves a counter
+  * back. Other sinks report no delivery count: `sent_count` is then the
+  * source rows (`numInputRows`) and `dropped_count`/`errors_count` stay 0.
+  *
   * `queryName`: restrict accumulation to one named query — a session
   * listener sees EVERY streaming query's progress, and with more than
   * one running the per-instance counters would silently sum them all.
@@ -387,18 +400,34 @@ final class FirehoseMetricsListener(
     instance: String, queryName: Option[String] = None)
     extends StreamingQueryListener {
   // listener-bus delivery is single-threaded, but snapshot() readers race
-  // the updates — guard the trio so a scrape never sees a torn pair
+  // the updates — guard the counters so a scrape never sees a torn set
   private val lock = new Object
-  private var rowsIn = 0L
+  private var sent = 0L
+  private var dropped = 0L
+  private var errors = 0L
   private var rowsPerSec = 0.0
   private var batches = 0L
+  // last sink total seen per (run, sink-metric key)
+  private val lastTotals = mutable.Map[(UUID, String), Long]()
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+    lock.synchronized { lastTotals.filterInPlace { case ((run, _), _) => run != e.runId } }
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-    if (queryName.forall(_ == e.progress.name)) lock.synchronized {
-      rowsIn += e.progress.numInputRows
-      rowsPerSec = e.progress.processedRowsPerSecond
+    val p = e.progress
+    if (queryName.forall(_ == p.name)) lock.synchronized {
+      val sinkMetrics = Option(p.sink).flatMap(s => Option(s.metrics))
+      def increase(key: String): Option[Long] =
+        sinkMetrics.flatMap(m => Option(m.get(key))).map { v =>
+          val total = v.toLong
+          val prev = lastTotals.getOrElse((p.runId, key), 0L)
+          lastTotals((p.runId, key)) = total
+          total - prev
+        }
+      sent += increase(KinesisWriteSink.SentMetric).getOrElse(p.numInputRows)
+      dropped += increase(KinesisWriteSink.DroppedMetric).getOrElse(0L)
+      errors += increase(KinesisWriteSink.ErrorsMetric).getOrElse(0L)
+      rowsPerSec = p.processedRowsPerSecond
       batches += 1
     }
   }
@@ -406,7 +435,9 @@ final class FirehoseMetricsListener(
   /** Reference metric names, labeled by `system` = instance (main.go:32-46). */
   def snapshot: Map[String, Double] = lock.synchronized {
     Map(
-      s"""firehose_to_kinesis_sent_count{system="$instance"}""" -> rowsIn.toDouble,
+      s"""firehose_to_kinesis_sent_count{system="$instance"}""" -> sent.toDouble,
+      s"""firehose_to_kinesis_dropped_count{system="$instance"}""" -> dropped.toDouble,
+      s"""firehose_to_kinesis_errors_count{system="$instance"}""" -> errors.toDouble,
       s"""firehose_to_kinesis_rows_per_sec{system="$instance"}""" -> rowsPerSec,
       s"""firehose_to_kinesis_batches{system="$instance"}""" -> batches.toDouble)
   }
