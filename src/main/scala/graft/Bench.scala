@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 
 /** Per-round benchmark main (driver contract): runs every declared query
   * on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -20,10 +21,17 @@ import org.apache.spark.sql.SparkSession
   *    real regression from a noisy host without rerunning.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
+  /** (data dir, cores, passes): the knobs Bench reads, and
+    * graft.tools.Profile with it. */
+  def knobs: (String, String, Int) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
+    (sfDir, cpus, passes)
+  }
+
+  /** The bench session: local[cpus], AQE on, UI off. */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
@@ -39,6 +47,51 @@ object Bench {
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  // Build-once memo attribution: several catalog queries share
+  // parquet-backed build-once assets (similarity graph, persistent
+  // indexes, layouts — operators.Exact.buildOnceDir and the
+  // owner-local memos). Whoever calls first pays the one-time build,
+  // which made a ~3–7 s phantom regression land on a DIFFERENT query
+  // each round (r7: q87/q88/q121/q196; r8: q75/q110 — same code).
+  // Every build now lands in Exact's ledger; a pass during which a
+  // build occurred is flagged, EXCLUDED from that query's min/median
+  // (a clean replacement pass is taken — builds are once-per-JVM, so
+  // the replacement measures the serving path), and itemized in the
+  // contract + stderr as an explicit setup charge.
+
+  /** (seconds, build-occurred) for one fully-materialized run of the
+    * catalog query `name`; seconds is -1 when it threw. The pass's
+    * memo builds are appended to `ledger` as (query, key, seconds).
+    */
+  def runOnce(spark: SparkSession, sfDir: String, name: String,
+      ledger: mutable.Buffer[(String, String, Double)]): (Double, Boolean) = {
+    // Some queries persist() intermediate frames (q28/q30/q50 shingles)
+    // to make their single-pass property structural. Clear BEFORE timing
+    // so every pass pays the full pipeline cost — no cross-run caching.
+    spark.catalog.clearCache()
+    graft.operators.Exact.drainMemoBuilds() // stray events ≠ this pass
+    val t0 = System.nanoTime()
+    try SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        graft.operators.Exact.drainMemoBuilds()
+          .foreach { case (k, sec) => ledger += ((name, k, sec)) }
+        return (-1.0, false)
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    val builds = graft.operators.Exact.drainMemoBuilds()
+    builds.foreach { case (k, bSec) => ledger += ((name, k, bSec)) }
+    (sec, builds.nonEmpty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, cpus, passes) = knobs
+    val spark = session(cpus)
 
     /** 1-minute load average; -1 when unreadable (non-Linux). */
     def loadAvg(): Double =
@@ -47,54 +100,12 @@ object Bench {
         try src.mkString.split("\\s+")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
 
-    // Build-once memo attribution: several catalog queries share
-    // parquet-backed build-once assets (similarity graph, persistent
-    // indexes, layouts — operators.Exact.buildOnceDir and the
-    // owner-local memos). Whoever calls first pays the one-time build,
-    // which made a ~3–7 s phantom regression land on a DIFFERENT query
-    // each round (r7: q87/q88/q121/q196; r8: q75/q110 — same code).
-    // Every build now lands in Exact's ledger; a pass during which a
-    // build occurred is flagged, EXCLUDED from that query's min/median
-    // (a clean replacement pass is taken — builds are once-per-JVM, so
-    // the replacement measures the serving path), and itemized in the
-    // contract + stderr as an explicit setup charge.
-    val memoLedger =
-      scala.collection.mutable.ArrayBuffer.empty[(String, String, Double)]
-
-    /** (seconds, build-occurred) for one fully-materialized run. */
-    def runOnce(name: String): (Double, Boolean) = {
-      // Some queries persist() intermediate frames (q28/q30/q50 shingles)
-      // to make their single-pass property structural. Clear BEFORE timing
-      // so every pass pays the full pipeline cost — no cross-run caching.
-      spark.catalog.clearCache()
-      graft.operators.Exact.drainMemoBuilds() // stray events ≠ this pass
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          graft.operators.Exact.drainMemoBuilds()
-            .foreach { case (k, sec) => memoLedger += ((name, k, sec)) }
-          return (-1.0, false)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val builds = graft.operators.Exact.drainMemoBuilds()
-      builds.foreach { case (k, bSec) => memoLedger += ((name, k, bSec)) }
-      (sec, builds.nonEmpty)
-    }
+    val memoLedger = mutable.ArrayBuffer.empty[(String, String, Double)]
+    def runOnce(name: String): (Double, Boolean) =
+      Bench.runOnce(spark, sfDir, name, memoLedger)
 
     val startLoad = loadAvg()
-    // Optional name-prefix filter for local iteration (comma-separated,
-    // e.g. "q116,q144"); the driver never sets it. A filtered run loses
-    // the positional contract's contiguous ids and falls back to the
-    // self-describing pair array automatically.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.allDefs.map(_.name)
-      .filter(n => only.forall(_.exists(p => n.startsWith(p))))
-    require(names.nonEmpty, s"SPARK_GRAFT_BENCH_ONLY=${only.getOrElse(Set())} " +
-      "matched no catalog query names")
     runOnce(names.head) // warmup (its memo builds land in the ledger)
     val results0 = names.map { n =>
       val loads = scala.collection.mutable.ArrayBuffer(loadAvg())

@@ -4,14 +4,15 @@ import java.nio.file.{Files, StandardOpenOption}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.pipeline._
 import graft.functions.ProtoWire
+import graft.streaming.FirehoseMetricsListener
 
 /** End-to-end demo of the reference pipeline re-expressed on Spark: the
   * graft-tail DSv2 source follows growing log files, the envelope
   * projection + ProtoWire serialization run as streaming transforms, and
-  * the Kinesis-shaped sink applies the K1–K7 producer semantics against
-  * an injectable (here: fake) client. Run:
+  * the graft-kinesis sink applies the K1–K7 producer semantics against
+  * a registered client (here: the default "accept" client, which
+  * acknowledges everything). Run:
   *
   *   sbt "runMain graft.examples.TailPipelineDemo"
   */
@@ -32,7 +33,10 @@ object TailPipelineDemo {
     val f1 = watchRoot.resolve("svc/app.log")
     Files.writeString(f1, "boot: engine up\nboot: sources registered\n")
 
-    val metrics = KinesisSink.newMetrics(spark)
+    val metrics = new FirehoseMetricsListener("demo-node")
+    spark.streams.addListener(metrics)
+    def count(name: String): Double =
+      metrics.snapshot(s"""firehose_to_kinesis_${name}_count{system="demo-node"}""")
     val lines = spark.readStream.format("graft-tail")
       .option("path", watchRoot.toString)
       .option("glob", "*.log")
@@ -51,24 +55,28 @@ object TailPipelineDemo {
         (ProtoWire.encode(env), path)
       }.toDF("data", "partition_key")
 
-    val query = KinesisSink.writeStream(
-      serialized,
-      clientFactory = () => new FakeKinesisClient(),
-      checkpointDir = Files.createTempDirectory("demo-ckpt").toString,
-      metrics = Some(metrics),
-      triggerInterval = "1 second").start()
+    val query = serialized.writeStream.format("graft-kinesis")
+      .option("checkpointLocation",
+        Files.createTempDirectory("demo-ckpt").toString)
+      .trigger(Trigger.ProcessingTime("1 second"))
+      .start()
 
     query.processAllAvailable()
-    println(s"[demo] after batch 1: sent=${metrics.sent.value} dropped=${metrics.dropped.value}")
+    org.apache.spark.sql.GraftBridge.waitForListeners(spark)
+    println(s"[demo] after batch 1: sent=${count("sent")} dropped=${count("dropped")}")
 
     // grow the file + add a late file: the tail source must pick both up
     Files.writeString(f1, "req: GET /healthz 200\n", StandardOpenOption.APPEND)
     Files.writeString(watchRoot.resolve("svc/late.log"), "late file line\n")
     query.processAllAvailable()
-    println(s"[demo] after growth: sent=${metrics.sent.value} dropped=${metrics.dropped.value}")
+    org.apache.spark.sql.GraftBridge.waitForListeners(spark)
+    println(s"[demo] after growth: sent=${count("sent")} dropped=${count("dropped")}")
 
+    // after stop() every progress has been posted; drain them to the
+    // listener before the final check
     query.stop()
-    val ok = metrics.sent.value == 4 && metrics.dropped.value == 0
+    org.apache.spark.sql.GraftBridge.waitForListeners(spark)
+    val ok = count("sent") == 4 && count("dropped") == 0
     println(s"[demo] RESULT: ${if (ok) "OK" else "MISMATCH"} (expected 4 sent)")
     spark.stop()
     if (!ok) sys.exit(1)

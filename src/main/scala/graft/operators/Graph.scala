@@ -3020,17 +3020,6 @@ object Graph {
             "left_anti"))
         .withColumn("d", lit(depth))
         .select(col("root"), col("node"), col("d"), col("sigma"))
-      // plan evidence hook: the per-round plan is invisible in the
-      // final explain (layers are checkpoint-truncated), so a round's
-      // physical plan can be dumped for the plans/rNN files on demand
-      sys.env.get("GRAFT_BETW_PLAN_DIR").filter(_ => depth == 2)
-        .foreach { dir =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, s"betweenness_round$depth.txt"),
-            nextPlan.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")).getBytes("UTF-8"))
-        }
       // lazy: isEmpty materializes what it needs now, later rounds
       // fill the remaining partitions on first read — one job per
       // round instead of checkpoint + isEmpty (r16)

@@ -469,16 +469,6 @@ object Similarity {
       val cePlan = am.select(col("cluster"), posexplode(col("gx")).as(Seq("i0", "x")))
         .groupBy(col("cluster").as("cid"), (col("i0") + 1).as("i"))
         .agg(expr("CAST(sum(x) div count(1) AS LONG)").as("c"))
-      // plan evidence hook (the betweenness round-dump idiom): the
-      // per-iteration update plan is invisible in the final explain
-      // (ce is checkpoint-truncated), so it can be dumped on demand
-      sys.env.get("GRAFT_KMEANS_PLAN_DIR").foreach { dir =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "kmeans_update_round.txt"),
-          cePlan.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString(
-              "formatted")).getBytes("UTF-8"))
-      }
       ce = cePlan.localCheckpoint(true)
     }
     (ve, gv, ce)

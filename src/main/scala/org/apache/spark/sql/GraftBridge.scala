@@ -13,6 +13,11 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until every event posted so far has reached every listener
+    * (`listenerBus` is private[spark]). */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Unloads every loaded StateStore provider and cancels the singleton
     * maintenance task. Called by Bench before its final contract print:
     * the maintenance ScheduledExecutor outlives `spark.stop()` and its

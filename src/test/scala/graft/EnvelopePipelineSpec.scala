@@ -1,9 +1,12 @@
 package graft
 
 import graft.functions.ProtoWire
-import graft.pipeline.{EnvelopePipeline => EP, KinesisSink, FakeKinesisClient, ProducerConfig}
+import graft.pipeline.{EnvelopePipeline => EP, KinesisClient, KinesisRecord, PutRecordsResult, RecordResult}
+import graft.sources.{KinesisClientRegistry, KinesisWriteSink}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 class EnvelopePipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,20 +58,46 @@ class EnvelopePipelineSpec extends AnyFunSuite {
 
   test("end-to-end: files → envelopes → wire bytes → fake sink via Spark") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import s.implicits._
     val root = writeFixture()
     val serialized = EP.batch(spark,
       Seq(root.resolve("a.log").toString, root.resolve("sub/deep/b.log").toString),
       origin = "e2e")
-    val metrics = KinesisSink.newMetrics(spark)
-    KinesisSink.writeBatch(serialized, () => new FakeKinesisClient(),
-      ProducerConfig(), Some(metrics))
-    assert(metrics.sent.value === 4L)
-    assert(metrics.dropped.value === 0L)
-    // and the bytes decode back to valid envelopes
-    val decoded = serialized.collect().map { case (bytes, key) =>
-      val env = ProtoWire.decode(bytes)
+    val captured = new ConcurrentLinkedQueue[KinesisRecord]()
+    KinesisClientRegistry.register("envelope-e2e", () => new KinesisClient {
+      override def putRecords(records: Seq[KinesisRecord]): PutRecordsResult = {
+        records.foreach(captured.add)
+        PutRecordsResult(None, Seq.fill(records.size)(RecordResult()))
+      }
+    })
+    val rows = serialized.collect()
+    val in = MemoryStream[(Array[Byte], String)]
+    val q = in.toDF().toDF("data", "partition_key")
+      .writeStream.format("graft-kinesis")
+      .option("client", "envelope-e2e")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-envelope-e2e").toString)
+      .start()
+    try {
+      in.addData(rows.toSeq: _*)
+      q.processAllAvailable()
+      val sink = q.lastProgress.sink.metrics
+      assert(sink.get(KinesisWriteSink.SentMetric) === "4")
+      assert(sink.get(KinesisWriteSink.DroppedMetric) === "0")
+    } finally q.stop()
+    // the delivered bytes are exactly the batch's, and decode back to
+    // valid envelopes keyed by their source path
+    val delivered = captured.toArray(Array.empty[KinesisRecord]).toSeq
+    assert(delivered.length === 4)
+    def wire(bytes: Array[Byte], key: String) =
+      (bytes.map("%02x".format(_)).mkString, key)
+    assert(delivered.map(r => wire(r.data, r.partitionKey)).sorted ===
+      rows.map { case (b, k) => wire(b, k) }.toSeq.sorted)
+    val decoded = delivered.map { r =>
+      val env = ProtoWire.decode(r.data)
       assert(env.eventType === "LogMessage")
-      assert(env.logMessage.get.source_instance === key)
+      assert(env.logMessage.get.source_instance === r.partitionKey)
       env
     }
     assert(decoded.length === 4)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the PLAN properties the 100 TB design claims — if a refactor
@@ -19,6 +21,24 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     s
   }
+
+  /** (file name, plan) of every action in one run of `name`, captured
+    * through the profiler's recorder — an iterative operator's round
+    * plan is checkpoint-truncated out of the final explain. */
+  private def actionPlans(name: String): Seq[(String, String)] = {
+    val dir = Files.createTempDirectory("graft-plans")
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val pass = try rec.record(Some(dir))(
+      Bench.runOnce(spark, sf, name, scala.collection.mutable.ArrayBuffer.empty))
+    finally rec.detach()
+    assert(pass.sec >= 0, s"$name failed")
+    Files.list(dir).iterator.asScala.toSeq.sortBy(_.toString).map(f =>
+      f.getFileName.toString -> Files.readString(f))
+  }
+
+  /** The final adaptive plan of a captured action. */
+  private def finalPlan(plan: String): String =
+    plan.split("== Executed plan ==").last.split("== Initial Plan ==").head
 
   test("q50 broadcasts the HOT shingle side of a left_anti join") {
     val plan = executedPlan("q50_neardup_dfcapped")
@@ -157,6 +177,61 @@ class PlanShapeSpec extends AnyFunSuite {
     val nLines = plan.linesIterator.size
     assert(nLines < 2000,
       s"composed plan should stay O(stage) after seam truncation, got $nLines lines")
+  }
+
+  test("q57 label propagation truncates its rounds at checkpoint seams") {
+    // r16: each propagation round is a localCheckpoint seam, so the
+    // final plan reads LogicalRDD scans instead of re-inlining every
+    // round (the r15 executed plan was 51,621 lines)
+    val plan = executedPlan("q57_dedup_clusters")
+    assert(plan.contains("ExistingRDD"),
+      s"round seams should appear as checkpointed LogicalRDD scans:\n$plan")
+    val nLines = plan.linesIterator.size
+    assert(nLines < 500,
+      s"label-propagation plan should stay O(round) after seam truncation, got $nLines lines")
+  }
+
+  test("q177 forward BFS round 2: one map-side-combined push exchange, no SMJ") {
+    // r16: sigma is aggregated before the visited anti-joins, which
+    // touch only the last two layers, so a round ships its push once,
+    // after a partial aggregate. The round plan is the localCheckpoint
+    // action whose projection stamps the layer depth.
+    val rounds = actionPlans("q177_betweenness").filter { case (f, p) =>
+      f.endsWith("-localCheckpoint.txt") && """\b2 AS d#""".r.findFirstIn(p).nonEmpty }
+    assert(rounds.size == 1, s"expected one depth-2 round plan, got ${rounds.map(_._1)}")
+    val (file, plan) = rounds.head
+    assert(!plan.contains("SortMergeJoin"), s"$file plans a sort-merge join:\n$plan")
+    val lines = finalPlan(plan).linesIterator.toVector
+    val shuffles = lines.indices.filter(i => lines(i).contains("+- Exchange hashpartitioning"))
+    assert(shuffles.size == 1, s"$file: expected one shuffle exchange:\n$plan")
+    val at = shuffles.head
+    assert(lines(at + 1).contains("HashAggregate") && lines(at + 1).contains("partial_sum"),
+      s"$file: the exchange must sit on a partial aggregate:\n$plan")
+    assert(lines.take(at).exists(l => l.contains("HashAggregate") && !l.contains("partial_")),
+      s"$file: the exchange must feed the final aggregate:\n$plan")
+  }
+
+  test("q160 k-means update round joins only the broadcast centroids") {
+    // r16: the member vector rides through the argmin aggregate, so the
+    // update re-explodes it row-locally instead of joining the exploded
+    // corpus against the assignment; the only join left is the
+    // assignment's cross join with the broadcast k-centroid frame, and
+    // one exchange separates the argmin aggregate from the update's
+    val rounds = actionPlans("q160_kmeans_intgrid").filter { case (f, p) =>
+      f.endsWith("-localCheckpoint.txt") && p.contains("posexplode") &&
+        p.contains("SortAggregate") }
+    assert(rounds.size == 2, s"expected two update rounds, got ${rounds.map(_._1)}")
+    rounds.foreach { case (file, plan) =>
+      val fin = finalPlan(plan)
+      assert(Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
+        .forall(j => !plan.contains(j)), s"$file: no hash or sort-merge join expected:\n$plan")
+      assert("BroadcastNestedLoopJoin BuildRight, Cross".r.findAllIn(fin).size == 1,
+        s"$file: one broadcast centroid cross join expected:\n$plan")
+      val update = fin.linesIterator.takeWhile(!_.contains("SortAggregate(")).toVector
+      assert(update.count(_.contains("+- Exchange hashpartitioning")) == 1 &&
+        update.exists(_.contains("Generate posexplode")),
+        s"$file: argmin → update should be one exchange and a row-local explode:\n$plan")
+    }
   }
 
   test("q100 sessions reuse the user partitioning: exactly one exchange") {
