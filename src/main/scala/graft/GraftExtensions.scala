@@ -7,11 +7,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `spark.sql.extensions=graft.GraftExtensions` (or programmatically via
   * `SparkSession.builder.withExtensions(new GraftExtensions)`).
   *
-  * Delegates to [[graft.functions.GraftFunctions.descriptors]] — the ONE
-  * registration surface (this class and
-  * `graft.functions.GraftExtensions` are interchangeable config values),
-  * so the function set, arity validation, and behavior cannot diverge
-  * between the two advertised entry points.
+  * Injects [[graft.functions.GraftFunctions.descriptors]], the same
+  * list [[graft.functions.GraftFunctions.register]] puts on a live
+  * session, so the function set, arity validation, and behavior cannot
+  * diverge between the two.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `ReadSchema` in `df.explain("formatted")`).
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -68,15 +64,6 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view so catalog queries can use
-    * `spark.sql` (GROUPING SETS etc. are SQL-only surfaces).
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, sfDir) else load(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
 }
 
 /** One declared engine query: the Spark implementation plus (when the
@@ -92,7 +79,4 @@ object QueryDef {
   def checked(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -146,9 +146,4 @@ object CosineSimilarity {
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimilarity(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Register as SQL function `graft_cosine` on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -9,29 +9,24 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the same fused kernels the DataFrame API exposes through
   * [[CosineSimilarity.cosineSim]] / [[PolyHash]]:
   *
-  *  - as a session extension (`spark.sql.extensions=graft.functions.
-  *    GraftExtensions` on a cluster, or `builder.withExtensions`), the
-  *    cluster-wide deployment path — every new session gets the
-  *    functions with no per-session code;
-  *  - or imperatively on an existing session via
-  *    [[GraftFunctions.register]] (the test/notebook path — Spark
-  *    applies extension classes only at session INSTANTIATION, so an
-  *    already-running session cannot load them any other way).
+  *  - as a session extension (`spark.sql.extensions=graft.GraftExtensions`
+  *    on a cluster, or `builder.withExtensions`), the cluster-wide
+  *    deployment path — every new session gets the functions with no
+  *    per-session code;
+  *  - or imperatively on an existing session via [[register]] (the
+  *    notebook path, and q152's — Spark applies extension classes only
+  *    at session INSTANTIATION, so an already-running session cannot
+  *    load them any other way).
   *
-  * Both paths share the same descriptors, so behavior cannot diverge.
-  * ExtensionsSpec pins SQL == DataFrame API on both functions.
+  * Both paths share [[descriptors]], so behavior cannot diverge.
+  * ExtensionsSpec pins SQL == DataFrame API on every function.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.descriptors.foreach(e.injectFunction)
-}
-
 object GraftFunctions {
   type Descriptor =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+    new ExpressionInfo(classOf[graft.GraftExtensions].getName, null, name, usage,
       "", "", "", "", "", "", "internal")
 
   val descriptors: Seq[Descriptor] = Seq(
@@ -56,8 +51,8 @@ object GraftFunctions {
         require(children.size == 1, "nfc_normalize takes exactly 1 argument")
         NfcNormalize(children.head)
       }),
-    // legacy aliases (the graft.GraftExtensions entry point's original
-    // names) — same kernels, same arity validation
+    // legacy aliases (the extension's original names) — same kernels,
+    // same arity validation
     (FunctionIdentifier("graft_cosine"),
       info("graft_cosine",
         "graft_cosine(a, b) - alias of cosine_sim"),

@@ -21,44 +21,6 @@ object TextFunctions {
   def normalize(text: Column): Column =
     regexp_replace(trim(lower(text)), " +", " ")
 
-  /** Token n-grams (shingles) as an array column: for n=3 over k tokens
-    * yields k-n+1 space-joined trigrams; shorter docs yield empty array.
-    * Pure `transform(sequence(...))` — no explode, no shuffle, no UDF.
-    */
-  def tokenNgrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
-      .otherwise(array().cast("array<string>"))
-
-  /** Distinct shingle set (basis for Jaccard / MinHash). */
-  def shingleSet(text: Column, n: Int): Column =
-    array_distinct(tokenNgrams(tokens(text), n))
-
-  /** Exact Jaccard similarity of two (distinct-element) array columns —
-    * |a∩b| / |a∪b|, each set operation built ONCE in the expression
-    * tree (the sum-minus-intersect denominator duplicated the intersect
-    * subexpression). Integer sizes divided in double — bit-deterministic
-    * in any engine.
-    *
-    * EMPTY∕EMPTY CONVENTION — read before filtering on a threshold:
-    * two empty sets score a defined 1.0 (identical sets), not a NULL
-    * from 0/0. Under a `jaccard(...) >= t` near-dup filter this means
-    * every pair of blank documents (whitespace-only text, shingle
-    * window longer than the token list) reports as a PERFECT duplicate
-    * — which is usually what a dedup pipeline wants (blank docs ARE
-    * mutual duplicates), but is a behavior flip from the NULL-drops-out
-    * semantics a 0/0 division would give. Callers that must NOT pair
-    * blanks should pre-filter `size(a) > 0` (the Dedup operators do:
-    * their shingle frames explode per gram, so empty-set docs never
-    * reach the pair join at all).
-    */
-  def jaccard(a: Column, b: Column): Column = {
-    val union = size(array_union(a, b))
-    when(union === 0, lit(1.0))
-      .otherwise(size(array_intersect(a, b)).cast("double") / union)
-  }
-
   /** English-ish stopword list used by the language-ID heuristic and the
     * quality score (kept tiny + explicit so the DuckDB oracle can inline
     * the same list).

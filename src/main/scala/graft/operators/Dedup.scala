@@ -59,10 +59,10 @@ object Dedup {
 
   /** Exploded distinct token-trigram shingles: (doc_id, g) rows built
     * with posexplode + window `lead` — all codegen'd (string concat over a
-    * doc_id-partitioned window), no higher-order-function lambdas. The
-    * array-based form (TF.shingleSet) measured ~10× slower here because
-    * nested transform/element_at lambdas evaluate interpreted, and
-    * self-joins recompute them per branch.
+    * doc_id-partitioned window), no higher-order-function lambdas. An
+    * array-based form (array_distinct over transform/element_at
+    * n-grams) measured ~10× slower here because nested lambdas
+    * evaluate interpreted, and self-joins recompute them per branch.
     */
   /* Multi-use note: q28/q30/q50 reference this frame up to six times
    * (signature, sizes, verify×2, band self-join×2). AQE ReusedExchange can
@@ -603,57 +603,81 @@ object Dedup {
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC 2014) — the 100 TB upgrade of [[dedupClusters]]: O(log n)
     * rounds on ANY graph shape, including the pathological long chains
-    * where plain min-label propagation needs diameter rounds. Each round
-    * is two groupBy-join passes over the edge frame; edges only ever
-    * point "downhill" toward smaller ids, and at the fixpoint every node
-    * holds exactly one edge to its component minimum (a star).
-    *
-    * large-star: every node links its strictly-larger neighbors to the
-    * minimum of its closed neighborhood. small-star: orienting edges
-    * large→small, every node links its smaller neighbors (and itself) to
-    * that minimum. Both preserve connectivity; alternating them
-    * contracts any component to a star in logarithmic rounds.
-    *
-    * Same result contract as [[dedupClusters]]: (doc_id, cluster_id,
-    * keep), empty input → empty output, the RETURNED frame is persisted
-    * and materialized (release with `result.unpersist()`). Per-round
-    * edge frames are localCheckpoint'd (lineage must be truncated —
-    * each round references its input ~6 times, so plans would grow
-    * exponentially); their blocks are reclaimed by the ContextCleaner
-    * as the loop drops references, and on a cluster a lost executor
-    * fails the in-flight job (re-run) — the standard localCheckpoint
-    * trade every iterative graph algorithm on Spark makes (set a
-    * reliable checkpoint dir instead if executors are preemptible).
+    * where plain min-label propagation needs diameter rounds. Built on
+    * [[starComponents]]; returns [[dedupClusters]]' contract: (doc_id,
+    * cluster_id, keep), empty input → empty output, the RETURNED frame
+    * is persisted and materialized (release with `result.unpersist()`).
     */
   def dedupClustersStars(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    var edges = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("a"),
-        least(col("doc_a"), col("doc_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val out = starComponents(
+        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), Nil, maxIters)
+      .select(col("node").as("doc_id"), col("m").as("cluster_id"),
+        (col("node") === col("m")).as("keep"))
+      .orderBy(col("doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    out
+  }
+
+  /** The large-star/small-star kernel, run over MANY edge sets at once:
+    * `pairs` carries (keys…, a, b) rows meaning "undirected edge {a, b}
+    * belongs to the subproblem named by the `keys` columns", and every
+    * groupBy/join of a round carries the keys along. Plain connected
+    * components pass `keys = Nil`; the articulation/bridge exclusion
+    * index passes the excluded node `x` and solves every G∖{x} jointly.
+    * Returns (keys…, node, m): the canonical (min-member) component
+    * label of every node that carries an edge in its subproblem.
+    *
+    * Edges only ever point "downhill" (a > b). large-star: every node
+    * links its strictly-larger neighbors to the minimum of its closed
+    * neighborhood. small-star: every node links its smaller neighbors
+    * (and itself) to its minimum neighbor. Both preserve connectivity;
+    * alternating them contracts each component to a star — every node
+    * one edge to its component minimum — in logarithmic rounds. State
+    * stays O(|pairs|) through every round: stars CONTRACT edges and
+    * never materialize reachability pairs (closure doubling went
+    * Σ|comp|³ on the sf0.1 chain graph here — for "same component?"
+    * questions always contract, never close).
+    *
+    * The seed and every round's edge frame are localCheckpoint'd: one
+    * round references its input ~6 times, so an uncut LOGICAL plan
+    * would grow ~6× per round and the analyzer — not the data — would
+    * become the bottleneck. Their blocks are reclaimed by the ContextCleaner as
+    * the loop drops references; on a cluster a lost executor fails the
+    * in-flight job (re-run) — the standard localCheckpoint trade (set a
+    * reliable checkpoint dir instead if executors are preemptible).
+    */
+  private[operators] def starComponents(pairs: DataFrame, keys: Seq[String],
+      maxIters: Int = 30): DataFrame = {
+    val k = keys.map(col)
+    var edges = pairs
+      .select(k :+ greatest(col("a"), col("b")).as("a")
+        :+ least(col("a"), col("b")).as("b"): _*)
+      .filter(col("a") =!= col("b")).distinct()
+      .localCheckpoint(true)
 
     def largeStar(e: DataFrame): DataFrame = {
-      val both = e.select(col("a").as("x"), col("b").as("y"))
-        .unionAll(e.select(col("b").as("x"), col("a").as("y")))
-      val mins = both.groupBy(col("x"))
-        .agg(min(col("y")).as("mn"))
-        .select(col("x"), least(col("mn"), col("x")).as("m"))
-      both.join(mins, "x").filter(col("y") > col("x"))
-        .select(col("y").as("a"), col("m").as("b"))
+      val both = e.select(k :+ col("a").as("u") :+ col("b").as("v"): _*)
+        .unionAll(e.select(k :+ col("b").as("u") :+ col("a").as("v"): _*))
+      val mins = both.groupBy(k :+ col("u"): _*)
+        .agg(min(col("v")).as("mn"))
+        .select(k :+ col("u") :+ least(col("mn"), col("u")).as("m"): _*)
+      both.join(mins, keys :+ "u").filter(col("v") > col("u"))
+        .select(k :+ col("v").as("a") :+ col("m").as("b"): _*)
         .filter(col("a") =!= col("b")).distinct()
     }
 
     def smallStar(e: DataFrame): DataFrame = {
       // edges are kept oriented a > b, so grouping by a sees all
       // smaller neighbors; m = min neighbor (< a by orientation)
-      val mins = e.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val linkNeighbors = e.join(mins, "a")
-        .select(col("b").as("n"), col("m"))
-      val linkSelf = mins.select(col("a").as("n"), col("m"))
+      val mins = e.groupBy(k :+ col("a"): _*).agg(min(col("b")).as("m"))
+      val linkNeighbors = e.join(mins, keys :+ "a")
+        .select(k :+ col("b").as("n") :+ col("m"): _*)
+      val linkSelf = mins.select(k :+ col("a").as("n") :+ col("m"): _*)
       linkNeighbors.unionAll(linkSelf)
         .filter(col("n") =!= col("m"))
-        .select(greatest(col("n"), col("m")).as("a"),
-          least(col("n"), col("m")).as("b"))
+        .select(k :+ greatest(col("n"), col("m")).as("a")
+          :+ least(col("n"), col("m")).as("b"): _*)
         .distinct()
     }
 
@@ -661,11 +685,7 @@ object Dedup {
     var iter = 0
     var sig = Option.empty[(Long, String)]
     while (!converged && iter < maxIters) {
-      // localCheckpoint (not persist): one round references its input
-      // frame ~6 times, so the LOGICAL plan would grow ~6× per round and
-      // the analyzer — not the data — becomes the bottleneck after a
-      // handful of iterations. Checkpointing truncates lineage each
-      // round; eager=true materializes it as this round's action.
+      // eager: materializing the checkpoint is this round's action
       val next = smallStar(largeStar(edges)).localCheckpoint(true)
       // fixpoint = identical edge set; (count, Σhash) over the canonical
       // oriented-distinct frame screens for it (decimal sum: overflow-
@@ -678,29 +698,21 @@ object Dedup {
       // unequal sets), so the exact join runs once per call, not per
       // round.
       val row = next.agg(count(lit(1)),
-        sum(hash(col("a"), col("b")).cast("decimal(38,0)"))).head()
+        sum(hash(k :+ col("a") :+ col("b"): _*).cast("decimal(38,0)"))).head()
       val newSig = (row.getLong(0),
         Option(row.get(1)).map(_.toString).getOrElse("0"))
       converged = sig.contains(newSig) && next.exceptAll(edges).isEmpty
-      edges.unpersist()
       edges = next
       sig = Some(newSig)
       iter += 1
     }
     require(converged,
       s"star contraction did not converge in $maxIters rounds")
-    val children = edges.select(col("a").as("doc_id"), col("b").as("cluster_id"))
-    val roots = edges.select(col("b").as("doc_id")).distinct()
-      .join(children.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    val out = children.unionByName(roots)
-      .select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).as("keep"))
-      .orderBy(col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    edges.unpersist()
-    out
+    val children = edges.select(k :+ col("a").as("node") :+ col("b").as("m"): _*)
+    val roots = edges.select(k :+ col("b").as("node"): _*).distinct()
+      .join(children.select(k :+ col("node"): _*), keys :+ "node", "left_anti")
+      .select(k :+ col("node") :+ col("node").as("m"): _*)
+    children.unionByName(roots)
   }
 
   /** q57: dedup clusters over the exact near-dup pairs. The oracle

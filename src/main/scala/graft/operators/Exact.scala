@@ -32,7 +32,6 @@ object Exact {
     * double→decimal paths can disagree by 1 ulp. At or above the true
     * scale, rounding is a no-op in both. */
   def sum6(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")
-  def sql6(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   /** Per-JVM root for query-scratch files (q44 format round-trips), with
     * recursive removal at JVM exit — repeated bench/verify passes write

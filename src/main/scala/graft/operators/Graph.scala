@@ -14,14 +14,10 @@ import org.apache.spark.storage.StorageLevel
   * CACHE CONTRACT (all iterative operators here): each operator
   * persists loop-invariant frames (edges, degrees, seed sets) at
   * MEMORY_AND_DISK so a fixed-round loop shuffles them once, not once
-  * per round. With the default `release = false` the frames STAY
-  * cached after the call — the returned frame is lazy and still
-  * references them; callers that run many queries in one session
-  * (Bench/Verify) release via `spark.catalog.clearCache()`. Pass
-  * `release = true` to get a self-contained frame instead: the result
-  * is eagerly materialized (`localCheckpoint`) and every intermediate
-  * is unpersisted before returning — the long-lived-session mode, at
-  * the cost of one eager job and checkpoint-truncated lineage.
+  * per round. The frames STAY cached after the call — the returned
+  * frame is lazy and still references them — until the caller runs
+  * `spark.catalog.clearCache()`, as Bench and Verify do between
+  * queries.
   */
 object Graph {
 
@@ -42,16 +38,6 @@ object Graph {
     */
   val lastRounds =
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  /** Materialize-and-release helper for the cache contract above. */
-  private def finish(out: DataFrame, release: Boolean,
-      cached: DataFrame*): DataFrame =
-    if (!release) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      cached.foreach(_.unpersist())
-      pinned
-    }
 
   /** Fixed-iteration PageRank over a directed edge list (`src`, `dst`),
     * damping 0.85, ranks kept in parts-per-billion BIGINTs: the initial
@@ -78,7 +64,7 @@ object Graph {
     * leak rank mass, the standard simplification.
     */
   def pageRank(edges0: DataFrame, iterations: Int = 3,
-      release: Boolean = false, edgesDistinct: Boolean = false): DataFrame = {
+      edgesDistinct: Boolean = false): DataFrame = {
     // `edgesDistinct = true` is the caller's certificate (the
     // labelPropagation `normalized` idiom) that the edge frame is
     // already duplicate-free, dropping the defensive full-edge
@@ -134,7 +120,7 @@ object Graph {
           .selectExpr("dst AS node",
             "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
     }
-    finish(rank, release, withDeg)
+    rank
   }
 
   /** q110: 3-iteration PageRank on the symmetrized customer–supplier
@@ -321,8 +307,7 @@ object Graph {
     * a left join against the broadcast-sized teleport frame.
     */
   def personalizedPageRank(edges0: DataFrame, seeds: DataFrame,
-      iterations: Int = 3, release: Boolean = false,
-      edgesDistinct: Boolean = false): DataFrame = {
+      iterations: Int = 3, edgesDistinct: Boolean = false): DataFrame = {
     val edgesRaw = edges0.select(col("src"), col("dst"))
     val edges = if (edgesDistinct) edgesRaw else edgesRaw.distinct()
     // pre-partitioned + sorted on src in cache, so each round's SMJ
@@ -353,7 +338,7 @@ object Graph {
         .selectExpr("dst AS node",
           "CAST(coalesce(tele, CAST(0 AS LONG)) + (85 * s) div 100 AS LONG) AS r")
     }
-    finish(rank, release, withDeg, seedSet)
+    rank
   }
 
   /** q126: proximity to the first ten customers on the trade graph —
@@ -427,8 +412,7 @@ object Graph {
     * once across rounds.
     */
   def labelPropagation(edges0: DataFrame, seeds: DataFrame, nodes: DataFrame,
-      rounds: Int = 2, release: Boolean = false,
-      normalized: Boolean = false): DataFrame = {
+      rounds: Int = 2, normalized: Boolean = false): DataFrame = {
     // normalized inputs (the sibling-operator rule — pageRank, kCore,
     // triangleCounts all distinct their edges): a duplicated edge would
     // double-count its vote and flip majorities; a node seeded twice
@@ -475,7 +459,7 @@ object Graph {
       state = base.join(win, Seq("node"), "left")
         .select(col("node"), coalesce(col("seed_label"), col("prop")).as("label"))
     }
-    finish(state, release, edges, base)
+    state
   }
 
   /** Exact all-pairs cosine similarity edges — the TRUTH-ONLY edge
@@ -549,8 +533,7 @@ object Graph {
     * wire once per pair side, not once per band.
     */
   def cosineEdgesLsh(vectors: DataFrame, threshold: Double, dim: Int = 64,
-      bitsPerBand: Int = 2, seeds: Seq[Long] = Seq(42L, 43L),
-      release: Boolean = false): DataFrame = {
+      bitsPerBand: Int = 2, seeds: Seq[Long] = Seq(42L, 43L)): DataFrame = {
     val nBits = 32
     // unguarded, a too-wide band silently yields ZERO bands — an empty
     // edge set that reads as "no similar pairs" — and 0 divides by zero
@@ -561,7 +544,7 @@ object Graph {
     val mask = (1L << bitsPerBand) - 1
     val vecs = vectors.select(col("vec_id"), col("v"))
       .persist(StorageLevel.MEMORY_AND_DISK) // feeds banding + both
-    // vector re-joins (released per the cache contract / `release`)
+    // vector re-joins (released per the cache contract)
     val withSigs = seeds.zipWithIndex.foldLeft(vecs) { case (acc, (seed, i)) =>
       acc.withColumn(s"sig$i",
         VF.lshSignature(col("v"), dim = dim, nBits = nBits, seed = seed))
@@ -588,9 +571,8 @@ object Graph {
       .join(vecs.select(col("vec_id").as("ib"), col("v").as("vb")), "ib")
       .filter(CosineSimilarity.cosineSim(col("va"), col("vb")) >= threshold)
       .select(col("ia"), col("ib"))
-    val out = pairs.select(col("ia").as("src"), col("ib").as("dst"))
+    pairs.select(col("ia").as("src"), col("ib").as("dst"))
       .unionByName(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-    finish(out, release, vecs, banded)
   }
 
   /** Label spreading over a similarity graph built from an embedding
@@ -603,18 +585,13 @@ object Graph {
     * exact join infeasible. GraphEdgeSpec pins lsh == exact → identical
     * propagation on the catalog corpus; PlanShapeSpec pins that the
     * lsh path plans no nested-loop join.
-    *
-    * `release` governs the PROPAGATION frames only; an edge source that
-    * persists its own intermediates (cosineEdgesLsh) takes its own
-    * release flag — close over it: `edgeSource = cosineEdgesLsh(_, _,
-    * release = true)` — for the fully self-contained contract.
     */
   def labelSpreadBySimilarity(vectors: DataFrame, seeds: DataFrame,
       rounds: Int = 2, threshold: Double = 0.3,
       edgeSource: (DataFrame, Double) => DataFrame = cosineEdgesExact,
-      release: Boolean = false, normalizedInputs: Boolean = false): DataFrame =
+      normalizedInputs: Boolean = false): DataFrame =
     labelPropagation(edgeSource(vectors, threshold), seeds,
-      vectors.select(col("vec_id").as("node")), rounds, release,
+      vectors.select(col("vec_id").as("node")), rounds,
       normalized = normalizedInputs)
 
   /** q127: spread the first-100 embedding labels over the cosine-0.3
@@ -685,8 +662,7 @@ object Graph {
     * coefficient numerator), counting each node's membership in every
     * triangle containing it.
     */
-  def triangleCounts(undirected: DataFrame,
-      release: Boolean = false): DataFrame = {
+  def triangleCounts(undirected: DataFrame): DataFrame = {
     val und = undirected.select(col("src"), col("dst")).distinct()
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     // orientation: keep the edge only in the (lower rank → higher rank)
@@ -713,10 +689,9 @@ object Graph {
       greatest(col("lo"), col("hi")).as("c"))
     val triangles = wedges.join(canon, Seq("b", "c"))
       .select(col("a"), col("b"), col("c"))
-    val counts = triangles
+    triangles
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-    finish(counts, release, ranked)
   }
 
   /** q128: per-node triangle counts on the co-purchase projection —
@@ -830,8 +805,7 @@ object Graph {
     * overlap is mediated by hubs — exactly the pairs co-occurrence
     * similarity already over-counts.
     */
-  def neighborOverlap(undirected: DataFrame, minShared: Long,
-      release: Boolean = false): DataFrame = {
+  def neighborOverlap(undirected: DataFrame, minShared: Long): DataFrame = {
     val und = undirected.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
@@ -842,14 +816,13 @@ object Graph {
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-    val out = inter
+    inter
       .join(deg.select(col("node").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("d").as("db")), "b")
       .select(col("a"), col("b"), col("shared"),
         (col("da") + col("db") - col("shared")).as("unions"),
         round(lit(1000000.0) * col("shared") /
           (col("da") + col("db") - col("shared"))).cast("long").as("jaccard_ppm"))
-    finish(out, release, und)
   }
 
   /** k-core extraction by min-degree peeling: repeatedly delete every
@@ -1120,8 +1093,7 @@ object Graph {
     * Returns (start, step, node): step 0 is the start itself, walks
     * from every node with ≥ 1 edge.
     */
-  def randomWalks(undirected: DataFrame, walkLen: Int, seed: Long,
-      release: Boolean = false): DataFrame = {
+  def randomWalks(undirected: DataFrame, walkLen: Int, seed: Long): DataFrame = {
     require(walkLen >= 1, s"walkLen must be >= 1, got $walkLen")
     val edges = undirected.select(col("src"), col("dst")).distinct()
     val deg = edges.groupBy(col("src").as("node"))
@@ -1135,7 +1107,6 @@ object Graph {
     var walk = deg.select(col("node").as("start"), col("node").as("cur"))
     var out = walk.select(col("start"), lit(0L).as("step"),
       col("cur").as("node"))
-    val steps = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (t <- 1 to walkLen) {
       val pick = pmod(
         conv(substring(md5(concat(lit(s"walk:$seed:"),
@@ -1151,11 +1122,10 @@ object Graph {
         .join(nbr, col("cur") === col("ncur") && col("pick") === col("rn"))
         .select(col("start"), col("dst").as("cur"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      steps += walk
       out = out.unionByName(walk.select(col("start"),
         lit(t.toLong).as("step"), col("cur").as("node")))
     }
-    finish(out, release, (steps :+ deg :+ nbr).toSeq: _*)
+    out
   }
 
   /** q142: length-5 walk corpus over the q129 shared-customer supplier
@@ -1227,7 +1197,7 @@ object Graph {
     * Returns (lm, node, dist), dist ∈ [0, maxDepth].
     */
   def bfsDistances(undirected: DataFrame, landmarks: DataFrame,
-      maxDepth: Int, release: Boolean = false): DataFrame = {
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val edges = undirected.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1245,7 +1215,7 @@ object Graph {
       dist = dist.unionByName(novel)
       frontier = novel.select(col("lm"), col("node"))
     }
-    finish(dist, release, edges)
+    dist
   }
 
   /** q144: hop distances from the three lowest-id vectors over the
@@ -1604,132 +1574,24 @@ object Graph {
     handoffEdges(Tables.events(s, d)).orderBy(col("src"), col("dst"))
   }
 
-  /** Strongly connected components of a directed edge list — the
-    * coloring / forward-backward algorithm (Orzan's coloring; the
-    * FW-BW root certification), expressed as per-node-VALUE fixpoints
-    * (the q137 lesson: never per-level peeling loops):
+  /** Strongly connected components by closure DOUBLING: iterate
+    * R := R ∪ (R ∘ R) from the edge list, reaching the full transitive
+    * closure in ⌈log₂ diameter⌉ rounds where a per-node propagation
+    * loop needs diameter rounds — decisive on high-diameter chain
+    * residues (the handoff graph's singleton chains run ~50 deep at
+    * sf0.1: 5 squaring rounds vs ~50 propagation rounds). SCC then
+    * falls out row-locally: mutual = R ∩ reverse(R), scc_id = min
+    * mutual partner (∪ self), a canonical, engine-independent label.
     *
-    *  1. forward color fixpoint: color(v) := max(v, colors of
-    *     in-neighbors) until stable ⇒ color(v) = the max node id that
-    *     can reach v. Every member of one SCC ends with the SAME color
-    *     (mutual reachability ⇒ identical reacher sets).
-    *  2. roots: nodes with color(v) = v. Backward fixpoint from all
-    *     roots AT ONCE, restricted to each root's color class: u joins
-    *     when an out-edge leads to a claimed node of u's color. Claimed
-    *     u reaches its root r (induction along the backward step) and r
-    *     reaches u (color(u) = r), so the claimed set is EXACTLY the
-    *     root's SCC — never a superset, the property that makes this
-    *     exact rather than the (fwd,bwd)-label-pair heuristic, which
-    *     mislabels sibling nodes pinched between the same two hubs.
-    *  3. claimed SCCs leave the graph; nodes whose every edge vanished
-    *     are singleton SCCs by construction (a ≥2-node SCC keeps its
-    *     internal edges until claimed together). Repeat on the residue;
-    *     every round claims at least the global max id's SCC, so the
-    *     loop terminates.
-    *
-    * scc_id = min member id (engine-independent canonical label).
-    *
-    * Scale shape: every step is an equi-join on node keys + a keyed agg
-    * — no all-pairs, no driver-side graph state; per-round frames are
-    * localCheckpoint'd so lineage stays constant (the q132/q144
-    * discipline), and the loop-invariant edge frame re-checkpoints only
-    * when the residue shrinks. This is the 100 TB shape (state linear
-    * in nodes; bucket the edge list, q80/q133, and the per-round join
-    * side is exchange-free) — but rounds are bounded by diameter ×
-    * root-peeling depth, which on long singleton CHAINS (the handoff
-    * graph's DAG residue) runs to dozens of rounds; the catalog query
-    * therefore uses [[sccByClosure]], the log-round exact path, and
-    * SccSpec pins the two equal.
+    * State is REACHABILITY PAIRS: |R| = Σ_v |reach(v)| ≤ n², quadratic
+    * in the size of each node's reachable set. That fits event/session
+    * digraphs like q156's, whose closure is ~|giant SCC|² + fringe; a
+    * graph where most nodes reach most others pays n² rows per round.
+    * SccSpec pins the result equal to a sequential Tarjan on random
+    * digraphs, planted shapes and the catalog graph.
     *
     * Returns (node, scc_id) for every node with at least one edge (the
     * [[kCore]] convention; isolated nodes carry no rows).
-    */
-  def stronglyConnectedComponents(edges0: DataFrame): DataFrame = {
-    var edges = edges0.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    // empty input = empty result with the output schema, not null (the
-    // sccByClosure convention — the two documented-equivalent paths
-    // must agree on every input)
-    var result: DataFrame = edges
-      .select(col("src").as("node"), col("src").as("scc_id"))
-      .limit(0)
-    var remaining = edges.count()
-    while (remaining > 0) {
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-        .localCheckpoint(true)
-      // 1. forward max-color fixpoint
-      var color = nodes.withColumn("color", col("node")).localCheckpoint(true)
-      var changed = 1L
-      while (changed > 0) {
-        val pushed = edges
-          .join(color.select(col("node").as("src"), col("color").as("c")),
-            Seq("src"))
-          .groupBy(col("dst").as("node")).agg(max(col("c")).as("in_max"))
-        val next = color.withColumnRenamed("color", "prev")
-          .join(pushed, Seq("node"), "left")
-          .select(col("node"), col("prev"),
-            greatest(col("prev"), coalesce(col("in_max"), col("prev")))
-              .as("color"))
-          .localCheckpoint(true)
-        changed = next.filter(col("color") =!= col("prev")).count()
-        color = next.select(col("node"), col("color"))
-      }
-      // 2. backward claim from all roots at once, within color classes
-      var claimed = color.filter(col("color") === col("node"))
-        .select(col("node"), col("color")).localCheckpoint(true)
-      changed = 1L
-      while (changed > 0) {
-        val before = claimed.count()
-        val step = edges
-          .join(claimed.select(col("node").as("dst"), col("color").as("cc")),
-            Seq("dst"))
-          .select(col("src").as("node"), col("cc")).distinct()
-        val cand = step.join(color, Seq("node"))
-          .filter(col("color") === col("cc"))
-          .select(col("node"), col("color"))
-        claimed = claimed.union(cand).distinct().localCheckpoint(true)
-        changed = claimed.count() - before
-      }
-      // scc_id = min member id within each claimed color class
-      val ids = claimed.groupBy(col("color")).agg(min(col("node")).as("scc_id"))
-      val assigned = claimed.join(ids, Seq("color"))
-        .select(col("node"), col("scc_id")).localCheckpoint(true)
-      result = result.union(assigned)
-      // 3. drop claimed nodes; edge-stripped leftovers are singletons
-      val done = assigned.select(col("node"))
-      edges = edges
-        .join(done.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
-        .join(done.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
-        .localCheckpoint(true)
-      remaining = edges.count()
-      val still = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-      val orphans = nodes.join(done, Seq("node"), "left_anti")
-        .join(still, Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("scc_id")).localCheckpoint(true)
-      result = result.union(orphans)
-    }
-    result
-  }
-
-  /** SCC by closure DOUBLING — the fast exact path for graphs whose
-    * reachability closure is bounded (event/session digraphs like
-    * q156's, whose closure is ~|giant SCC|² + fringe): iterate
-    * R := R ∪ (R ∘ R) from the edge list, reaching the full transitive
-    * closure in ⌈log₂ diameter⌉ rounds instead of the coloring loop's
-    * diameter rounds — the difference is decisive on high-diameter
-    * chain residues (the handoff graph's singleton chains run ~50 deep
-    * at sf0.1: 5 squaring rounds vs ~50 propagation rounds). SCC then
-    * falls out row-locally: mutual = R ∩ reverse(R), scc_id = min
-    * mutual partner (∪ self).
-    *
-    * The trade is explicit: state is REACHABILITY PAIRS, quadratic in
-    * component size in the worst case — on an adversarial
-    * dense-reachability graph at 100 TB use
-    * [[stronglyConnectedComponents]] (node-keyed state, linear) and pay
-    * diameter rounds; SccSpec pins the two equal on random digraphs,
-    * planted shapes, and the catalog graph.
     */
   def sccByClosure(edges0: DataFrame): DataFrame =
     closureFrames(edges0)._3
@@ -2137,8 +1999,9 @@ object Graph {
     *
     * All |cand| removal subproblems run JOINTLY in one dataflow: the
     * seed is the edge list replicated per avoiding candidate
-    * (|cand|·|E| rows) and components close via [[keyedStars]] — the
-    * large-star/small-star contraction keyed by the excluded node, so
+    * (|cand|·|E| rows) and components close via
+    * [[Dedup.starComponents]] — the large-star/small-star contraction
+    * keyed by the excluded node, so
     * state never exceeds the seed and rounds are O(log n). (The first
     * cut used closure DOUBLING here; on the sf0.1 chain graph that is
     * Σ|comp|³-shaped — billions of intermediate rows — because "same
@@ -2187,86 +2050,15 @@ object Graph {
     case None => exclusionLabelsBuild(undirected0)
   }
 
-  /** Keyed large-star/small-star contraction: connected components of
-    * MANY edge sets at once — `pairs` carries (x, a, b) rows meaning
-    * "edge {a, b} belongs to subproblem x", and every star round is the
-    * q57 algorithm (Dedup.dedupClustersStars) with the subproblem key
-    * joined into each groupBy/join. Returns (x, node, m): the canonical
-    * (min-member) component label of every node that carries an edge in
-    * subproblem x. State stays O(|pairs|) through every round — stars
-    * CONTRACT edges, they never materialize reachability pairs — and
-    * rounds are O(log n); this is what replaced the closure-doubling
-    * kernel here after it went Σ|comp|³ on the sf0.1 chain graph (2.4B
-    * intermediate rows per round; the round-6 lesson: doubling is for
-    * DISTANCE-like state you must enumerate (q157 reach, q194 costs) —
-    * for "same component?" questions always contract, never close).
-    */
-  private def keyedStars(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    var edges = pairs
-      .select(col("x"), greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val both = e.select(col("x"), col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("x"), col("b").as("u"), col("a").as("v")))
-      val mins = both.groupBy(col("x"), col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("x"), col("u"), least(col("mn"), col("u")).as("m"))
-      both.join(mins, Seq("x", "u")).filter(col("v") > col("u"))
-        .select(col("x"), col("v").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy(col("x"), col("a")).agg(min(col("b")).as("m"))
-      val linkNeighbors = e.join(mins, Seq("x", "a"))
-        .select(col("x"), col("b").as("n"), col("m"))
-      val linkSelf = mins.select(col("x"), col("a").as("n"), col("m"))
-      linkNeighbors.unionAll(linkSelf)
-        .filter(col("n") =!= col("m"))
-        .select(col("x"), greatest(col("n"), col("m")).as("a"),
-          least(col("n"), col("m")).as("b"))
-        .distinct()
-    }
-
-    var converged = false
-    var iter = 0
-    var sig = Option.empty[(Long, String)]
-    while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      // (count, Σhash) screens for the fixpoint; a match is CONFIRMED
-      // by one exact set check (canonical distinct frames with equal
-      // counts: empty difference ⟺ equal sets) so a 32-bit hash-sum
-      // collision cannot end the contraction on a non-star — the
-      // dedupClustersStars convergence rule
-      val row = next.agg(count(lit(1)),
-        sum(hash(col("x"), col("a"), col("b")).cast("decimal(38,0)"))).head()
-      val newSig = (row.getLong(0),
-        Option(row.get(1)).map(_.toString).getOrElse("0"))
-      converged = sig.contains(newSig) && next.exceptAll(edges).isEmpty
-      edges = next
-      sig = Some(newSig)
-      iter += 1
-    }
-    require(converged,
-      s"keyed star contraction did not converge in $maxIters rounds")
-    val children = edges.select(col("x"), col("a").as("node"), col("b").as("m"))
-    val roots = edges.select(col("x"), col("b").as("node")).distinct()
-      .join(children.select(col("x"), col("node")), Seq("x", "node"), "left_anti")
-      .select(col("x"), col("node"), col("node").as("m"))
-    children.unionByName(roots)
-  }
-
   /** The shared kernel: for every candidate x (≥2 distinct neighbors)
     * and every neighbor p of x, the canonical label (min member) of
     * p's connected component within N(x) under G∖{x} — the frame both
     * the articulation profile (distinct labels per x) and bridge
     * detection (singleton label classes) read out. All |cand| removal
     * subproblems run jointly: the seed is the |cand|·|E| broadcast
-    * product of edges avoiding each x, closed by [[keyedStars]] in
-    * O(log n) rounds with state never exceeding the seed size; labels
+    * product of edges avoiding each x, closed by the x-keyed
+    * [[Dedup.starComponents]] in O(log n) rounds with state never
+    * exceeding the seed size; labels
     * then canonicalize per (x, component) as the min NEIGHBOR of x in
     * that component (neighbors isolated in G∖{x} label themselves).
     */
@@ -2289,7 +2081,7 @@ object Graph {
     val pairs = und.crossJoin(broadcast(cand))
       .filter(col("src") =!= col("x") && col("dst") =!= col("x"))
       .select(col("x"), col("src").as("a"), col("dst").as("b"))
-    val comps = keyedStars(pairs)
+    val comps = Dedup.starComponents(pairs, Seq("x"))
     val withComp = nb.select(col("x"), col("n").as("p"))
       .join(comps.select(col("x"), col("node").as("p"), col("m")),
         Seq("x", "p"), "left")
@@ -2503,9 +2295,9 @@ object Graph {
     * minimum and the block partition is the connected components of
     * those links over EDGE nodes (blocks are edge-connected through
     * shared endpoints, so endpoint-local classes generate the full
-    * partition). CC runs through the q57 large-star/small-star
-    * contraction — O(log blocks) keyed rounds, node-keyed state, the
-    * 100 TB shape.
+    * partition). CC runs through [[Dedup.dedupClustersStars]], the
+    * large-star/small-star contraction — O(log blocks) rounds,
+    * node-keyed state, the 100 TB shape.
     *
     * Edge ids ride a long encoding lo·k + hi (k = max node id + 1,
     * guarded against overflow) so the stars loop shuffles fixed-width
@@ -2843,27 +2635,36 @@ object Graph {
     modularityProfile(und, assign).orderBy(col("comp_id"))
   }
 
-  /** Exact betweenness centrality (Brandes) over an undirected edge
-    * list, all sources processed JOINTLY as one dataflow — no
-    * per-source driver loop:
+  /** Exact betweenness centrality (Brandes 2001) over an undirected
+    * edge list on a ppm integer grid, all sources processed JOINTLY as
+    * one dataflow — no per-source driver loop:
     *
     *  - forward: a multi-source BFS keyed by (root, node) builds the
     *    shortest-path DAG layer by layer, accumulating σ (the exact
-    *    shortest-path COUNT, an integer sum over predecessor σ);
+    *    integer shortest-path COUNT, a sum over predecessor σ);
     *  - backward: layers are swept deepest-first, each round one
-    *    equi-join pushing w's (1+δ_w)·σ_v/σ_w to its DAG predecessors
-    *    v and one keyed sum;
-    *  - betweenness(v) = Σ_roots δ(root, v) / 2 (each unordered pair
-    *    counted from both endpoints), snapped to ppm for a
-    *    deterministic surface.
+    *    equi-join pushing w's dependency to its DAG predecessors v and
+    *    one keyed sum. δ' carries ppm units and every pushed term is
+    *    integer-divided BEFORE the sum — t = (σ_v · (10^6 + δ'_w)) div
+    *    σ_w — so each round is a sum of exact integers (order-free) and
+    *    the whole sweep is ORACLE-REPLAYABLE, the same per-step-floor
+    *    idiom as q110's integer PageRank;
+    *  - bc_ppm(v) = (Σ_roots δ'(v)) div 2 (each unordered pair counted
+    *    from both endpoints).
+    *
+    * Truncation drops < 1 ppm per term and σ_v/σ_w ≤ 1 on DAG edges, so
+    * the drift from the real-valued Brandes score is bounded by the DAG
+    * edge count per root in ppm units; closed-form graphs (paths,
+    * stars) where δ is integral are EXACT. BetweennessSpec pins the
+    * result equal to a sequential reference with the same per-term
+    * floor, and within that drift bound of float Brandes.
     *
     * Rounds = 2·diameter; state = (root, node) pairs — the exact
-    * all-sources baseline, quadratic by definition (this is q32's
-    * ground-truth role, not the scale path). At scale the SAME dataflow
-    * runs with `rootFilter` sampling the source set (the standard
-    * Brandes-subset estimator: E[n/k · Σ_sampled δ] is unbiased), state
-    * k·n; BetweennessSpec pins the sampled run to exactly the
-    * root-restricted sums of the sequential reference.
+    * all-sources baseline, quadratic by definition. At scale the SAME
+    * dataflow runs with `rootFilter` sampling the source set (the
+    * standard Brandes-subset estimator: E[n/k · Σ_sampled δ] is
+    * unbiased), state k·n; BetweennessSpec pins the sampled run to the
+    * root-restricted sums of the reference (q222's pivots).
     *
     * `bipartite` is a CALLER CERTIFICATE (the edgesDistinct idiom):
     * the graph has no same-side edges — so no odd cycles, so BFS layer
@@ -2878,109 +2679,6 @@ object Graph {
     * every edge crosses), verified for the operator by
     * BetweennessSpec's bipartite-equivalence pin.
     */
-  def betweennessExact(undirected0: DataFrame,
-      rootFilter: Option[org.apache.spark.sql.Column] = None,
-      bipartite: Boolean = false): DataFrame = {
-    val und = undirected0.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    val nodes = und.select(col("src").as("node")).distinct()
-    val roots = rootFilter.fold(nodes)(f => nodes.filter(f))
-    // forward BFS: layer frames (root, node, d, sigma) kept for the
-    // backward sweep, each checkpointed (constant lineage per round).
-    // r16 (guide §2.3/§2.4): the old visited set was the lazy union of
-    // ALL layers, re-exchanged in full by every round's anti-join. A
-    // BFS frontier's neighbors can only land in layers d−1, d, d+1
-    // (per root: a layer-j node adjacent to a layer-d node with
-    // j ≤ d−2 would have pulled it into layer j+1 < d), so anti-joins
-    // against the LAST TWO layers are exactly equivalent — the
-    // early layers never need to touch the wire again. σ is summed
-    // BEFORE the anti-joins (anti-join drops whole (root, node) keys,
-    // so filter∘agg = agg∘filter): the push exchange gets map-side
-    // combine, and the agg output is hash-partitioned on (root, node)
-    // — the same partitioning the checkpointed layers carry — so both
-    // anti-joins plan exchange-free. One exchange per round total.
-    var layer = roots.select(col("node").as("root"), col("node"),
-        lit(0).as("d"), lit(1L).as("sigma"))
-      .repartition(col("root"), col("node"))
-      .localCheckpoint(true)
-    var prevLayer = Option.empty[DataFrame]
-    val layers = scala.collection.mutable.ArrayBuffer(layer)
-    var depth = 0
-    var frontierDone = false
-    while (!frontierDone) {
-      depth += 1
-      val push = layer.join(und, layer("node") === und("src"))
-        .select(col("root"), col("dst").as("node"), col("sigma"))
-      val agged = push.groupBy(col("root"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-      val afterPrev = prevLayer.fold(agged)(p => agged
-          .join(p.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-      // bipartite certificate: the same-layer anti is a provable no-op
-      // (layer parity = side parity), so it is skipped — see the doc
-      val next = (if (bipartite) afterPrev
-        else afterPrev
-          .join(layer.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-        .withColumn("d", lit(depth))
-        .select(col("root"), col("node"), col("d"), col("sigma"))
-        // lazy: isEmpty materializes what it needs now, later rounds
-        // fill the remaining partitions on first read — one job per
-        // round instead of checkpoint + isEmpty (r16)
-        .localCheckpoint(false)
-      frontierDone = next.isEmpty
-      if (!frontierDone) layers += next
-      prevLayer = Some(layer)
-      layer = next
-    }
-    // backward sweep, deepest layer first; delta(deepest) = 0.
-    // r16 round 2: σ rides the delta frame (no per-round re-join of
-    // layers(l+1) to fetch it) and the "nodes with no DAG successors
-    // keep delta 0" left join is FUSED with the contribution sum —
-    // layers(l) LEFT JOIN pushed-contribs, then the keyed agg
-    // (unmatched keys aggregate the single null term to null → 0):
-    // one join and one layer-sized exchange fewer per round, same
-    // groups, same per-group term multiset.
-    var delta = layers.last.select(col("root"), col("node"), col("sigma"),
-        lit(0.0).as("delta"))
-      .localCheckpoint(true)
-    val perLayerDeltas = scala.collection.mutable.ArrayBuffer(delta)
-    for (l <- (layers.size - 2) to 0 by -1) {
-      val pushed = delta.join(und, delta("node") === und("src"))
-        .select(col("root"), col("dst").as("node"),
-          col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      delta = layers(l).select(col("root"), col("node"), col("sigma"))
-        .join(pushed, Seq("root", "node"), "left")
-        .groupBy(col("root"), col("node"), col("sigma"))
-        .agg(coalesce(sum(col("sigma").cast("double") / col("sigma_w")
-          * (lit(1.0) + col("delta_w"))), lit(0.0)).as("delta"))
-      .localCheckpoint(true)
-      perLayerDeltas += delta
-    }
-    val all = perLayerDeltas.reduce(_ union _)
-    nodes.join(
-        all.filter(col("node") =!= col("root"))
-          .groupBy(col("node"))
-          .agg((sum(col("delta")) / 2.0).as("bc")),
-        Seq("node"), "left")
-      .select(col("node"),
-        round(coalesce(col("bc"), lit(0.0)) * 1e6).cast("long").as("bc_ppm"))
-  }
-
-  /** Integer-grid Brandes — [[betweennessExact]] with the dependency
-    * accumulation moved onto a ppm integer grid so the whole sweep is
-    * ORACLE-REPLAYABLE: δ' carries ppm units and every pushed term is
-    * integer-divided BEFORE the sum — t = (σ_v · (10^6 + δ'_w)) div σ_w
-    * — so each round is a sum of exact integers (order-free), the same
-    * per-step-floor idiom as q110's integer PageRank. σ stays the exact
-    * integer shortest-path count. Truncation drops < 1 ppm per term and
-    * σ_v/σ_w ≤ 1 on DAG edges, so the drift is bounded by the DAG edge
-    * count per root in ppm units (BetweennessSpec pins grid vs float);
-    * closed-form graphs (paths, stars) where δ is integral are EXACT.
-    * bc_ppm(v) = (Σ_roots δ'(v)) div 2. Same dataflow, rounds and state
-    * bounds as the float form; `rootFilter` gives the sampled-pivot
-    * scale path.
-    */
   def betweennessGridPpm(undirected0: DataFrame,
       rootFilter: Option[org.apache.spark.sql.Column] = None,
       bipartite: Boolean = false): DataFrame = {
@@ -2988,12 +2686,17 @@ object Graph {
       .localCheckpoint(true)
     val nodes = und.select(col("src").as("node")).distinct()
     val roots = rootFilter.fold(nodes)(f => nodes.filter(f))
-    // same forward-BFS discipline as [[betweennessExact]] (r16): σ
-    // aggregated before the anti-joins (map-side combine on the push
-    // exchange), visited checks against the last TWO layers only
-    // (provably equivalent — BFS neighbors land in layers d−1..d+1),
-    // so the per-round wire cost is the combined push plus at most
-    // one layer-sized anti side, never the whole visited union.
+    // forward BFS: layer frames (root, node, d, sigma) kept for the
+    // backward sweep. r16 (guide §2.3/§2.4): a BFS frontier's neighbors
+    // can only land in layers d−1, d, d+1 (per root: a layer-j node
+    // adjacent to a layer-d node with j ≤ d−2 would have pulled it into
+    // layer j+1 < d), so anti-joins against the LAST TWO layers are
+    // exactly equivalent to one against the whole visited union. σ is
+    // summed BEFORE the anti-joins (anti-join drops whole (root, node)
+    // keys, so filter∘agg = agg∘filter): the push exchange gets
+    // map-side combine, and the agg output is hash-partitioned on
+    // (root, node) — the partitioning the checkpointed layers carry —
+    // so both anti-joins plan exchange-free. One exchange per round.
     var layer = roots.select(col("node").as("root"), col("node"),
         lit(0).as("d"), lit(1L).as("sigma"))
       .repartition(col("root"), col("node"))
@@ -3012,8 +2715,8 @@ object Graph {
           .join(p.select(col("root"), col("node")), Seq("root", "node"),
             "left_anti"))
       // bipartite caller certificate: the same-layer anti is a provable
-      // no-op (layer parity = side parity — see betweennessExact), so
-      // skipping it removes a layer-sized exchange + SMJ per round
+      // no-op (layer parity = side parity — see the doc), so skipping
+      // it removes a layer-sized exchange + SMJ per round
       val nextPlan = (if (bipartite) afterPrev
         else afterPrev
           .join(layer.select(col("root"), col("node")), Seq("root", "node"),

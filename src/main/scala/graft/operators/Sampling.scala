@@ -77,27 +77,6 @@ object Sampling {
       .orderBy(col("bucket"))
   }
 
-  /** Per-group EXACT quantiles of an expression — the cutoff-derivation
-    * pass behind every length/quality filter ("drop below p05 / above
-    * p95 per language"). Spark's `percentile` is the exact sort-based
-    * aggregate (not the approximate sketch q46 uses): one shuffle on the
-    * group key, per-group sort of the value multiset. At 100 TB exact
-    * per-group quantiles are fine when groups are few (languages,
-    * sources) — the per-group value lists are what sort, and those
-    * partition across the cluster; use q46's approx sketch when the
-    * GROUP count explodes. Interpolated values are rounded to 6 dp
-    * (cross-engine interpolation ulp — same class as q45's moment
-    * stats).
-    */
-  def groupQuantiles(df: org.apache.spark.sql.DataFrame, group: String,
-      value: org.apache.spark.sql.Column,
-      ps: Seq[Double]): org.apache.spark.sql.DataFrame = {
-    val aggs = ps.map(p => round(percentile(value, lit(p)), 6)
-      .as(s"p${(p * 100).round.toInt}"))
-    df.groupBy(col(group))
-      .agg(count(lit(1)).as("n"), aggs: _*)
-  }
-
   /** q67: per-language token-length quantiles (p05/p50/p95) + range. */
   val q67: QueryDef = QueryDef.checked(
     "q67_group_quantiles",

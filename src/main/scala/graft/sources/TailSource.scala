@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -139,8 +139,6 @@ private[sources] class TailScan(options: CaseInsensitiveStringMap) extends Scan 
       maxBytesPerFilePerBatch = options.getOrDefault(
         "maxBytesPerFilePerBatch", (128L * 1024 * 1024).toString).toLong,
       maxFilesPerTrigger = options.getOrDefault("maxFilesPerTrigger", "0").toInt,
-      maxBytesPerTrigger = options.getOrDefault("maxBytesPerTrigger", "0").toLong,
-      listIntervalMs = options.getOrDefault("listIntervalMs", "0").toLong,
       dropAbsentAfterTriggers =
         options.getOrDefault("dropAbsentAfterTriggers", "10").toInt,
       emitEofPartial =
@@ -211,20 +209,20 @@ object TailOffset {
   * Limits, all optional:
   *  - `maxBytesPerFilePerBatch` (default 128 MiB, max 1 GiB): one file's
   *    burst is spread over several micro-batches;
-  *  - `maxFilesPerTrigger` / `maxBytesPerTrigger`: bound total per-batch
-  *    admission (surfaced to the engine via `getDefaultReadLimit`). A
-  *    round-robin cursor over path order prevents lexicographically-late
-  *    files from starving while early files keep growing;
-  *  - `listIntervalMs`: cache the recursive discovery walk between
-  *    triggers (the reference rescans dirs every 60 s, main.go:286 — not
-  *    every poll). Known files are still `stat`ed fresh each trigger so
-  *    growth is seen immediately; an empty cached listing always
-  *    re-lists, keeping `--retry` root-appearance prompt.
+  *  - `maxFilesPerTrigger`: bounds the files one batch admits
+  *    (surfaced to the engine via `getDefaultReadLimit`), so one trigger
+  *    reads at most maxFilesPerTrigger × maxBytesPerFilePerBatch bytes.
+  *    A round-robin cursor over path order prevents
+  *    lexicographically-late files from starving while early files keep
+  *    growing.
+  *
+  * Discovery re-walks the directory and `stat`s every file on each
+  * trigger (the reference rescans dirs every 60 s, main.go:286), so new
+  * files and growth are seen on the next trigger.
   */
 private[sources] class TailMicroBatchStream(
     root: String, glob: String, maxBytesPerFilePerBatch: Long,
-    maxFilesPerTrigger: Int, maxBytesPerTrigger: Long, listIntervalMs: Long,
-    dropAbsentAfterTriggers: Int = 10, emitEofPartial: Boolean = false)
+    maxFilesPerTrigger: Int, dropAbsentAfterTriggers: Int = 10, emitEofPartial: Boolean = false)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   require(maxBytesPerFilePerBatch > 0 &&
@@ -237,9 +235,6 @@ private[sources] class TailMicroBatchStream(
       " its FIRST absent trigger, re-reading it from byte 0 (duplicates)" +
       " after any transient listing hiccup")
 
-  // Discovery cache (driver-side; one stream instance per query run).
-  private var cachedListing: Seq[String] = Nil
-  private var lastListNanos: Long = Long.MinValue
   // Round-robin admission cursor: first path NOT admitted last batch.
   private var rrCursor: String = ""
   // Consecutive triggers each committed-but-vanished path has been
@@ -255,22 +250,11 @@ private[sources] class TailMicroBatchStream(
   // reappearing file would then be fully re-read → duplicates).
   private var lastStartJson: String = null
 
-  private def listing(): Seq[String] = {
-    val now = System.nanoTime()
-    val stale = lastListNanos == Long.MinValue ||
-      (now - lastListNanos) / 1000000L >= listIntervalMs
-    if (stale || cachedListing.isEmpty) {
-      cachedListing = TailSource.listFiles(root, glob).map(_.toString)
-      lastListNanos = now
-    }
-    cachedListing
-  }
-
-  /** Fresh sizes for the (possibly cached) listing; vanished files drop
-    * out of the stat map but keep their committed offset (see below).
+  /** Fresh listing and sizes; vanished files drop out of the stat map
+    * but keep their committed offset (see below).
     */
   private def statSizes(): Seq[(String, Long)] =
-    listing().flatMap { p =>
+    TailSource.listFiles(root, glob).map(_.toString).flatMap { p =>
       val path = Paths.get(p)
       try { if (Files.exists(path)) Some(p -> Files.size(path)) else None }
       catch { case _: java.io.IOException => None }
@@ -278,16 +262,9 @@ private[sources] class TailMicroBatchStream(
 
   override def initialOffset(): Offset = TailOffset(Map.empty)
 
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = mutable.ArrayBuffer[ReadLimit]()
-    if (maxFilesPerTrigger > 0) limits += ReadLimit.maxFiles(maxFilesPerTrigger)
-    if (maxBytesPerTrigger > 0) limits += ReadLimit.maxBytes(maxBytesPerTrigger)
-    limits.size match {
-      case 0 => ReadLimit.allAvailable()
-      case 1 => limits.head
-      case _ => ReadLimit.compositeLimit(limits.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    if (maxFilesPerTrigger > 0) ReadLimit.maxFiles(maxFilesPerTrigger)
+    else ReadLimit.allAvailable()
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
@@ -299,15 +276,10 @@ private[sources] class TailMicroBatchStream(
     val startAdvanced = lastStartJson == null || startJson != lastStartJson
     lastStartJson = startJson
 
-    var fileLimit = Int.MaxValue
-    var byteLimit = Long.MaxValue
-    def absorb(l: ReadLimit): Unit = l match {
-      case f: ReadMaxFiles => fileLimit = math.min(fileLimit, f.maxFiles())
-      case b: ReadMaxBytes => byteLimit = math.min(byteLimit, b.maxBytes())
-      case c: CompositeReadLimit => c.getReadLimits.foreach(absorb)
-      case _ => () // ReadAllAvailable / row-based limits: no byte/file cap
+    val fileLimit = limit match {
+      case f: ReadMaxFiles => f.maxFiles()
+      case _ => Int.MaxValue // ReadAllAvailable / row-based limits: no cap
     }
-    absorb(limit)
 
     // Rotate path order so admission starts after last batch's cursor —
     // under sustained over-limit load every file still makes progress.
@@ -316,14 +288,13 @@ private[sources] class TailMicroBatchStream(
     val ordered = tail0 ++ head0
 
     var filesUsed = 0
-    var bytesUsed = 0L
     var lastAdmitted: String = rrCursor
     val out = mutable.Map[String, Long]()
     ordered.foreach { case (path, size) =>
       val c = committed.getOrElse(path, 0L)
       val base = if (size < c) 0L else c // truncation → restart at 0
       val avail = size - base
-      val admitted = avail > 0 && filesUsed < fileLimit && bytesUsed < byteLimit
+      val admitted = avail > 0 && filesUsed < fileLimit
       val newEnd =
         if (!admitted) c // carry the committed offset UNCHANGED: reporting
         // min(size, c) for a truncated-but-unadmitted file would trip the
@@ -332,9 +303,8 @@ private[sources] class TailMicroBatchStream(
         // truncation restart must wait until the file is admitted, where
         // the per-file budget caps it
         else {
-          val budget = math.min(maxBytesPerFilePerBatch, byteLimit - bytesUsed)
-          val e = math.min(size, base + budget)
-          if (e > base) { filesUsed += 1; bytesUsed += e - base; lastAdmitted = path }
+          val e = math.min(size, base + maxBytesPerFilePerBatch)
+          if (e > base) { filesUsed += 1; lastAdmitted = path }
           e
         }
       out(path) = newEnd

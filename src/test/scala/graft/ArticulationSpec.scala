@@ -7,7 +7,9 @@ import graft.operators.Graph
 /** Pins [[Graph.articulationProfile]] (the jointly-keyed exclusion
   * closure) to a brute-force remove-and-BFS reference — exact equality
   * on both the cut-vertex flag AND the split count — on planted shapes
-  * with known answers and random graphs across densities.
+  * with known answers and random graphs across densities; likewise the
+  * index's read-outs: bridges, 2-edge-connected components and
+  * biconnected blocks.
   */
 class ArticulationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -180,6 +182,67 @@ class ArticulationSpec extends AnyFunSuite {
         if rnd.nextDouble() < p
       } yield (a.toLong, b.toLong)
       assert(runBridges(edges) == bruteBridges(edges), s"random p=$p")
+    }
+  }
+
+  /** 2-edge-connected reference: drop every remove-and-BFS bridge, BFS
+    * components of the residue over all nodes, comp_id = min member.
+    */
+  private def brute2ec(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val bridges = bruteBridges(edges)
+    val canon = edges.map(e => (math.min(e._1, e._2), math.max(e._1, e._2)))
+      .distinct
+    val kept = canon.filterNot(bridges)
+    val adj = (kept ++ kept.map(_.swap)).groupBy(_._1)
+      .map { case (k, v) => k -> v.map(_._2) }
+    val nodes = canon.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val comp = scala.collection.mutable.Map[Long, Long]()
+    for (start <- nodes if !comp.contains(start)) {
+      // ascending start order: the first node of a component is its min
+      comp(start) = start
+      val queue = scala.collection.mutable.Queue(start)
+      while (queue.nonEmpty) {
+        val v = queue.dequeue()
+        for (w <- adj.getOrElse(v, Seq.empty) if !comp.contains(w)) {
+          comp(w) = start
+          queue += w
+        }
+      }
+    }
+    comp.toMap
+  }
+
+  private def run2ec(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val s = spark
+    import s.implicits._
+    val sym = (edges ++ edges.map(_.swap)).distinct
+    Graph.twoEdgeComponents(sym.toDF("src", "dst")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("two-edge components: planted shapes (barbell, bridge-only node, cycle, path)") {
+    // two triangles joined by the bridge 3–4, plus node 7 hanging off 6
+    // by a bridge: the triangles are the two components, 7 a singleton
+    val barbell = Seq((1L, 2L), (2L, 3L), (3L, 1L),
+      (4L, 5L), (5L, 6L), (6L, 4L), (3L, 4L), (6L, 7L))
+    assert(run2ec(barbell) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))
+    val cycle = (1L to 5L).sliding(2).map(p => (p(0), p(1))).toSeq :+ (5L, 1L)
+    assert(run2ec(cycle) == (1L to 5L).map(_ -> 1L).toMap)
+    // every path edge is a bridge: every node is its own component
+    val path = (1L to 5L).sliding(2).map(p => (p(0), p(1))).toSeq
+    assert(run2ec(path) == (1L to 5L).map(v => v -> v).toMap)
+  }
+
+  test("two-edge components: random graphs match the bridge-removal reference") {
+    for ((p, seed) <- Seq((0.08, 61L), (0.12, 62L), (0.25, 63L))) {
+      val rnd = new scala.util.Random(seed)
+      val n = 20
+      val edges = for {
+        a <- 1 to n; b <- (a + 1) to n
+        if rnd.nextDouble() < p
+      } yield (a.toLong, b.toLong)
+      assert(run2ec(edges) == brute2ec(edges), s"random p=$p")
     }
   }
 

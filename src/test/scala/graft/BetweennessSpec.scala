@@ -5,25 +5,27 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Graph
 import org.apache.spark.sql.functions.col
 
-/** Pins [[Graph.betweennessExact]] (the joint all-sources BFS + layered
-  * backward sweep) to a sequential Brandes reference — equality at ppm
-  * resolution (±1 ppm for float-summation order) — on planted shapes
-  * with closed-form centralities, random graphs across densities, and
-  * the sampled-roots estimator against root-restricted reference sums.
+/** Pins [[Graph.betweennessGridPpm]] (the joint all-sources BFS +
+  * layered backward sweep on the ppm grid) EXACTLY equal to a
+  * sequential Brandes with the same per-term floor — integer sums do
+  * not depend on order — on planted shapes with closed-form
+  * centralities, random graphs across densities, bipartite graphs under
+  * the certificate, and the sampled-roots estimator against
+  * root-restricted reference sums. Float Brandes bounds the grid's
+  * drift from the real-valued score.
   */
 class BetweennessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Sequential Brandes (2001), undirected; returns Σδ/2 per node,
-    * restricted to `roots` (all nodes when None).
+  /** Sequential real-valued Brandes (2001), undirected; returns Σδ/2
+    * per node — the score the grid approximates.
     */
-  private def brandes(edges: Seq[(Long, Long)],
-      roots: Option[Set[Long]] = None): Map[Long, Double] = {
+  private def brandes(edges: Seq[(Long, Long)]): Map[Long, Double] = {
     val sym = (edges ++ edges.map(_.swap)).distinct
     val adj = sym.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nodes = sym.map(_._1).distinct.sorted
     val bc = scala.collection.mutable.Map(nodes.map(_ -> 0.0): _*)
-    for (s <- nodes if roots.forall(_.contains(s))) {
+    for (s <- nodes) {
       val stack = scala.collection.mutable.ArrayBuffer[Long]()
       val pred = scala.collection.mutable.Map[Long, List[Long]]()
         .withDefaultValue(Nil)
@@ -55,26 +57,50 @@ class BetweennessSpec extends AnyFunSuite {
     bc.map { case (k, v) => k -> v / 2.0 }.toMap
   }
 
+  /** Sequential Brandes on the operator's ppm grid: each pushed term is
+    * floored before the sum, δ'_v += (σ_v·(10⁶+δ'_w)) div σ_w, and
+    * bc_ppm = (Σ δ') div 2 — restricted to `roots` (all when None).
+    */
+  private def gridBrandes(edges: Seq[(Long, Long)],
+      roots: Option[Set[Long]] = None): Map[Long, Long] = {
+    val sym = (edges ++ edges.map(_.swap)).distinct
+    val adj = sym.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val nodes = sym.map(_._1).distinct.sorted
+    val bc = scala.collection.mutable.Map(nodes.map(_ -> 0L): _*)
+    for (s <- nodes if roots.forall(_.contains(s))) {
+      val order = scala.collection.mutable.ArrayBuffer(s)
+      val sigma = scala.collection.mutable.Map(s -> 1L).withDefaultValue(0L)
+      val dist = scala.collection.mutable.Map(s -> 0L)
+      var i = 0
+      while (i < order.size) {
+        val v = order(i); i += 1
+        for (w <- adj(v)) {
+          if (!dist.contains(w)) { dist(w) = dist(v) + 1; order += w }
+          if (dist(w) == dist(v) + 1) sigma(w) += sigma(v)
+        }
+      }
+      val delta = scala.collection.mutable.Map[Long, Long]()
+        .withDefaultValue(0L)
+      for (w <- order.reverseIterator; v <- adj(w)
+          if dist(v) == dist(w) - 1)
+        delta(v) += (sigma(v) * (1000000L + delta(w))) / sigma(w)
+      for (v <- order if v != s) bc(v) += delta(v)
+    }
+    bc.map { case (k, v) => k -> v / 2 }.toMap
+  }
+
   private def run(edges: Seq[(Long, Long)],
-      rootFilter: Option[org.apache.spark.sql.Column] = None)
-      : Map[Long, Long] = {
+      rootFilter: Option[org.apache.spark.sql.Column] = None,
+      bipartite: Boolean = false): Map[Long, Long] = {
     val s = spark
     import s.implicits._
     val sym = (edges ++ edges.map(_.swap)).distinct
-    Graph.betweennessExact(sym.toDF("src", "dst"), rootFilter).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Graph.betweennessGridPpm(sym.toDF("src", "dst"), rootFilter, bipartite)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
-  private def check(edges: Seq[(Long, Long)], tag: String): Unit = {
-    val expected = brandes(edges)
-    val got = run(edges)
-    assert(got.keySet == expected.keySet, s"$tag: node sets differ")
-    for ((v, bc) <- expected) {
-      val expPpm = math.round(bc * 1e6)
-      assert(math.abs(got(v) - expPpm) <= 1L,
-        s"$tag: bc($v) = ${got(v)} ppm, expected $expPpm ppm")
-    }
-  }
+  private def check(edges: Seq[(Long, Long)], tag: String): Unit =
+    assert(run(edges) == gridBrandes(edges), tag)
 
   test("path graph: closed form i·(n-1-i)") {
     val n = 7
@@ -108,20 +134,13 @@ class BetweennessSpec extends AnyFunSuite {
   }
 
   test("integer-grid variant: exact on closed forms, bounded drift on random graphs") {
-    val s = spark
-    import s.implicits._
-    def runGrid(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val sym = (edges ++ edges.map(_.swap)).distinct
-      Graph.betweennessGridPpm(sym.toDF("src", "dst")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
     // paths and stars have integral δ at every step — the grid must be EXACT
     val path = (0L until 7L).sliding(2).map(p => (p(0), p(1))).toSeq
-    val gotPath = runGrid(path)
+    val gotPath = run(path)
     for (i <- 0 until 7)
       assert(gotPath(i.toLong) == (i.toLong * (6 - i)) * 1000000L, s"pos $i")
     val star = (2L to 8L).map(l => (1L, l))
-    val gotStar = runGrid(star)
+    val gotStar = run(star)
     assert(gotStar(1L) == 7L * 6 / 2 * 1000000L)
     // random graphs: per-term floors drop < 1 ppm each and propagate
     // along DAG edges with factor σv/σw ≤ 1, so the total drift per
@@ -136,7 +155,7 @@ class BetweennessSpec extends AnyFunSuite {
         if rnd.nextDouble() < p
       } yield (a.toLong, b.toLong)
       val expected = brandes(edges)
-      val got = runGrid(edges)
+      val got = run(edges)
       val bound = n.toLong * edges.size * 2 + 2
       for ((v, bc) <- expected) {
         val expPpm = math.round(bc * 1e6)
@@ -149,11 +168,8 @@ class BetweennessSpec extends AnyFunSuite {
   test("bipartite certificate: identical results with the same-layer anti skipped") {
     // random bipartite graphs (sides 1..nA and 101..100+nB, edges only
     // across): the certificate's claim is that the same-layer anti-join
-    // never drops a row, so bipartite = true must be bit-identical to
-    // the general path — for the float form vs sequential Brandes and
-    // for the grid form vs the grid general path (exact frame equality)
-    val s = spark
-    import s.implicits._
+    // never drops a row, so bipartite = true must equal both the
+    // general path and the grid reference exactly
     for ((p, seed) <- Seq((0.25, 51L), (0.6, 52L))) {
       val rnd = new scala.util.Random(seed)
       val (nA, nB) = (9, 7)
@@ -161,20 +177,10 @@ class BetweennessSpec extends AnyFunSuite {
         a <- 1 to nA; b <- 101 to (100 + nB)
         if rnd.nextDouble() < p
       } yield (a.toLong, b.toLong)
-      val expected = brandes(edges)
-      val sym = (edges ++ edges.map(_.swap)).distinct
-      val gotFloat = Graph.betweennessExact(sym.toDF("src", "dst"),
-          bipartite = true).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotFloat.keySet == expected.keySet, s"p=$p: node sets differ")
-      for ((v, bc) <- expected)
-        assert(math.abs(gotFloat(v) - math.round(bc * 1e6)) <= 1L,
-          s"p=$p float bc($v)")
-      def grid(bip: Boolean): Map[Long, Long] =
-        Graph.betweennessGridPpm(sym.toDF("src", "dst"), bipartite = bip)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(grid(bip = true) == grid(bip = false),
-        s"p=$p: grid bipartite path diverged from the general path")
+      val certified = run(edges, bipartite = true)
+      assert(certified == gridBrandes(edges), s"p=$p: vs grid reference")
+      assert(certified == run(edges),
+        s"p=$p: bipartite path diverged from the general path")
     }
   }
 
@@ -186,9 +192,7 @@ class BetweennessSpec extends AnyFunSuite {
     } yield (a.toLong, b.toLong)).toSeq
     val sampledRoots = (edges.flatMap(e => Seq(e._1, e._2)).distinct
       .filter(_ % 2 == 0)).toSet
-    val expected = brandes(edges, Some(sampledRoots))
-    val got = run(edges, Some(col("node") % 2 === 0))
-    for ((v, bc) <- expected)
-      assert(math.abs(got(v) - math.round(bc * 1e6)) <= 1L, s"node $v")
+    assert(run(edges, Some(col("node") % 2 === 0)) ==
+      gridBrandes(edges, Some(sampledRoots)))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, VectorFunctions => VF}
+import graft.functions.{CosineSimilarity, GraftFunctions, VectorFunctions => VF}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +27,7 @@ class CosineExprSpec extends AnyFunSuite {
   }
 
   test("SQL registration: graft_cosine works through spark.sql") {
-    CosineSimilarity.register(spark)
+    GraftFunctions.register(spark)
     Tables.embeddings(spark, TestSpark.Sf0001).limit(5)
       .createOrReplaceTempView("emb_test")
     val n = spark.sql(

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{CosineSimilarity, GraftFunctions, NfcNormalize,
   PolyHash, VectorFunctions => VF}
 
-/** The SQL function surface (GraftFunctions / GraftExtensions): the
+/** The SQL function surface (GraftFunctions.register / GraftExtensions): the
   * registered `cosine_sim` and `poly_hash` SQL functions must be the
   * SAME expressions the DataFrame API builds — pinned by exact equality
   * of results on real data (cosine is float: bit equality holds because
@@ -66,43 +66,21 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("the extensions class injects the same descriptors") {
-    // GraftExtensions is the cluster path (spark.sql.extensions applies
-    // only at session instantiation, so it cannot be exercised on the
-    // shared test session); identity of descriptors pins that both
-    // paths register the same builders
+    // graft.GraftExtensions is the cluster path (spark.sql.extensions
+    // applies only at session instantiation, so it cannot be exercised
+    // on the shared test session); identity of descriptors pins that it
+    // and GraftFunctions.register install the same builders
     val collected =
       scala.collection.mutable.ArrayBuffer[GraftFunctions.Descriptor]()
     val ext = new org.apache.spark.sql.SparkSessionExtensions {
-      override def injectFunction(
-          fd: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-            org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-            Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-              org.apache.spark.sql.catalyst.expressions.Expression)): Unit =
+      override def injectFunction(fd: GraftFunctions.Descriptor): Unit =
         collected += fd
     }
-    new graft.functions.GraftExtensions().apply(ext)
+    new GraftExtensions().apply(ext)
     assert(collected.map(_._1.funcName).toSet ==
       Set("cosine_sim", "poly_hash", "nfc_normalize",
         "graft_cosine", "graft_polyhash"))
     assert(collected.toSeq == GraftFunctions.descriptors)
-    // graft.GraftExtensions (the top-level entry point) must inject the
-    // IDENTICAL descriptor set — one registration surface, two config
-    // spellings
-    val collected2 = scala.collection.mutable.ArrayBuffer.empty[
-      (org.apache.spark.sql.catalyst.FunctionIdentifier,
-        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-        Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression)]
-    val ext2 = new org.apache.spark.sql.SparkSessionExtensions {
-      override def injectFunction(
-          fd: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-            org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-            Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-              org.apache.spark.sql.catalyst.expressions.Expression)): Unit =
-        collected2 += fd
-    }
-    new graft.GraftExtensions().apply(ext2)
-    assert(collected2.toSeq == GraftFunctions.descriptors)
   }
 
   test("nfc_normalize: ASCII identity fast path, recomposition, SQL==API") {

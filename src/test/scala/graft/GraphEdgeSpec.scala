@@ -60,35 +60,6 @@ class GraphEdgeSpec extends AnyFunSuite {
         viaExact.collect { case (k, x) if viaLsh.get(k) != Some(x) => k }.take(5))
   }
 
-  test("release=true leaves no cached frames behind (cache contract)") {
-    val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L), (3L, 1L))
-    val s = spark
-    import s.implicits._
-    val edges = e.toDF("src", "dst")
-    spark.catalog.clearCache()
-    val pr = Graph.pageRank(edges, iterations = 2, release = true)
-    assert(pr.count() == 3)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "pageRank(release = true) must unpersist its loop frames")
-    val tc = Graph.triangleCounts(edges, release = true)
-    assert(tc.count() == 3)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "triangleCounts(release = true) must unpersist the oriented edges")
-    val no = Graph.neighborOverlap(edges, minShared = 1L, release = true)
-    assert(no.count() == 3)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "neighborOverlap(release = true) must unpersist the edge frame")
-    val rw = Graph.randomWalks(edges, walkLen = 2, seed = 3L, release = true)
-    assert(rw.count() == 9)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "randomWalks(release = true) must unpersist steps, degrees, ranks")
-    val bfs = Graph.bfsDistances(edges, Seq(1L).toDF("lm"), maxDepth = 2,
-      release = true)
-    assert(bfs.count() == 3)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "bfsDistances(release = true) must unpersist the edge frame")
-  }
-
   test("kCore: equals a sequential peeling reference on random graphs") {
     val s = spark
     import s.implicits._
@@ -358,29 +329,5 @@ class GraphEdgeSpec extends AnyFunSuite {
           "change results on certified inputs")
       spark.catalog.clearCache()
     }
-  }
-
-  test("release=true results match release=false results") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(7)
-    val half = (0 until 200).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
-      .filter(p => p._1 != p._2).distinct
-    val edges = (half ++ half.map(p => (p._2, p._1))).toDF("src", "dst")
-    def m(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lazyPr = m(Graph.pageRank(edges, iterations = 3))
-    spark.catalog.clearCache()
-    val eagerPr = m(Graph.pageRank(edges, iterations = 3, release = true))
-    assert(lazyPr == eagerPr)
-    val seeds = Seq((1L, "a"), (2L, "b")).toDF("node", "label")
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val lazyLp = Graph.labelPropagation(edges, seeds, nodes).collect()
-      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    spark.catalog.clearCache()
-    val eagerLp = Graph.labelPropagation(edges, seeds, nodes, release = true)
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(lazyLp == eagerLp)
-    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -4,12 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
 
-/** Pins both SCC paths — the coloring loop (the 100 TB node-keyed
-  * shape) and the closure-doubling loop (the log-round catalog path) —
-  * exactly equal to a sequential Tarjan reference, on random digraphs
-  * across densities, on planted shapes that break known heuristics,
-  * and to each other on the catalog handoff graph. Labels are
-  * canonical (scc_id = min member id), so equality is exact, not
+/** Pins [[Graph.sccByClosure]] (the closure-doubling loop the catalog
+  * runs) exactly equal to a sequential Tarjan reference, on random
+  * digraphs across densities, on planted shapes that break known
+  * heuristics, and on the catalog handoff graph. Labels are canonical
+  * (scc_id = min member id), so equality is exact, not
   * up-to-relabeling.
   */
 class SccSpec extends AnyFunSuite {
@@ -77,32 +76,27 @@ class SccSpec extends AnyFunSuite {
     edges.toDF("src", "dst")
   }
 
-  private def run(algo: org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame, edges: Seq[(Long, Long)]): Map[Long, Long] =
-    algo(toDf(edges)).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  private def checkBoth(edges: Seq[(Long, Long)], tag: String): Unit = {
-    val expect = tarjan(edges)
-    assert(run(Graph.sccByClosure(_), edges) == expect, s"$tag: closure path")
-    assert(run(Graph.stronglyConnectedComponents(_), edges) == expect,
-      s"$tag: coloring path")
+  private def check(edges: Seq[(Long, Long)], tag: String): Unit = {
+    val got = Graph.sccByClosure(toDf(edges)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == tarjan(edges), tag)
   }
 
   test("planted shapes: cycles, bridges, chains, pinched siblings") {
     // two 3-cycles joined by a ONE-WAY bridge stay separate SCCs
-    checkBoth(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L,
+    check(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L,
       10L -> 11L, 11L -> 12L, 12L -> 10L, 3L -> 10L), "bridged cycles")
     // pure DAG chain: every node a singleton
-    checkBoth((1L to 9L).map(i => i -> (i + 1)), "chain")
+    check((1L to 9L).map(i => i -> (i + 1)), "chain")
     // figure-eight sharing node 5: ONE component
-    checkBoth(Seq(1L -> 5L, 5L -> 1L, 5L -> 9L, 9L -> 5L), "figure eight")
+    check(Seq(1L -> 5L, 5L -> 1L, 5L -> 9L, 9L -> 5L), "figure eight")
     // the (fwd,bwd)-pair-heuristic counterexample: 1 and 2 share both
     // the max reacher (9) and the max reachable (8) yet are NOT
     // mutually reachable — must come out as four singletons
-    checkBoth(Seq(9L -> 1L, 9L -> 2L, 1L -> 8L, 2L -> 8L),
+    check(Seq(9L -> 1L, 9L -> 2L, 1L -> 8L, 2L -> 8L),
       "pinched siblings")
     // self-contained: cycle whose members also hang DAG tails
-    checkBoth(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L,
+    check(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L,
       0L -> 1L), "cycle with tails")
   }
 
@@ -114,14 +108,14 @@ class SccSpec extends AnyFunSuite {
         a <- 0L until n; b <- 0L until n
         if a != b && rnd.nextDouble() < p
       } yield (a, b)
-      checkBoth(edges, s"random n=$n p=$p trial=$trial")
+      check(edges, s"random n=$n p=$p trial=$trial")
     }
   }
 
-  test("catalog handoff graph: closure == coloring == Tarjan") {
+  test("catalog handoff graph: closure == Tarjan") {
     val edges = Graph.handoffEdges(Tables.events(spark, TestSpark.Sf0001))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(edges.nonEmpty, "sf0.001 handoff graph must be non-empty")
-    checkBoth(edges, "catalog sf0.001")
+    check(edges, "catalog sf0.001")
   }
 }

@@ -13,7 +13,7 @@ class TailPlannerSpec extends AnyFunSuite {
   private def stream() = new TailMicroBatchStream(
     root = "/nonexistent", glob = "*.log",
     maxBytesPerFilePerBatch = 128L * 1024 * 1024,
-    maxFilesPerTrigger = 0, maxBytesPerTrigger = 0, listIntervalMs = 0)
+    maxFilesPerTrigger = 0)
 
   private def plan(start: Map[String, Long], end: Map[String, Long]): Seq[Seq[TailRange]] =
     stream().planInputPartitions(TailOffset(start), TailOffset(end)).toSeq
