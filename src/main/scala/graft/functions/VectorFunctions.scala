@@ -43,34 +43,4 @@ object VectorFunctions {
 
   /** Cosine similarity (double, deterministic). */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Random-hyperplane (SimHash-style) LSH signature for cosine distance:
-    * `nBits` sign bits packed into a LONG. Hyperplane components are
-    * pseudo-random constants derived from a fixed seed at plan-build time,
-    * embedded as array literals — every executor evaluates the identical
-    * expression, no driver-side state, no UDF.
-    *
-    * Vectors with equal signatures (or signatures within small Hamming
-    * distance) are cosine-close candidates; used to bucket an ANN join.
-    */
-  def lshSignature(vec: Column, dim: Int, nBits: Int, seed: Long = 42L): Column = {
-    val rnd = new scala.util.Random(seed)
-    // one hyperplane per bit: dim gaussian-ish components in [-1, 1)
-    val planes: Seq[Seq[Double]] =
-      Seq.fill(nBits)(Seq.fill(dim)(rnd.nextDouble() * 2 - 1))
-    val bits = planes.zipWithIndex.map { case (plane, i) =>
-      val planeLit = typedLit(plane)
-      val proj = aggregate(
-        zip_with(vec, planeLit, (x, p) => x * p), lit(0.0), (acc, v) => acc + v)
-      // proj is NULL when the vector's length differs from `dim`
-      // (zip_with pads with nulls): the signature must be NULL then,
-      // not bit 0 — an unconditional otherwise(0) gave EVERY
-      // wrong-dimension vector the same signature 0, silently
-      // degenerating the LSH equi-join into one all-pairs bucket.
-      // NULL band keys drop out of the join instead.
-      when(proj >= 0, shiftleft(lit(1L), i))
-        .when(proj < 0, lit(0L)) // else NULL propagates through the sum
-    }
-    bits.reduce(_ + _)
-  }
 }

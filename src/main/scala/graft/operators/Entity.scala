@@ -41,7 +41,7 @@ object Entity {
           |              substring(name, i + 1, length(name))))""".stripMargin))
         .as(Seq("pos", "variant")))
       // persisted: keyed feeds BOTH self-join sides — left lazy, the
-      // variant explosion runs once per alias (the cosineEdgesLsh rule;
+      // variant explosion runs once per alias (the semanticDedupGridL2 rule;
       // Verify/Bench clear the cache between queries)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     keyed.as("a").join(keyed.as("b"),

@@ -94,6 +94,15 @@ object Graph {
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .sortWithinPartitions(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK) // reused every iteration
+    pageRankRounds(withDeg, iterations)
+  }
+
+  /** [[pageRank]]'s integer rounds over a loop-invariant
+    * (src, dst, outdeg) edge frame — shared by the in-memory layout
+    * ([[pageRank]]) and the bucketed one ([[pageRankBucketed]]).
+    */
+  private def pageRankRounds(withDeg: DataFrame,
+      iterations: Int): DataFrame = {
     val nodes = withDeg.select(col("src")).distinct()
     val nFrame = nodes.agg(count(lit(1)).as("n_nodes"))
     var rank = nodes.crossJoin(broadcast(nFrame))
@@ -238,34 +247,9 @@ object Graph {
       .bucketBy(numBuckets, "src")
       .sortBy("src")
       .saveAsTable(table)
-    val withDeg = s.table(table) // (src, dst, outdeg), bucketed on src
-    val nFrame = withDeg.select(col("src")).distinct()
-      .agg(count(lit(1)).as("n_nodes"))
-    var rank = withDeg.select(col("src")).distinct()
-      .crossJoin(broadcast(nFrame))
-      .selectExpr("src AS node", "CAST(1000000000 div n_nodes AS LONG) AS r")
-    for (it <- 1 to iterations) {
-      rank =
-        if (it == 1)
-          // same r15 first-round shortcut as pageRank: uniform init is
-          // one constant, so round 1 is a bucketed scan + keyed agg
-          withDeg.crossJoin(broadcast(nFrame))
-            .selectExpr("dst",
-              "CAST(1000000000 div n_nodes AS LONG) div outdeg AS contrib")
-            .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-            .crossJoin(broadcast(nFrame))
-            .selectExpr("dst AS node",
-              "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
-        else withDeg.join(rank, withDeg("src") === rank("node"))
-          .selectExpr("dst", "r div outdeg AS contrib")
-          .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-          .crossJoin(broadcast(nFrame))
-          .selectExpr("dst AS node",
-            "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
-    }
-    rank
+    // (src, dst, outdeg), bucketed on src
+    pageRankRounds(s.table(table), iterations)
   }
-
 
   /** q133: q110's PageRank over the bucketed edge layout — same graph,
     * same oracle SQL, bit-identical ranks; what changes is the PLAN
@@ -462,14 +446,6 @@ object Graph {
     state
   }
 
-  /** Exact all-pairs cosine similarity edges — the TRUTH-ONLY edge
-    * source (O(n²) nested-loop by construction, the same role
-    * Similarity.cosineNearDups plays for the ANN family): every
-    * node-ordered pair with cosine ≥ `threshold`, symmetrized into
-    * (src, dst) both ways. Never run this shape at corpus scale; it
-    * exists as the oracle-parity default and the ground truth the
-    * banded path is pinned against (GraphEdgeSpec).
-    */
   /** Per-JVM memo of the MATERIALIZED catalog similarity graph per
     * (corpus dir, threshold) — the q78/q125/q141 build-once accounting
     * applied to the whole graph-analytics family: a similarity graph is
@@ -494,6 +470,14 @@ object Graph {
     s.read.parquet(path)
   }
 
+  /** Exact all-pairs cosine similarity edges: every node-ordered pair
+    * with cosine ≥ `threshold`, symmetrized into (src, dst) both ways.
+    * O(n²) nested-loop by construction — the catalog builds it once per
+    * (corpus, threshold) through [[similarityEdges]]. At corpus scale a
+    * candidate generator has to replace the pair join: banded LSH
+    * (Similarity.lshTopKGridL2's equi-join on (table, band, chunk)) or
+    * cluster scoping (Similarity.semanticDedupGridL2).
+    */
   def cosineEdgesExact(vectors: DataFrame, threshold: Double): DataFrame = {
     val a = vectors.select(col("vec_id").as("ia"), col("v").as("va"))
     val b = vectors.select(col("vec_id").as("ib"), col("v").as("vb"))
@@ -504,102 +488,11 @@ object Graph {
       .unionByName(pairs.select(col("ib").as("src"), col("ia").as("dst")))
   }
 
-  /** Scale-path similarity edges: random-hyperplane LSH bands turn the
-    * all-pairs cosine join into an EQUI-join on (band, chunk) — the
-    * q28/q33 discipline applied to graph edge construction. Each seed
-    * contributes an independent 32-bit signature split into
-    * 32/`bitsPerBand` chunks; vectors sharing any (band, chunk) become
-    * candidates, exact cosine then keeps only true edges — so the
-    * result is always a SUBSET of [[cosineEdgesExact]] (sound), and
-    * recall is the union over bands of per-band collision probability
-    * (1 − θ/π)^bitsPerBand.
-    *
-    * `bitsPerBand` is the selectivity knob: the catalog threshold 0.3
-    * is an unusually WIDE net (θ ≈ 72°, per-bit agreement only ~0.6),
-    * so the default keeps bands coarse (2 bits) to hold recall at 1.0
-    * on the test corpus — GraftEdgeSpec pins lsh == exact there, the
-    * CurateSpec pattern. At production thresholds (≥ 0.7, per-bit
-    * ≥ 0.75) raise bitsPerBand to 8–16: buckets shrink quadratically
-    * in bucket count while recall per band stays high, which is what
-    * makes this shape viable at 10⁹ vectors where the exact join is a
-    * wall. Candidate dedup happens BEFORE the cosine filter so each
-    * surviving pair pays the fused-codegen cosine exactly once.
-    *
-    * The band explode carries ONLY (vec_id, band, chunk) — never the
-    * vector: at 32 bands per vector, exploding the embedding alongside
-    * would multiply the shuffled bytes by the band count. Vectors
-    * re-join the deduped candidate PAIR list by id (two keyed joins
-    * against the persisted input frame), so each vector crosses the
-    * wire once per pair side, not once per band.
-    */
-  def cosineEdgesLsh(vectors: DataFrame, threshold: Double, dim: Int = 64,
-      bitsPerBand: Int = 2, seeds: Seq[Long] = Seq(42L, 43L)): DataFrame = {
-    val nBits = 32
-    // unguarded, a too-wide band silently yields ZERO bands — an empty
-    // edge set that reads as "no similar pairs" — and 0 divides by zero
-    require(bitsPerBand >= 1 && bitsPerBand <= nBits &&
-      nBits % bitsPerBand == 0,
-      s"bitsPerBand must divide $nBits, got $bitsPerBand")
-    val bandsPerSeed = nBits / bitsPerBand
-    val mask = (1L << bitsPerBand) - 1
-    val vecs = vectors.select(col("vec_id"), col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds banding + both
-    // vector re-joins (released per the cache contract)
-    val withSigs = seeds.zipWithIndex.foldLeft(vecs) { case (acc, (seed, i)) =>
-      acc.withColumn(s"sig$i",
-        VF.lshSignature(col("v"), dim = dim, nBits = nBits, seed = seed))
-    }
-    val bandCols = seeds.indices.flatMap(i =>
-      (0 until bandsPerSeed).map(j =>
-        shiftright(col(s"sig$i"), j * bitsPerBand).bitwiseAND(lit(mask))))
-    // persisted: feeds both self-join sides, so the 64 hyperplane
-    // projections per vector run once — and it is SMALL (three scalars
-    // per band-row, no vector column)
-    val banded = withSigs.select(col("vec_id"),
-        posexplode(array(bandCols: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = banded
-      .select(col("band"), col("chunk"), col("vec_id").as("ia"))
-      .join(banded.select(col("band"), col("chunk"), col("vec_id").as("ib")),
-        Seq("band", "chunk"))
-      .filter(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"))
-      .dropDuplicates("ia", "ib")
-    val pairs = cand
-      .join(vecs.select(col("vec_id").as("ia"), col("v").as("va")), "ia")
-      .join(vecs.select(col("vec_id").as("ib"), col("v").as("vb")), "ib")
-      .filter(CosineSimilarity.cosineSim(col("va"), col("vb")) >= threshold)
-      .select(col("ia"), col("ib"))
-    pairs.select(col("ia").as("src"), col("ib").as("dst"))
-      .unionByName(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-  }
-
-  /** Label spreading over a similarity graph built from an embedding
-    * frame (vec_id, v) — [[labelPropagation]] with the edge
-    * construction PLUGGABLE: `edgeSource` maps (vectors, threshold) to
-    * symmetrized (src, dst) edges. The default is [[cosineEdgesExact]]
-    * for oracle parity at test scale; pass [[cosineEdgesLsh]] (or any
-    * candidate generator — Similarity.semanticDedup's cluster scoping,
-    * a persisted q125-style index) when the vector count makes the
-    * exact join infeasible. GraphEdgeSpec pins lsh == exact → identical
-    * propagation on the catalog corpus; PlanShapeSpec pins that the
-    * lsh path plans no nested-loop join.
-    */
-  def labelSpreadBySimilarity(vectors: DataFrame, seeds: DataFrame,
-      rounds: Int = 2, threshold: Double = 0.3,
-      edgeSource: (DataFrame, Double) => DataFrame = cosineEdgesExact,
-      normalizedInputs: Boolean = false): DataFrame =
-    labelPropagation(edgeSource(vectors, threshold), seeds,
-      vectors.select(col("vec_id").as("node")), rounds,
-      normalized = normalizedInputs)
-
   /** q127: spread the first-100 embedding labels over the cosine-0.3
     * similarity graph for two rounds — hash-checked (including nodes
     * that stay unlabeled) against the same unrolled vote rounds in
-    * DuckDB. Edge construction goes through [[labelSpreadBySimilarity]]
-    * with the exact edge source (oracle parity); the LSH edge source is
-    * the 100 TB path, pinned equal on this corpus by GraphEdgeSpec.
+    * DuckDB. The edges are the memoized exact corpus graph
+    * ([[similarityEdges]]), so the query measures the propagation.
     */
   val q127: QueryDef = QueryDef.checked(
     "q127_label_propagation",
@@ -634,18 +527,13 @@ object Graph {
       |FROM nodes n LEFT JOIN w2 w ON n.node = w.node
       |ORDER BY n.node""".stripMargin) { (s, d) =>
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), VF.asDoubleDense(col("embedding")).as("v"),
-        col("label"))
     val seeds = e.filter(col("vec_id") < 100)
       .select(col("vec_id").as("node"), col("label"))
-    // edgeSource taps the memoized corpus graph — same edges, built
-    // once. normalizedInputs certifies ALL inputs normal: the graph is
+    // normalized certifies ALL inputs normal: the memoized graph is
     // distinct-by-construction, nodes and seeds project the embeddings
     // primary key (unique)
-    labelSpreadBySimilarity(e.select(col("vec_id"), col("v")), seeds,
-        rounds = 2, threshold = 0.3,
-        edgeSource = (_, t) => similarityEdges(s, d, t),
-        normalizedInputs = true)
+    labelPropagation(similarityEdges(s, d, 0.3), seeds,
+        e.select(col("vec_id").as("node")), rounds = 2, normalized = true)
       .orderBy(col("node"))
   }
 
@@ -1770,6 +1658,51 @@ object Graph {
       .orderBy(col("scc_id"))
   }
 
+  /** The condensation DAG's direct edges: `edges0`'s (src, dst) pairs
+    * lifted onto their `scc` components, intra-component pairs
+    * dropped — distinct (sa, sb).
+    */
+  private def liftedCondensation(edges0: DataFrame,
+      scc: DataFrame): DataFrame =
+    edges0.select(col("src"), col("dst")).distinct()
+      .join(broadcast(scc.select(col("node").as("src"), col("scc_id").as("sa"))),
+        Seq("src"))
+      .join(broadcast(scc.select(col("node").as("dst"), col("scc_id").as("sb"))),
+        Seq("dst"))
+      .filter(col("sa") =!= col("sb"))
+      .select(col("sa"), col("sb")).distinct()
+
+  /** MAX-PLUS DOUBLING over weighted DAG edges (sa, sb, w > 0):
+    * P := max-agg(P ∪ P∘P) until P(u,v) is the heaviest u→v path
+    * weight for every connected pair, in ⌈log₂ depth⌉ rounds. The
+    * fixpoint certificate: Σ per-pair maxima strictly increases until
+    * converged (max-agg per pair only grows; a new pair adds a positive
+    * term), so an unchanged sum certifies it. Every round is
+    * localCheckpoint'd; each costs one join + agg + the sum action.
+    */
+  private def maxPlusClosure(weighted: DataFrame): DataFrame = {
+    var lp = weighted.select(col("sa"), col("sb"), col("w"))
+      .localCheckpoint(true)
+    def total(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("w")), lit(0L))).head.getLong(0)
+    var t = total(lp)
+    var changed = true
+    while (changed) {
+      val step = lp.as("r1")
+        .join(lp.as("r2"), col("r1.sb") === col("r2.sa"))
+        .select(col("r1.sa").as("sa"), col("r2.sb").as("sb"),
+          (col("r1.w") + col("r2.w")).as("w"))
+      val next = lp.union(step)
+        .groupBy(col("sa"), col("sb")).agg(max(col("w")).as("w"))
+        .localCheckpoint(true)
+      val t2 = total(next)
+      changed = t2 != t
+      t = t2
+      lp = next
+    }
+    lp
+  }
+
   /** Condensation DAG longest-path layers (critical-path depth): per
     * SCC, `layer` = the longest directed path (in condensation hops)
     * reaching it from anywhere — 0 reads "source component", and the
@@ -1802,39 +1735,8 @@ object Graph {
     // action per round), which re-running every bench pass charged to
     // the serving path — q178 measured a consistent ~2× its pin from
     // exactly this. One build per (graph, session), setup-itemized.
-    def buildLp(): DataFrame = {
-      val direct = edges0.select(col("src"), col("dst")).distinct()
-      val lifted = direct
-        .join(broadcast(scc.select(col("node").as("src"), col("scc_id").as("sa"))),
-          Seq("src"))
-        .join(broadcast(scc.select(col("node").as("dst"), col("scc_id").as("sb"))),
-          Seq("dst"))
-        .filter(col("sa") =!= col("sb"))
-        .select(col("sa"), col("sb")).distinct()
-        .localCheckpoint(true)
-      var lp = lifted.withColumn("dd", lit(1L)).localCheckpoint(true)
-      // sum of per-pair max path length: strictly increases until the
-      // max-plus fixpoint (max-agg per pair only grows; a new pair adds a
-      // positive term), so equality certifies convergence
-      def weight(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("dd")), lit(0L))).head.getLong(0)
-      var w = weight(lp)
-      var changed = true
-      while (changed) {
-        val step = lp.as("r1")
-          .join(lp.as("r2"), col("r1.sb") === col("r2.sa"))
-          .select(col("r1.sa").as("sa"), col("r2.sb").as("sb"),
-            (col("r1.dd") + col("r2.dd")).as("dd"))
-        val next = lp.union(step)
-          .groupBy(col("sa"), col("sb")).agg(max(col("dd")).as("dd"))
-          .localCheckpoint(true)
-        val w2 = weight(next)
-        changed = w2 != w
-        w = w2
-        lp = next
-      }
-      lp
-    }
+    def buildLp(): DataFrame =
+      maxPlusClosure(liftedCondensation(edges0, scc).withColumn("w", lit(1L)))
     val lp = memoKey match {
       case Some(k) => layersMemo.computeIfAbsent(
         s"$k#layers${sessionSuffix(edges0.sparkSession)}",
@@ -1843,7 +1745,7 @@ object Graph {
     }
     scc.groupBy(col("scc_id")).agg(count(lit(1)).as("n_nodes"))
       .join(broadcast(lp.groupBy(col("sb").as("scc_id"))
-        .agg(max(col("dd")).as("in_depth"))), Seq("scc_id"), "left")
+        .agg(max(col("w")).as("in_depth"))), Seq("scc_id"), "left")
       .select(col("scc_id"), col("n_nodes"),
         coalesce(col("in_depth"), lit(0L)).as("layer"))
   }
@@ -2244,8 +2146,8 @@ object Graph {
     * tree-like fringes). Pure composition: the bridge set (read from
     * the memoized exclusion index) anti-joins the edge list, the
     * residue runs through the O(log n)-round large-star/small-star
-    * contraction (Dedup.dedupClustersStars — node-keyed state, the
-    * 100 TB shape), and bridge-only nodes come back as singletons.
+    * contraction (the Dedup.starComponents kernel — node-keyed state,
+    * the 100 TB shape), and bridge-only nodes come back as singletons.
     * comp_id = min member (engine-independent canonical label).
     */
   private val twoEcMemo =
@@ -2260,9 +2162,9 @@ object Graph {
       val residual = und.filter(col("src") < col("dst"))
         .join(br, col("src") === col("u") && col("dst") === col("v"),
           "left_anti")
-      val comps = Dedup.dedupClustersStars(
-          residual.select(col("src").as("doc_a"), col("dst").as("doc_b")))
-        .select(col("doc_id").as("node"), col("cluster_id").as("comp_id"))
+      val comps = Dedup.starComponents(
+          residual.select(col("src").as("a"), col("dst").as("b")), Nil)
+        .select(col("node"), col("m").as("comp_id"))
       nodes.join(comps, Seq("node"), "left")
         .select(col("node"), coalesce(col("comp_id"), col("node")).as("comp_id"))
     }
@@ -2295,7 +2197,7 @@ object Graph {
     * minimum and the block partition is the connected components of
     * those links over EDGE nodes (blocks are edge-connected through
     * shared endpoints, so endpoint-local classes generate the full
-    * partition). CC runs through [[Dedup.dedupClustersStars]], the
+    * partition). CC runs through [[Dedup.starComponents]], the
     * large-star/small-star contraction — O(log blocks) rounds,
     * node-keyed state, the 100 TB shape.
     *
@@ -2345,12 +2247,12 @@ object Graph {
       val ed = labels.select(col("x"), col("lbl"),
         enc(least(col("x"), col("p")), greatest(col("x"), col("p"))).as("e"))
       val gm = ed.groupBy(col("x"), col("lbl")).agg(min(col("e")).as("me"))
+      // starComponents orients and dedups the links itself
       val links = ed.join(gm, Seq("x", "lbl"))
         .filter(col("e") =!= col("me"))
-        .select(col("e").as("doc_a"), col("me").as("doc_b"))
-        .distinct()
-      val comps = Dedup.dedupClustersStars(links)
-        .select(col("doc_id").as("e"), col("cluster_id").as("m"))
+        .select(col("e").as("a"), col("me").as("b"))
+      val comps = Dedup.starComponents(links, Nil)
+        .select(col("node").as("e"), col("m"))
       // edges in no class pair (bridges, isolated edges) are their own
       // singleton block — the left join's coalesce
       und.select(least(col("src"), col("dst")).as("lo"),
@@ -2979,36 +2881,10 @@ object Graph {
       case None => closureFrames(edges0)
     }
     val sizes = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("sz"))
-    val direct = edges0.select(col("src"), col("dst")).distinct()
-    val lifted = direct
-      .join(broadcast(scc.select(col("node").as("src"), col("scc_id").as("sa"))),
-        Seq("src"))
-      .join(broadcast(scc.select(col("node").as("dst"), col("scc_id").as("sb"))),
-        Seq("dst"))
-      .filter(col("sa") =!= col("sb"))
-      .select(col("sa"), col("sb")).distinct()
+    val lp = maxPlusClosure(liftedCondensation(edges0, scc)
       .join(broadcast(sizes.select(col("scc_id").as("sb"), col("sz"))),
         Seq("sb"))
-      .select(col("sa"), col("sb"), col("sz").as("w"))
-      .localCheckpoint(true)
-    var lp = lifted
-    def total(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("w")), lit(0L))).head.getLong(0)
-    var t = total(lp)
-    var changed = true
-    while (changed) {
-      val step = lp.as("r1")
-        .join(lp.as("r2"), col("r1.sb") === col("r2.sa"))
-        .select(col("r1.sa").as("sa"), col("r2.sb").as("sb"),
-          (col("r1.w") + col("r2.w")).as("w"))
-      val next = lp.union(step)
-        .groupBy(col("sa"), col("sb")).agg(max(col("w")).as("w"))
-        .localCheckpoint(true)
-      val t2 = total(next)
-      changed = t2 != t
-      t = t2
-      lp = next
-    }
+      .select(col("sa"), col("sb"), col("sz").as("w")))
     sizes
       .join(broadcast(lp.groupBy(col("sb").as("scc_id"))
         .agg(max(col("w")).as("in_w"))), Seq("scc_id"), "left")

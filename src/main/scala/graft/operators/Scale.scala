@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.{CosineSimilarity, VectorFunctions => VF}
+import graft.functions.{VectorFunctions => VF}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -106,126 +106,18 @@ object Scale {
       .orderBy(col("flag"))
   }
 
-  /** Spherical k-means (Lloyd) on the driver over a bounded sample — the
-    * standard way to train an IVF coarse quantizer (FAISS trains its
-    * codebook the same way: small sample, exact k-means, broadcast the
-    * centroids). Deterministic: seeded init, fixed iteration count.
-    * Cosine metric → points and centroids live on the unit sphere
-    * (centroid = normalized mean of its members).
-    */
-  private[operators] def trainCodebook(
-      points: Array[Array[Double]], k: Int,
-      iters: Int = 10, seed: Long = 42L): Array[Array[Double]] = {
-    def normalize(v: Array[Double]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      val n = math.sqrt(s)
-      if (n == 0.0) v.clone() else v.map(_ / n)
-    }
-    val pts = points.map(normalize)
-    require(pts.nonEmpty, "empty codebook training sample")
-    val rnd = new scala.util.Random(seed)
-    var centroids = rnd.shuffle(pts.indices.toVector).take(k).map(pts).toArray
-    while (centroids.length < k) centroids :+= pts(rnd.nextInt(pts.length))
-    val dim = pts.head.length
-    (0 until iters).foreach { _ =>
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Int](k)
-      pts.foreach { p =>
-        var best = 0; var bestDot = Double.NegativeInfinity; var c = 0
-        while (c < k) {
-          var dot = 0.0; var i = 0
-          while (i < dim) { dot += p(i) * centroids(c)(i); i += 1 }
-          if (dot > bestDot) { bestDot = dot; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
-      }
-      centroids = Array.tabulate(k)(c =>
-        if (counts(c) == 0) centroids(c) else normalize(sums(c)))
-    }
-    centroids
-  }
-
-  /** Deterministic bounded driver-side training sample shared by every
-    * codebook trainer (the one legitimate driver-side step — a
-    * FAISS-style quantizer train): every step-th vec_id with
-    * step = CEIL(n / cap), so at most ~cap rows are ever collected.
-    * (Floor division let any corpus with cap ≤ n < 2·cap collect
-    * WHOLE — double the documented budget.) Catalog corpora carry
-    * dense 0-based vec_ids; a sparse id space only shrinks the
-    * sample, and an empty one fails loudly rather than training on
-    * nothing.
-    */
-  private[operators] def sampleVectors(e: org.apache.spark.sql.DataFrame,
-      cap: Int, normalize: Boolean = false): Array[Array[Double]] = {
-    val n = e.count()
-    val step = math.max(1L, (n + cap - 1) / cap)
-    val rows = e.filter(col("vec_id") % step === 0)
-      .orderBy(col("vec_id")).select(col("v")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(rows.nonEmpty,
-      s"empty training sample (n=$n, step=$step): no vec_id = 0 mod step")
-    if (normalize) rows.map(l2normalizeV) else rows
-  }
-
-  /** L2-normalize (cosine == dot afterwards); zero vectors pass through. */
-  private def l2normalizeV(v: Array[Double]): Array[Double] = {
-    val n = math.sqrt(v.map(x => x * x).sum)
-    if (n == 0.0) v else v.map(_ / n)
-  }
-
-  /** IVF (inverted-file) ANN over (vec_id LONG, v ARRAY<DOUBLE>): train a
-    * coarse codebook on a seeded bounded sample (≤ sampleCap rows
-    * collected via [[sampleVectors]]), assign each corpus vector to its nearest
-    * centroid (fused-cosine per centroid, argmax via sorted struct
-    * array), probe the nProbe nearest lists per query. The corpus scan
-    * for assignment is one pass; the search join touches only the probed
-    * lists — the IVF trade vs LSH banding is fewer, larger buckets and a
-    * tunable nprobe.
-    */
-  def ivfTopK(
-      e: org.apache.spark.sql.DataFrame, nQueries: Int = 5, topK: Int = 10,
-      nCentroids: Int = 16, nProbe: Int = 4, sampleCap: Int = 2048): org.apache.spark.sql.DataFrame = {
-    val sample = sampleVectors(e, sampleCap)
-    val centroids = trainCodebook(sample, nCentroids).zipWithIndex
-      .map { case (cv, cid) => (cid.toLong, cv.toSeq) }
-    // nearest-centroid ranking: array of (sim, cid) structs, sorted asc
-    def bestOf(vcol: org.apache.spark.sql.Column) =
-      nearestRanking(centroids.toSeq, vcol)
-    val corpus = e.withColumn("ranked", bestOf(col("v")))
-      .withColumn("cid", element_at(col("ranked"), -1).getField("cid"))
-      .select(col("vec_id").as("neighbor_id"), col("v").as("vc"), col("cid"))
-    val queries = e.filter(col("vec_id") < nQueries)
-      .withColumn("ranked", bestOf(col("v")))
-      .select(col("vec_id").as("query_id"), col("v").as("vq"),
-        explode(slice(col("ranked"), -nProbe, nProbe)).as("probe"))
-      .select(col("query_id"), col("vq"), col("probe.cid").as("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    broadcast(queries).join(corpus, Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cs", CosineSimilarity.cosineSim(col("vq"), col("vc")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cs"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** [[ivfTopK]] on the integer grid — the ORACLE-CHECKABLE IVF: the
-    * coarse quantizer is [[Similarity.kmeansFrames]]' exact integer
-    * k-means (the q160 replay), query probes rank centroids by exact
-    * integer L2 (nProbe smallest, (d, cid) tie-break), and candidates —
-    * corpus vectors in probed lists, reached through a BROADCAST of the
-    * tiny (queries × nProbe) probe frame onto the assignment equi-join
-    * — re-rank by exact integer squared-L2 (= cosine ordering on the
-    * unit-norm corpus). Same FAISS IVF plan shape as the float form:
-    * train on a bounded sample, one assignment pass, probes touch
-    * nProbe/nList of the corpus.
+  /** IVF (inverted-file) ANN over (vec_id LONG, v ARRAY<DOUBLE>) on the
+    * integer grid — Jégou et al.'s coarse quantizer + probed inverted
+    * lists, ORACLE-CHECKABLE: the codebook is the exact integer k-means
+    * of [[Similarity.kmeansFramesGv]] (the q160 replay), query probes
+    * rank centroids by exact integer L2 (nProbe smallest, (d, cid)
+    * tie-break), and candidates — corpus vectors in probed lists,
+    * reached through a BROADCAST of the tiny (queries × nProbe) probe
+    * frame onto the assignment equi-join — re-rank by exact integer
+    * squared-L2 (= cosine ordering on the unit-norm corpus). The FAISS
+    * IVF plan shape: one assignment pass, probes touch nProbe/nList of
+    * the corpus — the trade vs LSH banding is fewer, larger buckets and
+    * a tunable nprobe.
     */
   def ivfTopKGridL2(e: org.apache.spark.sql.DataFrame, nQueries: Int = 5,
       topK: Int = 10, nCentroids: Int = 16, nProbe: Int = 4,
@@ -264,14 +156,6 @@ object Scale {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** IVF ANN as a catalog query: grid-k-means codebook (16 lists,
-    * nprobe=4) over the embeddings table — ORACLE-CHECKED since r7
-    * (training, probing, candidates and re-rank all replay in DuckDB).
-    * The float spherical-k-means [[ivfTopK]] stays as the library API;
-    * ScaleSpec asserts recall vs exact brute force on BOTH this corpus
-    * and a planted-cluster fixture (where the trained codebook must
-    * reach ≥0.8 recall@10 — random data caps the gain).
-    */
   /** DuckDB replay of the grid-IVF query path (probe ranking,
     * candidate lists, exact re-rank) over a trained codebook CTE block
     * — shared by q47 (one-shot), q125 (persisted index; identical
@@ -308,63 +192,17 @@ object Scale {
        |  FROM pd2) t
        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
 
+  /** q47: grid IVF over the embeddings table (16 lists, nprobe 4) —
+    * ORACLE-CHECKED: training, probing, candidates and re-rank all
+    * replay in DuckDB. ScaleSpec pins recall@10 vs brute force on this
+    * corpus and on a planted-cluster fixture (where the trained codebook
+    * must reach ≥0.8 — random data caps the gain).
+    */
   val q47: QueryDef = QueryDef.checked(
     "q47_ann_ivf_topk", ivfGridQuerySql("")) { (s, d) =>
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), VF.asDoubleDense(col("embedding")).as("v"))
     ivfTopKGridL2(e)
-  }
-
-  /** Persist a trained IVF index: `centroids` (cid, centroid) and
-    * `lists` (vec_id, v, partitioned BY cid) parquet tables under
-    * `path` — the build-once half of the production ANN pattern (the
-    * dense-vector analogue of the q78 MinHash signature index). The
-    * corpus is assigned and laid out by list ONCE; because the lists
-    * are directory-partitioned on cid, a later query batch's probes
-    * prune whole directories (PartitionFilters — the q89 mechanism) and
-    * read only nprobe/nlist of the corpus bytes. Training is the same
-    * seeded bounded-sample spherical k-means as [[ivfTopK]], so a saved
-    * index reproduces the one-shot operator exactly (ScaleSpec pins
-    * equality).
-    */
-  def saveIvfIndex(e: org.apache.spark.sql.DataFrame, path: String,
-      nCentroids: Int = 16, sampleCap: Int = 2048): Unit = {
-    val sample = sampleVectors(e, sampleCap)
-    val centroids = trainCodebook(sample, nCentroids).zipWithIndex
-      .map { case (cv, cid) => (cid.toLong, cv.toSeq) }
-    val sp = e.sparkSession
-    import sp.implicits._
-    centroids.toSeq.toDF("cid", "centroid")
-      .repartition(1) // nlist rows — one tiny file
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    e.withColumn("ranked", nearestRanking(centroids, col("v")))
-      .withColumn("cid", element_at(col("ranked"), -1).getField("cid"))
-      .select(col("vec_id"), col("v"), col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/lists")
-  }
-
-  /** INCREMENTAL ingest into a [[saveIvfIndex]] index — the q78
-    * index×fresh pattern for dense vectors: new vectors are assigned to
-    * the EXISTING centroid table (no retraining — the codebook is the
-    * index's contract; retraining would silently re-shuffle every old
-    * list) and appended to the cid-partitioned lists, so each increment
-    * touches only its own new files and queries keep pruning by
-    * directory. The drift trade is the documented one from the ANN
-    * literature: assignment quality degrades as the corpus distribution
-    * moves away from the training sample — rebuild cadence is an
-    * operational knob, not an engine concern. ScaleSpec pins that an
-    * incremental index is ROW-IDENTICAL to a monolithic assignment of
-    * the union under the same centroids.
-    */
-  def appendToIvfIndex(eNew: org.apache.spark.sql.DataFrame,
-      path: String): Unit = {
-    val spark = eNew.sparkSession
-    val centroids = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    eNew.withColumn("ranked", nearestRanking(centroids, col("v")))
-      .withColumn("cid", element_at(col("ranked"), -1).getField("cid"))
-      .select(col("vec_id"), col("v"), col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(s"$path/lists")
   }
 
   /** q175: the incremental-ingest IVF path end to end — grid index
@@ -374,8 +212,8 @@ object Scale {
     * ORACLE-CHECKED since r7: the replay trains its codebook on the
     * same pre-cut subset (a scalar-subquery WHERE on the training CTE)
     * and assigns the full corpus under it — the incremental path must
-    * be indistinguishable from that monolithic recompute, which is
-    * exactly the ScaleSpec pin for the float twin.
+    * be indistinguishable from that monolithic recompute (ScaleSpec
+    * pins the append's own assignments against an exact argmin).
     */
   val q175: QueryDef = QueryDef.checked(
     "q175_ann_ivf_incremental",
@@ -391,54 +229,14 @@ object Scale {
     ivfTopKGridFromIndex(s, path, e.filter(col("vec_id") < 5))
   }
 
-  /** Query a [[saveIvfIndex]] index: centroids load driver-side (nlist
-    * rows), query vectors rank them row-locally, and the probe join
-    * reads only the probed list partitions. Same candidate generation,
-    * exact re-scoring, and tie-breaking as [[ivfTopK]].
-    */
-  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: org.apache.spark.sql.DataFrame, topK: Int = 10,
-      nProbe: Int = 4): org.apache.spark.sql.DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    val corpus = spark.read.parquet(s"$path/lists")
-      .select(col("vec_id").as("neighbor_id"), col("v").as("vc"),
-        col("cid").cast("long").as("cid"))
-    val probed = queries
-      .withColumn("ranked", nearestRanking(centroids, col("v")))
-      .select(col("vec_id").as("query_id"), col("v").as("vq"),
-        explode(slice(col("ranked"), -nProbe, nProbe)).as("probe"))
-      .select(col("query_id"), col("vq"), col("probe.cid").as("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    broadcast(probed).join(corpus, Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cs", CosineSimilarity.cosineSim(col("vq"), col("vc")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cs"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** Nearest-centroid ranking as a sorted (sim, cid) struct array —
-    * shared by the one-shot and persisted-index IVF paths.
-    */
-  private def nearestRanking(centroids: Seq[(Long, Seq[Double])],
-      vcol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val sims = centroids.map { case (cid, cv) =>
-      struct(CosineSimilarity.cosineSim(vcol, typedLit(cv)).as("sim"),
-        lit(cid).as("cid"))
-    }
-    array_sort(array(sims.toIndexedSeq: _*))
-  }
-
-  /** Persist a GRID IVF index: `gcentroids` (cid, i, c) integer
-    * centroid components and `glists` (vec_id, gx, partitioned BY cid)
-    * grid vectors — the oracle-checkable form of [[saveIvfIndex]]
-    * (same build-once/read-many layout contract, exact integer state
-    * instead of a float codebook).
+  /** Persist a trained grid IVF index under `path`: `gcentroids`
+    * (cid, i, c) integer centroid components and `glists` (vec_id, gx,
+    * partitioned BY cid) grid vectors — the build-once half of the
+    * production ANN pattern (the dense-vector analogue of the q78
+    * MinHash signature index). The corpus is assigned and laid out by
+    * list ONCE; because the lists are directory-partitioned on cid, a
+    * later query batch's probes prune whole directories (the q89
+    * mechanism) and read only nprobe/nlist of the corpus bytes.
     */
   def saveIvfIndexGrid(e: org.apache.spark.sql.DataFrame, path: String,
       nCentroids: Int = 16, iterations: Int = 2): Unit = {
@@ -452,10 +250,16 @@ object Scale {
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/glists")
   }
 
-  /** Incremental ingest into a [[saveIvfIndexGrid]] index: new vectors
-    * assigned under the EXISTING integer centroid table (no retraining
-    * — the codebook is the index contract, exactly [[appendToIvfIndex]])
-    * and appended to the cid-partitioned lists.
+  /** INCREMENTAL ingest into a [[saveIvfIndexGrid]] index — the q78
+    * index×fresh pattern for dense vectors: new vectors are assigned to
+    * the EXISTING integer centroid table (no retraining — the codebook
+    * is the index's contract; retraining would silently re-shuffle every
+    * old list; argmin ties go to the lowest cid) and appended to the
+    * cid-partitioned lists, so each increment writes only its own new
+    * files and queries keep pruning by directory. The drift trade is the
+    * documented one from the ANN literature: assignment quality degrades
+    * as the corpus distribution moves away from the training set —
+    * rebuild cadence is an operational knob, not an engine concern.
     */
   def appendToIvfIndexGrid(eNew: org.apache.spark.sql.DataFrame,
       path: String): Unit = {
@@ -471,9 +275,10 @@ object Scale {
 
   /** Query a [[saveIvfIndexGrid]] index: probe ranking against the
     * persisted integer centroids, the tiny (queries × nProbe) probe
-    * frame broadcast onto the cid-partitioned lists (directory
-    * pruning, the q89 mechanism), exact integer squared-L2 re-rank —
-    * row-identical to [[ivfTopKGridL2]] under the same training set.
+    * frame broadcast onto the cid-partitioned lists, exact integer
+    * squared-L2 re-rank — row-identical to [[ivfTopKGridL2]] under the
+    * same training set. The list scan reads only the probed cid
+    * directories (static PartitionFilters, the q89 mechanism).
     */
   def ivfTopKGridFromIndex(s: org.apache.spark.sql.SparkSession,
       path: String, queries: org.apache.spark.sql.DataFrame,
@@ -490,7 +295,15 @@ object Scale {
       .select(col("query_id"), col("cid"))
     val gq = queries.select(col("vec_id").as("query_id"),
       expr("transform(v, x -> CAST(ROUND(x * 1000000) AS LONG))").as("gq"))
+    // The probed list ids (≤ queries × nProbe values) come back to the
+    // driver so the glists scan prunes its cid directories statically.
+    // Left to the join alone, the planned runtime dynamic-pruning
+    // filter is dropped by AQE (it cannot reuse the probe broadcast),
+    // and every list is read.
+    val probed = probes.select(col("cid")).distinct().collect()
+      .map(_.getLong(0)).toIndexedSeq
     val corpus = s.read.parquet(s"$path/glists")
+      .filter(col("cid").cast("long").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("gx").as("gn"),
         col("cid").cast("long").as("cid"))
     val w = Window.partitionBy(col("query_id"))
@@ -513,8 +326,8 @@ object Scale {
     * the first 5 vectors queried against it. ORACLE-CHECKED since r7:
     * the index is an access path, so the result is BY CONTRACT
     * identical to the one-shot grid IVF and shares q47's DuckDB replay;
-    * ScaleSpec pins the index == one-shot equality directly and the
-    * float-index path keeps its own equality + pruning spec.
+    * ScaleSpec pins the index == one-shot equality and the cid
+    * partition pruning directly.
     */
   val q125: QueryDef = QueryDef.checked(
     "q125_ann_ivf_index", ivfGridQuerySql("")) { (s, d) =>
@@ -523,119 +336,6 @@ object Scale {
     val path = Exact.buildOnceDir(s"$d#ivfgrid", "ivfg_")(p =>
       saveIvfIndexGrid(e, p))
     ivfTopKGridFromIndex(s, path, e.filter(col("vec_id") < 5))
-  }
-
-  /** Plain (L2) Lloyd k-means on the driver over a bounded sample —
-    * the per-subspace trainer for product quantization. Unlike the
-    * spherical variant above, centroids are member MEANS (subvectors
-    * don't live on the unit sphere even when the full vector does).
-    * Deterministic: seeded init, fixed iterations.
-    */
-  private[operators] def trainPqCodebook(
-      points: Array[Array[Double]], k: Int,
-      iters: Int = 10, seed: Long = 42L): Array[Array[Double]] = {
-    require(points.nonEmpty, "empty PQ training sample")
-    val rnd = new scala.util.Random(seed)
-    var centroids = rnd.shuffle(points.indices.toVector).take(k).map(points).toArray
-    while (centroids.length < k) centroids :+= points(rnd.nextInt(points.length))
-    val dim = points.head.length
-    (0 until iters).foreach { _ =>
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Int](k)
-      points.foreach { p =>
-        var best = 0; var bestD = Double.PositiveInfinity; var c = 0
-        while (c < k) {
-          var d2 = 0.0; var i = 0
-          while (i < dim) { val t = p(i) - centroids(c)(i); d2 += t * t; i += 1 }
-          if (d2 < bestD) { bestD = d2; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
-      }
-      centroids = Array.tabulate(k)(c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_ / counts(c)))
-    }
-    centroids
-  }
-
-  /** Product-quantization ANN with exact re-ranking: split each
-    * normalized vector into `m` subspaces, k-means each subspace on a
-    * driver-side sample (the PQ codebook — FAISS's IndexPQ trains the
-    * same way), encode every corpus vector as `m` small codes, score
-    * query↔corpus via asymmetric distance computation (query subvector ·
-    * centroid-of-code, summed over subspaces), keep the top `rerank`
-    * candidates per query, then re-rank those exactly.
-    *
-    * Why at 100 TB: the scored corpus representation is m bytes per
-    * vector (here 4 codes) instead of d floats — the candidate-scoring
-    * pass streams a table ~64× smaller than the embeddings, and the full
-    * vectors are touched only for `rerank` rows per query (an equi-join
-    * on vec_id). Encoding is one stateless map over the corpus.
-    *
-    * Result contract: approximate by nature → rows-only in the driver
-    * gate; ScaleSpec pins recall@topK against the exact brute force.
-    */
-  def pqTopK(
-      e: org.apache.spark.sql.DataFrame, nQueries: Int = 5, topK: Int = 10,
-      m: Int = 8, codebookSize: Int = 16, rerank: Int = 64,
-      sampleCap: Int = 2048): org.apache.spark.sql.DataFrame = {
-    val sample = sampleVectors(e, sampleCap, normalize = true)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      trainPqCodebook(sample.map(_.slice(j * sub, (j + 1) * sub)), codebookSize)
-    }
-
-    // normalized vector column (cosine == dot after normalization)
-    def withNorm(df: org.apache.spark.sql.DataFrame) = withNormV(df)
-
-    // encode: per subspace, argmin_c ||x - c||² == argmax_c (x·c - ||c||²/2)
-    def codeCol(j: Int): org.apache.spark.sql.Column = {
-      val subv = slice(col("vn"), j * sub + 1, sub)
-      val scored = (0 until codebookSize).map { c =>
-        val cv = books(j)(c)
-        val half = cv.map(x => x * x).sum / 2.0
-        struct((VF.dot(subv, typedLit(cv.toSeq)) - lit(half)).as("s"),
-          lit(c).as("cid"))
-      }
-      element_at(array_sort(array(scored: _*)), -1).getField("cid")
-    }
-    val codes = withNorm(e)
-      .select(col("vec_id").as("neighbor_id") +:
-        (0 until m).map(j => codeCol(j).as(s"c$j")): _*)
-
-    val queries = withNorm(e.filter(col("vec_id") < nQueries))
-      .select(col("vec_id").as("query_id"), col("vn").as("vq"))
-
-    // ADC: approx dot = Σ_j  q_subj · centroid_j[code_j]
-    val approx = (0 until m).map { j =>
-      VF.dot(slice(col("vq"), j * sub + 1, sub),
-        element_at(typedLit(books(j).map(_.toSeq).toSeq), col(s"c$j") + 1))
-    }.reduce(_ + _)
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = codes.join(broadcast(queries),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", approx)
-      .withColumn("crnk", row_number().over(wApprox))
-      .filter(col("crnk") <= rerank)
-      .select(col("query_id"), col("vq"), col("neighbor_id"))
-
-    // exact re-rank of the surviving candidates only
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cand.join(withNorm(e).select(col("vec_id").as("neighbor_id"),
-        col("vn").as("vc")), "neighbor_id")
-      .withColumn("cs", VF.dot(col("vq"), col("vc")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cs"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** Per-subspace integer k-means over a (vec_id, j, s, x) components
@@ -733,16 +433,20 @@ object Scale {
        |${distCte(iters + 1, s"${p}c$iters")}""".stripMargin
   }
 
-  /** [[pqTopK]] on the integer grid — ORACLE-CHECKABLE product
-    * quantization: m=8 subspace codebooks from [[subspaceKmeans]]
+  /** Product-quantization ANN with exact re-ranking on the integer
+    * grid (Jégou et al.'s PQ with asymmetric distance computation),
+    * ORACLE-CHECKABLE: each grid-snapped vector splits into `m`
+    * subspaces, [[subspaceKmeans]] trains the m codebooks jointly
     * (exact integer training), codes are the per-subspace argmin ids,
-    * ADC is a SUM of 8 exact integer table lookups (query-to-centroid
-    * subspace distances — asymmetric distance computation on the L2
-    * grid, = cosine ordering on the unit-norm corpus), and the
-    * surviving `rerank` candidates re-rank by exact full-dimension
-    * integer L2. Same FAISS PQ plan shape as the float form: the
-    * corpus side of the ADC scan carries m 1-byte codes per vector,
-    * never the d floats, and the query's m×k distance table broadcasts.
+    * ADC is a SUM of m exact integer table lookups (query-to-centroid
+    * subspace distances — L2 ordering = cosine ordering on the
+    * unit-norm corpus), and the surviving `rerank` candidates re-rank by
+    * exact full-dimension integer L2.
+    *
+    * Why at 100 TB: the corpus side of the ADC scan carries m small
+    * codes per vector, never the d components, and the query's m×k
+    * distance table broadcasts; the full vectors are touched only for
+    * `rerank` rows per query (an equi-join on vec_id).
     */
   def pqTopKGridL2(e: org.apache.spark.sql.DataFrame, nQueries: Int = 5,
       topK: Int = 10, m: Int = 8, codebookSize: Int = 16, rerank: Int = 64,
@@ -793,12 +497,11 @@ object Scale {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** PQ ANN as a catalog query: 8 subspaces × 16 centroids over the
-    * 64-dim embeddings table (8 dims per subspace — the standard PQ
-    * sizing), 64-candidate exact re-rank. ORACLE-CHECKED since r7
-    * (training, codes, ADC lookups and re-rank all replay in DuckDB);
-    * the float [[pqTopK]] stays as the library API and ScaleSpec pins
-    * its recall@10 vs brute force.
+  /** q63: PQ ANN over the 64-dim embeddings table — 8 subspaces × 16
+    * centroids (8 dims per subspace, the standard PQ sizing),
+    * 64-candidate exact re-rank. ORACLE-CHECKED since r7 (training,
+    * codes, ADC lookups and re-rank all replay in DuckDB); ScaleSpec
+    * pins recall@10 vs brute force here and on planted clusters.
     */
   val q63: QueryDef = QueryDef.checked(
     "q63_ann_pq_topk",
@@ -841,174 +544,22 @@ object Scale {
     pqTopKGridL2(e)
   }
 
-  /** IVF-PQ: the composed production ANN (FAISS IndexIVFPQ) — the coarse
-    * quantizer buckets the corpus into inverted lists AND the per-vector
-    * payload is a PQ code of the RESIDUAL (v − its list centroid), so a
-    * query (a) prunes to nprobe lists and (b) scores candidates from
-    * m-byte codes via q·v ≈ q·c_list + Σⱼ q_subj · pqbookⱼ[codeⱼ]
-    * (the residual ADC identity — q·v = q·c + q·r decomposed by
-    * subspace), then (c) exactly re-ranks the survivors. Residual
+  /** IVF-PQ on the integer grid — the composed production ANN (FAISS
+    * IndexIVFPQ), ORACLE-CHECKABLE: the coarse quantizer buckets the
+    * corpus into inverted lists (the shared integer k-means,
+    * [[Similarity.kmeansFramesGv]]) AND the per-vector payload is a PQ
+    * code of the RESIDUAL x − c_list (integer centroids keep residuals
+    * on the grid), with the m residual codebooks from
+    * [[subspaceKmeans]]. A query (a) prunes to its nProbe nearest lists,
+    * (b) scores candidates by the residual ADC — a SUM of exact integer
+    * lookups keyed by (probed list, subspace, code), the decomposition
+    * d²(q,v) ≈ Σⱼ ||q_resid,j − bookⱼ[codeⱼ]||² — and (c) re-ranks the
+    * `rerank` survivors by exact full-dimension integer L2. Residual
     * encoding is what makes the composition better than either part:
-    * residuals are centered near zero, so the same 16-entry subspace
-    * codebooks quantize them far more finely than raw vectors.
-    *
-    * At 100 TB: list pruning cuts the candidate stream by
-    * nprobe/nlist, PQ cuts its WIDTH to m bytes, and the full vectors
-    * are touched only for `rerank` rows per query — the standard
-    * billion-scale serving memory/IO budget. Training stays
-    * driver-side on the seeded bounded sample (O(nlist·d + m·256·d/m)
-    * state), exactly the FAISS split.
-    */
-  /** Driver-trained IVF-PQ model: coarse centroids + per-subspace
-    * residual codebooks. Training is deterministic (seeded init, fixed
-    * iterations, step-sampled corpus), so re-training on the same
-    * corpus reproduces the model bit-for-bit — which is what lets the
-    * ENCODED corpus be persisted and reused across invocations while
-    * the model itself is cheaply recomputed.
-    */
-  private[operators] final case class IvfPqModel(
-      coarse: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      dim: Int, sub: Int, m: Int, codebookSize: Int) {
-    def coarseLit: org.apache.spark.sql.Column =
-      typedLit(coarse.map(_.toSeq).toSeq)
-    def centroidsSeq: Seq[(Long, Seq[Double])] = coarse.zipWithIndex
-      .map { case (cv, cid) => (cid.toLong, cv.toSeq) }.toSeq
-  }
-
-  private def withNormV(df: org.apache.spark.sql.DataFrame) = df
-    .withColumn("nrm", VF.norm(col("v")))
-    .withColumn("vn", transform(col("v"), x => x / col("nrm")))
-
-  private[graft] def trainIvfPq(
-      e: org.apache.spark.sql.DataFrame, nCentroids: Int, m: Int,
-      codebookSize: Int, sampleCap: Int): IvfPqModel = {
-    val sample = sampleVectors(e, sampleCap, normalize = true)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    // coarse codebook (spherical, as in ivfTopK) + sample residuals
-    val coarse = trainCodebook(sample, nCentroids)
-    def nearestCid(p: Array[Double]): Int = {
-      var best = 0; var bestDot = Double.NegativeInfinity; var c = 0
-      while (c < nCentroids) {
-        var dot = 0.0; var i = 0
-        while (i < dim) { dot += p(i) * coarse(c)(i); i += 1 }
-        if (dot > bestDot) { bestDot = dot; best = c }
-        c += 1
-      }
-      best
-    }
-    val residuals = sample.map { p =>
-      val cv = coarse(nearestCid(p))
-      Array.tabulate(dim)(i => p(i) - cv(i))
-    }
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      trainPqCodebook(residuals.map(_.slice(j * sub, (j + 1) * sub)),
-        codebookSize)
-    }
-    IvfPqModel(coarse, books, dim, sub, m, codebookSize)
-  }
-
-  /** Encode the corpus against a trained model: coarse-assign each
-    * vector, residual-encode to m small codes (argmin_c ||r − c||² ==
-    * argmax_c (r·c − ||c||²/2), the q63 identity, over the residual).
-    * This is the expensive build half (one full-corpus pass through a
-    * wide codegen argmax per subspace) — production persists its
-    * output as THE index, which is exactly what q197's memo does.
-    */
-  private[graft] def ivfPqEncode(
-      e: org.apache.spark.sql.DataFrame,
-      model: IvfPqModel): org.apache.spark.sql.DataFrame = {
-    import model._
-    def codeCol(j: Int): org.apache.spark.sql.Column = {
-      val subr = slice(col("res"), j * sub + 1, sub)
-      val scored = (0 until codebookSize).map { c =>
-        val cv = books(j)(c)
-        val half = cv.map(x => x * x).sum / 2.0
-        struct((VF.dot(subr, typedLit(cv.toSeq)) - lit(half)).as("s"),
-          lit(c).as("cid"))
-      }
-      element_at(array_sort(array(scored: _*)), -1).getField("cid")
-    }
-    withNormV(e)
-      .withColumn("ranked", nearestRanking(model.centroidsSeq, col("vn")))
-      .withColumn("cid", element_at(col("ranked"), -1).getField("cid"))
-      .withColumn("res",
-        zip_with(col("vn"),
-          element_at(model.coarseLit, col("cid").cast("int") + 1),
-          (a, b) => a - b))
-      .select(col("vec_id").as("neighbor_id") +: col("cid") +:
-        (0 until m).map(j => codeCol(j).as(s"c$j")): _*)
-  }
-
-  def ivfPqTopK(
-      e: org.apache.spark.sql.DataFrame, nQueries: Int = 5, topK: Int = 10,
-      nCentroids: Int = 16, nProbe: Int = 6, m: Int = 8,
-      codebookSize: Int = 16, rerank: Int = 128,
-      sampleCap: Int = 2048,
-      codesSource: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val model = trainIvfPq(e, nCentroids, m, codebookSize, sampleCap)
-    import model.{sub, books}
-    val coarseLit = model.coarseLit
-    val centroidsSeq = model.centroidsSeq
-    def withNorm(df: org.apache.spark.sql.DataFrame) = withNormV(df)
-    val codes = codesSource.getOrElse(ivfPqEncode(e, model))
-
-    // queries: probe the nProbe nearest lists
-    val queries = withNorm(e.filter(col("vec_id") < nQueries))
-      .withColumn("ranked", nearestRanking(centroidsSeq, col("vn")))
-      .select(col("vec_id").as("query_id"), col("vn").as("vq"),
-        explode(slice(col("ranked"), -nProbe, nProbe)).as("probe"))
-      .select(col("query_id"), col("vq"), col("probe.cid").as("cid"))
-
-    // residual ADC: q·c_list + Σ_j q_subj · pqbook_j[code_j]
-    val adcExpr = VF.dot(col("vq"),
-        element_at(coarseLit, col("cid").cast("int") + 1)) +
-      (0 until m).map { j =>
-        VF.dot(slice(col("vq"), j * sub + 1, sub),
-          element_at(typedLit(books(j).map(_.toSeq).toSeq), col(s"c$j") + 1))
-      }.reduce(_ + _)
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = broadcast(queries).join(codes, Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("adc", adcExpr)
-      .withColumn("crnk", row_number().over(wApprox))
-      .filter(col("crnk") <= rerank)
-      .select(col("query_id"), col("vq"), col("neighbor_id"))
-
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cand.join(withNorm(e).select(col("vec_id").as("neighbor_id"),
-        col("vn").as("vc")), "neighbor_id")
-      .withColumn("cs", VF.dot(col("vq"), col("vc")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cs"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** q197: IVF-PQ ANN over the embeddings table — 16 lists,
-    * 8×16 residual PQ, nprobe 6, 128-candidate exact re-rank (the
-    * double prune pays for wider probes). Rows-only (trained
-    * codebooks are engine-defined); ScaleSpec pins recall@10 vs brute
-    * force alongside the IVF (q47) and PQ (q63) parts, and pins the
-    * memoized-index path row-identical to the one-shot operator.
-    */
-  /** [[ivfPqTopK]] on the integer grid — ORACLE-CHECKABLE IVF-PQ: the
-    * coarse quantizer is the shared integer k-means
-    * ([[Similarity.kmeansFrames]]), residuals are exact integer
-    * differences x − c_list (integer centroids keep residuals on the
-    * grid), the m=8 residual codebooks come from [[subspaceKmeans]],
-    * and the residual ADC is a SUM of exact integer lookups keyed by
-    * (probed list, subspace, code) — the FAISS IndexIVFPQ decomposition
-    * d²(q,v) ≈ Σⱼ ||q_resid,j − bookⱼ[codeⱼ]||² with residuals centered
-    * near zero so the shared codebook quantizes finely. Candidates
-    * live only in the nProbe probed lists; the `rerank` survivors
-    * re-rank by exact full-dimension integer L2.
+    * residuals are centered near zero, so the same codebooks quantize
+    * them far more finely than raw vectors. At 100 TB list pruning cuts
+    * the candidate stream by nprobe/nlist, PQ cuts its width to m codes,
+    * and full vectors are touched only for the re-rank.
     */
   def ivfPqTopKGridL2(e: org.apache.spark.sql.DataFrame, nQueries: Int = 5,
       topK: Int = 10, nCentroids: Int = 16, nProbe: Int = 6, m: Int = 8,
@@ -1089,9 +640,8 @@ object Scale {
     * prune pays for wider probes). ORACLE-CHECKED since r7 (coarse
     * training, residuals, residual codebooks, probed ADC and re-rank
     * all replay in DuckDB — integer residuals make the whole
-    * composition exact); the float [[ivfPqTopK]] with its persisted
-    * encoded corpus stays as the library API, spec-pinned for recall
-    * and codes-reuse equality.
+    * composition exact); ScaleSpec pins recall@10 vs brute force here
+    * and on planted clusters.
     */
   val q197: QueryDef = QueryDef.checked(
     "q197_ann_ivfpq_topk",

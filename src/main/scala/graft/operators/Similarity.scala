@@ -265,61 +265,18 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** LSH-bucketed ANN (the scale path): independent random-hyperplane
-    * signature tables banded into 4-bit chunks; corpus vectors sharing
-    * any (band, chunk) with a query become candidates, then exact cosine
-    * ranks them. The cross join becomes an equi-join on (band, chunk) —
-    * at 100 TB this is the difference between infeasible and a shuffle.
-    * Two tables (seeds) lift recall@10 from ~0.62 to ~0.9 on this corpus
-    * while merely doubling candidates.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, dim: Int = 64,
-      topK: Int = 10, seeds: Seq[Long] = Seq(42L, 43L)): DataFrame = {
-    def banded(df: DataFrame): DataFrame = {
-      val withSigs = seeds.zipWithIndex.foldLeft(df) { case (acc, (seed, i)) =>
-        acc.withColumn(s"sig$i",
-          VF.lshSignature(col("v"), dim = dim, nBits = 32, seed = seed))
-      }
-      val bandCols = seeds.indices.flatMap(i =>
-        (0 until 8).map(j => shiftright(col(s"sig$i"), j * 4).bitwiseAND(lit(0xFL))))
-      withSigs.select(col("vec_id"), col("v"),
-          posexplode(array(bandCols: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-    }
-    val q = banded(queries)
-      .select(col("vec_id").as("query_id"), col("v").as("vq"),
-        col("band"), col("chunk"))
-    val c = banded(corpus)
-      .select(col("vec_id").as("neighbor_id"), col("v").as("vc"),
-        col("band"), col("chunk"))
-    val cand = q.join(c, Seq("band", "chunk"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("vq"), col("vc"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cand
-      .withColumn("cs", CosineSimilarity.cosineSim(col("vq"), col("vc")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("cs"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** Engine-portable sign-LSH ANN — the [[lshTopK]] pipeline made
+  /** Sign-LSH ANN (the scale path), engine-portable and
     * ORACLE-CHECKABLE: hyperplane weights are ±1 drawn from one md5 hex
     * digit of "table:plane:dim" (a pure, seedless function any engine
     * reproduces), vector components snap to the 1e-6 integer grid
     * (q160's proven idiom), so signature bits are signs of EXACT
     * integer dot products, banding is exact bit arithmetic, and the
     * re-rank is exact integer squared-L2 — on the unit-norm embeddings
-    * corpus L2 ordering IS cosine ordering (|a-b|^2 = 2 - 2cos). Same
-    * 100 TB shape as [[lshTopK]]: candidates come from an equi-join on
-    * (table, band, chunk) — never a cross join — and the exact re-rank
-    * touches candidates only; the plane table (tables x bits x dim
-    * rows) is broadcast. The float-cosine form stays the library API;
-    * this is the catalog/oracle face of the same operator.
+    * corpus L2 ordering IS cosine ordering (|a-b|^2 = 2 - 2cos).
+    * Candidates come from an equi-join on (table, band, chunk) — never
+    * a cross join; at 100 TB that is the difference between infeasible
+    * and a shuffle — and the exact re-rank touches candidates only; the
+    * plane table (tables x bits x dim rows) is broadcast.
     */
   def lshTopKGridL2(corpus: DataFrame, queries: DataFrame, dim: Int = 64,
       topK: Int = 10, nTables: Int = 2, nBits: Int = 32): DataFrame = {
@@ -408,12 +365,6 @@ object Similarity {
     assignArrays(gv, ce)
   }
 
-  /** The exploded-grid + trained-centroid frames behind
-    * [[kmeansAssign]], exposed so codebook consumers (IVF probing, a
-    * final assignment, list layouts) reuse ONE training pass: `ve` is
-    * (vec_id, i, x) grid components, `ce` the centroid table (cid, i, c)
-    * after `iterations` exact integer update rounds.
-    */
   /** (vec_id, i, x) grid components of a (vec_id, v) frame — 1-based
     * dims, 1e-6 snap; the shared explode behind training, assignment
     * and index builds.
@@ -424,16 +375,13 @@ object Similarity {
       .select(col("vec_id"), (col("i0") + 1).as("i"),
         expr("CAST(ROUND(x0 * 1000000) AS LONG)").as("x"))
 
-  private[operators] def kmeansFrames(vectors: DataFrame, k: Int,
-      iterations: Int): (DataFrame, DataFrame) = {
-    val (ve, _, ce) = kmeansFramesGv(vectors, k, iterations)
-    (ve, ce)
-  }
-
-  /** [[kmeansFrames]] + the checkpointed vector-ARRAY view `gv` (one
-    * row per vector), so callers that assign again after training
-    * ([[kmeansAssign]], the IVF/IVF-PQ builders) reuse it instead of
-    * re-grouping the exploded frame (r15). */
+  /** The frames behind [[kmeansAssign]], exposed so codebook consumers
+    * (IVF probing, a final assignment, list layouts) reuse ONE training
+    * pass: `ve` is (vec_id, i, x) grid components, `gv` the
+    * checkpointed vector-ARRAY view (one row per vector, so callers that
+    * assign again after training reuse it instead of re-grouping `ve`),
+    * `ce` the centroid table (cid, i, c) after `iterations` exact
+    * integer update rounds. */
   private[operators] def kmeansFramesGv(vectors: DataFrame, k: Int,
       iterations: Int): (DataFrame, DataFrame, DataFrame) = {
     // r16 (guide §2.4 — remove shuffles outright): the grid snap is
@@ -566,7 +514,7 @@ object Similarity {
     // vt = the training subset (q175 trains on the pre-cut corpus);
     // rounds fit the codebook on vt only, the final assignment CTE
     // (a{iters+1}) covers EVERY vector — identical to the Spark split
-    // between kmeansFrames(train) and gridAssign(full, ce)
+    // between kmeansFramesGv(train) and gridAssign(full, ce)
     s"""ve AS MATERIALIZED (
        |  SELECT vec_id, i, CAST(ROUND(v[i] * 1000000) AS BIGINT) AS x
        |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -667,49 +615,44 @@ object Similarity {
     lshTopKGridL2(e, e.filter(col("vec_id") < 5))
   }
 
-  /** Per-group embedding outliers: centroid per `label` (dimension-wise
-    * mean via posexplode + keyed partial aggregation — the only
-    * all-rows pass, map-side combined), then every vector's cosine to
-    * its own group centroid, bottom-`k` flagged. This is the
-    * embedding-space quality filter (mislabeled / off-topic / garbage
-    * vectors sit far from their group's centroid). The centroid frame
-    * is (groups × dims) rows — broadcast-sized at any corpus scale, so
-    * the scoring join never shuffles the embedding column.
-    *
-    * Rows-only: the mean's partial-aggregation order makes the
-    * centroid's low bits run-dependent (same class as q45 before its
-    * decimal fix, but here the value is intrinsically a double mean);
-    * SimilaritySpec pins planted outliers instead.
+  /** Per-group embedding outliers over (label, vec_id, v): vectors snap
+    * to the 1/1000 grid, the per-label centroid is the exact integer mean
+    * (sum div n — a float avg() is partition-order sensitive at the last
+    * ulp, so a cosine-to-mean score could not cross engines), and every
+    * vector's outlier score is its exact-integer squared L2 distance to
+    * its own group centroid; the top-`k` per label are flagged. This is
+    * the embedding-space quality filter (mislabeled / off-topic /
+    * garbage vectors sit far from their group's centroid). The centroid
+    * aggregate is the only all-rows pass (map-side combined), and its
+    * frame is (groups × dims) rows at any corpus scale. Returns
+    * (label, vec_id, rnk, d2).
     */
   def groupOutliers(vectors: DataFrame, k: Int = 5): DataFrame = {
-    val ex = vectors.select(col("label"), col("vec_id"), posexplode(col("v")))
+    val grid = vectors.select(col("label"), col("vec_id"),
+      expr("transform(v, x -> " +
+        "CAST(round(CAST(x AS DOUBLE) * 1000) AS LONG))").as("v"))
+    // persisted: ex feeds BOTH the centroid aggregate and the distance
+    // join (the simhash fps discipline); harness clears between queries
+    val ex = grid.select(col("label"), col("vec_id"), posexplode(col("v")))
       .withColumnRenamed("pos", "dim").withColumnRenamed("col", "x")
-    val centroids = ex.groupBy(col("label"), col("dim"))
-      .agg(avg(col("x")).as("c"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("cs"))
-      .select(col("label"),
-        transform(col("cs"), s => s.getField("c")).as("centroid"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cen = ex.groupBy(col("label"), col("dim"))
+      .agg(expr("sum(x) div count(1)").as("c"))
+    val d2 = ex.join(cen, Seq("label", "dim"))
+      .groupBy(col("label"), col("vec_id"))
+      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d2"))
     val w = Window.partitionBy(col("label"))
-      .orderBy(col("cs_sim").asc, col("vec_id"))
-    vectors.join(centroids, "label")
-      .withColumn("cs_sim", CosineSimilarity.cosineSim(col("v"), col("centroid")))
-      .withColumn("rnk", row_number().over(w))
+      .orderBy(col("d2").desc, col("vec_id"))
+    d2.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select(col("label"), col("vec_id"), col("rnk"),
-        round(col("cs_sim"), 6).as("cos_sim"))
+      .select(col("label"), col("vec_id"), col("rnk"), col("d2"))
       .orderBy(col("label"), col("rnk"))
   }
 
-  /** q69: top-5 farthest-from-centroid outliers per label — ORACLE-
-    * CHECKED via the q116 integer-grid discipline: vectors snap to the
-    * 1/1000 grid, the per-label centroid is the exact integer mean
-    * (sum div n — float avg() is partition-order sensitive at the last
-    * ulp, which is exactly why the cosine variant can't cross engines),
-    * and the outlier score is the exact-integer squared L2 distance.
-    * Everything DuckDB replays with one unnest + two keyed aggs + a
-    * window. The float-cosine [[groupOutliers]] stays as the library
-    * API (planted-outlier recovery spec).
+  /** q69: top-5 farthest-from-centroid outliers per label through
+    * [[groupOutliers]] — ORACLE-CHECKED via its integer-grid discipline
+    * (the q116 grid): DuckDB replays it with one unnest + two keyed aggs
+    * + a window. ScaleSpec pins planted-outlier recovery.
     */
   val q69: QueryDef = QueryDef.checked(
     "q69_embedding_outliers",
@@ -736,87 +679,35 @@ object Similarity {
       |      AS rnk
       |  FROM d) t
       |WHERE rnk <= 5 ORDER BY label, rnk""".stripMargin) { (s, d) =>
-    val grid = Tables.embeddings(s, d).select(col("label"), col("vec_id"),
-      expr("transform(embedding, x -> " +
-        "CAST(round(CAST(x AS DOUBLE) * 1000) AS LONG))").as("v"))
-    // persisted: ex feeds BOTH the centroid aggregate and the distance
-    // join (the simhash fps discipline); harness clears between queries
-    val ex = grid.select(col("label"), col("vec_id"), posexplode(col("v")))
-      .withColumnRenamed("pos", "dim").withColumnRenamed("col", "x")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cen = ex.groupBy(col("label"), col("dim"))
-      .agg(expr("sum(x) div count(1)").as("c"))
-    val d2 = ex.join(cen, Seq("label", "dim"))
-      .groupBy(col("label"), col("vec_id"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d2"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("d2").desc, col("vec_id"))
-    d2.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("label"), col("vec_id"), col("rnk"), col("d2"))
-      .orderBy(col("label"), col("rnk"))
+    groupOutliers(Tables.embeddings(s, d)
+      .select(col("label"), col("vec_id"), col("embedding").as("v")))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: k-means
     * the embedding space, then look for near-duplicates ONLY inside each
-    * cluster). The all-pairs O(n²) cosine join becomes an equi-join on
-    * the cluster id, bounding candidate pairs to Σ|cluster|² — with
-    * cluster count scaled so |cluster| stays bounded, the scale path for
-    * embedding dedup the way banded LSH is for MinHash. Codebook
-    * training reuses the IVF coarse quantizer (seeded spherical k-means
-    * on a bounded driver sample); assignment is a deterministic
-    * nearest-centroid argmax, so results are reproducible across runs.
+    * cluster) on the integer grid, ORACLE-CHECKABLE: clusters come from
+    * [[kmeansAssign]] (exact integer k-means, the q160 replay), and the
+    * within-cluster near-dup test is exact integer squared-L2
+    * `d2 <= threshold` on grid-snapped components. The all-pairs O(n²)
+    * join becomes an equi-join on the cluster id, bounding candidate
+    * pairs to Σ|cluster|² — with cluster count scaled so |cluster| stays
+    * bounded, the scale path for embedding dedup the way banded LSH is
+    * for MinHash; pair distances fold per-row over zipped grid arrays
+    * (no 64x explode in the hot path).
     *
-    * Keep-first semantics: any vector with a same-cluster neighbor of
-    * cosine ≥ `threshold` and a smaller vec_id is dropped — the same
-    * survivor rule as Dedup.exactNearDups, so the two dedup families
-    * compose. Near-identical vectors land in the same cluster (their
-    * centroid ranking is identical up to the perturbation), which is
-    * why recall on true duplicates stays high — SemDedupSpec pins ≥0.9
-    * on planted pairs and soundness (every drop is a real cosine-≥τ
-    * pair) on the catalog corpus.
+    * On the unit-norm corpus d2/1e12 = 2 - 2cos, so the default
+    * threshold 1_199_900_000_000 means cosine >= 0.40005 — deliberately
+    * INSIDE the cosine-0.4 boundary by more than the grid-snap error
+    * (<= 2*sqrt(64*d2)*1e-6 ~ 2.3e-5 at d2~2, plus ~2e-7 of norm
+    * slack), so every grid drop is also a true cosine-0.4 drop
+    * (SemDedupSpec's soundness subset). Keep-first semantics: any
+    * vector with a same-cluster neighbor within the threshold and a
+    * smaller vec_id is dropped — the survivor rule of
+    * Dedup.exactNearDups, so the two dedup families compose.
     *
     * Returns (vec_id, cid, keep). The assigned frame is persisted (it
     * feeds both self-join sides and the output); Verify/Bench clear the
     * cache between queries — same contract as minhashNearDups.
-    */
-  def semanticDedup(vectors: DataFrame, threshold: Double = 0.4,
-      nClusters: Int = 16, sampleCap: Int = 2048): DataFrame = {
-    val sample = Scale.sampleVectors(vectors, sampleCap)
-    val centroids = Scale.trainCodebook(sample, nClusters).zipWithIndex
-    val sims = centroids.map { case (cv, cid) =>
-      struct(CosineSimilarity.cosineSim(col("v"), typedLit(cv.toSeq)).as("sim"),
-        lit(cid.toLong).as("cid"))
-    }
-    val assigned = vectors
-      .withColumn("cid",
-        element_at(array_sort(array(sims.toIndexedSeq: _*)), -1).getField("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = assigned.select(col("cid"), col("vec_id").as("id_a"), col("v").as("va"))
-    val b = assigned.select(col("cid"), col("vec_id").as("id_b"), col("v").as("vb"))
-    val dropped = a.join(b, Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(CosineSimilarity.cosineSim(col("va"), col("vb")) >= threshold)
-      .select(col("id_b").as("vec_id")).distinct()
-      .withColumn("dup", lit(true))
-    assigned.join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid"), col("dup").isNull.as("keep"))
-  }
-
-  /** [[semanticDedup]] on the integer grid — the ORACLE-CHECKABLE form:
-    * clusters come from [[kmeansAssign]] (exact integer k-means, the
-    * q160 replay), and the within-cluster near-dup test is exact integer
-    * squared-L2 `d2 <= threshold` on grid-snapped components. On the
-    * unit-norm corpus d2/1e12 = 2 - 2cos, so the default threshold
-    * 1_199_900_000_000 means cosine >= 0.40005 — deliberately INSIDE the
-    * float-cosine 0.4 boundary by more than the grid-snap error
-    * (<= 2*sqrt(64*d2)*1e-6 ~ 2.3e-5 at d2~2, plus ~2e-7 of norm
-    * slack), so every grid drop is also a true cosine-0.4 drop
-    * (SemDedupSpec's soundness subset survives the grid). Same
-    * keep-first semantics and Σ|cluster|² candidate bound as the float
-    * form; the candidate join rides the cluster-id equi-join, and pair
-    * distances fold per-row over zipped grid arrays (no 64x explode in
-    * the hot path).
     */
   def semanticDedupGridL2(vectors: DataFrame,
       d2Threshold: Long = 1199900000000L, nClusters: Int = 16,
@@ -848,10 +739,8 @@ object Similarity {
     * clusters, grid-L2 threshold just inside the q31 cosine-0.4
     * boundary, so the drops are a cluster-restricted subset of the
     * q31 exact pair set. ORACLE-CHECKED since r7 (grid clusters + exact
-    * integer pair distances replay in DuckDB); the float-cosine
-    * [[semanticDedup]] stays as the library API and SemDedupSpec pins
-    * both (soundness subset on the corpus, planted recall on the float
-    * form).
+    * integer pair distances replay in DuckDB); SemDedupSpec pins the
+    * soundness subset on the corpus and planted-pair recall.
     */
   val q81: QueryDef = QueryDef.checked(
     "q81_semantic_dedup",
@@ -878,7 +767,7 @@ object Similarity {
     * near-boundary negatives that dominate the gradient signal. Exact
     * scan-and-rank form with the anchor set broadcast (anchors are the
     * small side by construction — a training batch, not the corpus);
-    * swap the join for [[lshTopK]]'s banded candidates when the anchor
+    * swap the join for [[lshTopKGridL2]]'s banded candidates when the anchor
     * set itself is corpus-sized. Inputs: (vec_id, label, v) frames.
     */
   def hardNegatives(corpus: DataFrame, anchors: DataFrame,
@@ -919,62 +808,23 @@ object Similarity {
   }
 
   /** Greedy maximal-marginal-relevance selection (Carbonell & Goldstein
-    * 1998): pick `k` vectors maximizing λ·sim(query, v) −
-    * (1−λ)·max sim(v, already-selected) — relevant AND mutually
-    * diverse, the eval-set / few-shot-pool construction that plain
-    * top-k (which happily returns k near-duplicates) cannot do.
+    * 1998) on an integer grid: pick `k` vectors maximizing
+    * λ·relevance − (1−λ)·redundancy — relevant AND mutually diverse, the
+    * eval-set / few-shot-pool construction that plain top-k (which
+    * happily returns k near-duplicates) cannot do. Input vectors are
+    * snapped to a 1/1000 grid by the caller; relevance is −d²(q, v),
+    * redundancy −min d²(v, selected), λ = 0.7 scaled ×10 so every score
+    * is an exact INTEGER (held in doubles: |score| < 2³¹ ≪ 2⁵³).
+    * Exactness is what lets a sequential greedy selection cross the
+    * DuckDB oracle: with float cosine a last-ulp tie at pick i reorders
+    * every later pick; on the grid both engines compare the same
+    * integers. Ties break on vec_id.
     *
     * Inherently sequential in k: each pick conditions the next. The
-    * loop runs k DRIVER-side argmax actions (bounded: k is a small
-    * constant, each action is one distributed scan returning ONE row —
-    * same bounded-collect class as the codebook training in Scale).
-    * The relevance column is computed once and persisted; per round the
-    * executors evaluate at most k codegen'd cosines per row (selected
-    * vectors inlined as literals — broadcast-by-construction). Ties
-    * break on vec_id, so selection is fully deterministic.
-    */
-  def mmrSelect(vectors: DataFrame, queryVec: Seq[Double], k: Int,
-      lambda: Double = 0.7): DataFrame = {
-    val sp = vectors.sparkSession
-    import sp.implicits._
-    val base = vectors
-      .withColumn("rel", CosineSimilarity.cosineSim(col("v"), typedLit(queryVec)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var selected = Vector.empty[(Long, Seq[Double], Double, Int)]
-    var exhausted = false
-    for (rank <- 1 to k if !exhausted) {
-      val div: org.apache.spark.sql.Column = selected.map(_._2) match {
-        case Seq() => lit(0.0)
-        case Seq(one) => CosineSimilarity.cosineSim(col("v"), typedLit(one))
-        case many =>
-          greatest(many.map(sv =>
-            CosineSimilarity.cosineSim(col("v"), typedLit(sv))): _*)
-      }
-      val top = base
-        .filter(!col("vec_id").isInCollection(selected.map(_._1)))
-        .withColumn("score", col("rel") * lambda - (lit(1.0) - lambda) * div)
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(1)
-        .select(col("vec_id"), col("v"), col("score"))
-        .collect()
-      // corpus smaller than k: return what exists instead of throwing
-      if (top.isEmpty) exhausted = true
-      else selected = selected :+ ((top.head.getLong(0),
-        top.head.getSeq[Double](1), top.head.getDouble(2), rank))
-    }
-    base.unpersist()
-    selected.map(t => (t._1, t._4, t._3)).toDF("vec_id", "rank", "score")
-  }
-
-  /** Integer-grid MMR (L2 metric): [[mmrSelect]]'s greedy structure with
-    * exact arithmetic — vectors snapped to a 1/1000 grid, relevance
-    * −d²(q, v), redundancy −min d²(v, selected), λ = 0.7 scaled ×10 so
-    * every score is an exact INTEGER (held in doubles: |score| < 2³¹ ≪
-    * 2⁵³). Exactness is what lets a sequential greedy selection cross
-    * the DuckDB oracle: with float cosine a last-ulp tie at pick i
-    * reorders every later pick; on the grid both engines compare the
-    * same integers. Same driver-bounded loop contract as [[mmrSelect]]
-    * (k collect(1) actions, selected vectors inlined as literals).
+    * loop runs k DRIVER-side top-1 actions (bounded: k is a small
+    * constant, each action is one distributed scan returning ONE row);
+    * the selected vectors are inlined as literals — broadcast by
+    * construction. A corpus smaller than k returns what exists.
     */
   def mmrSelectGridL2(grid: DataFrame, queryVec: Seq[Double],
       k: Int): DataFrame = {
@@ -1046,8 +896,8 @@ object Similarity {
     * columns, so selection ORDER and scores hash-match, not just
     * membership. The centroid snaps to the grid through integer
     * division (sum div n — truncation agrees across engines, the r6
-    * `div` finding). Float-cosine MMR stays available as [[mmrSelect]]
-    * (diversity pinned in ProfilingSpec).
+    * `div` finding). ProfilingSpec pins diversification on planted
+    * clusters.
     */
   val q116: QueryDef = QueryDef.checked(
     "q116_mmr_select",

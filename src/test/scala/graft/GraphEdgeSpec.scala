@@ -1,64 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{VectorFunctions => VF}
 import graft.operators.Graph
 
-/** Pins the q127 scale story (VERDICT r4 item #1): the LSH-banded edge
-  * source must reproduce the exact cosine edge set on the catalog
-  * corpus — the CurateSpec pattern (exact == candidate-based pair
-  * finder) applied to similarity-graph construction. Soundness is
-  * structural (candidates pass the exact cosine filter); equality here
-  * proves recall 1.0 at the catalog threshold with the default band
-  * parameters, so swapping the edge source cannot change any
-  * propagation result. Deterministic: signatures are seeded literals.
+/** The graph operators that run over arbitrary edge frames — k-core,
+  * coreness, k-truss, random walks, BFS distances and label
+  * propagation — each checked against a sequential reference on random
+  * and planted graphs.
   */
 class GraphEdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = TestSpark.Sf0001
-
-  private def vecs = Tables.embeddings(spark, sf)
-    .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-
-  private def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  test("cosineEdgesLsh == cosineEdgesExact at the catalog threshold") {
-    val exact = edgeSet(Graph.cosineEdgesExact(vecs, 0.3))
-    val lsh = edgeSet(Graph.cosineEdgesLsh(vecs, 0.3))
-    spark.catalog.clearCache()
-    assert(exact.nonEmpty, "catalog corpus must yield edges at 0.3")
-    val missed = exact -- lsh
-    val extra = lsh -- exact
-    assert(extra.isEmpty,
-      s"lsh edges must be a subset of exact (cosine post-filter): $extra")
-    assert(missed.isEmpty,
-      s"default bands must have recall 1.0 on this corpus; missed ${missed.size}: " +
-        missed.take(5).toString)
-  }
-
-  test("labelSpreadBySimilarity: lsh edge source == exact edge source") {
-    val e = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-        col("label"))
-    val seeds = e.filter(col("vec_id") < 100)
-      .select(col("vec_id").as("node"), col("label"))
-    val v = e.select(col("vec_id"), col("v"))
-    def result(es: (org.apache.spark.sql.DataFrame, Double) =>
-        org.apache.spark.sql.DataFrame): Map[Long, Option[Any]] =
-      Graph.labelSpreadBySimilarity(v, seeds, rounds = 2, threshold = 0.3,
-          edgeSource = es)
-        .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    val viaExact = result(Graph.cosineEdgesExact)
-    spark.catalog.clearCache()
-    val viaLsh = result(Graph.cosineEdgesLsh(_, _))
-    spark.catalog.clearCache()
-    assert(viaExact == viaLsh,
-      s"propagation must be identical under either edge source; diff keys: " +
-        viaExact.collect { case (k, x) if viaLsh.get(k) != Some(x) => k }.take(5))
-  }
 
   test("kCore: equals a sequential peeling reference on random graphs") {
     val s = spark

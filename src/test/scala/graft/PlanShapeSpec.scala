@@ -273,21 +273,6 @@ class PlanShapeSpec extends AnyFunSuite {
       s"canonicalized closure edges must hash-join against wedges:\n$plan")
   }
 
-  test("cosineEdgesLsh (q127 scale path) plans no nested-loop join") {
-    val df = graft.operators.Graph.cosineEdgesLsh(
-      Tables.embeddings(spark, sf).select(
-        org.apache.spark.sql.functions.col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(
-          org.apache.spark.sql.functions.col("embedding")).as("v")), 0.3)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"banded candidates must be a (band, chunk) equi-join:\n$plan")
-    assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
-      s"expected a hash/sort-merge join on (band, chunk):\n$plan")
-  }
-
   test("randomWalks keeps every step an equi-join: no nested loop, no fanout") {
     // randomWalks' final frame carries the FULL lineage (persists do
     // not truncate plans), so one assertion covers all steps: the

@@ -147,10 +147,11 @@ class ProfilingSpec extends AnyFunSuite {
   test("mmrSelect: diversifies across planted clusters where top-k collapses") {
     val s = spark
     import s.implicits._
-    // three orthogonal-ish clusters in 6d; cluster 0 is closest to the
-    // query, so pure relevance top-3 would take all of cluster 0
+    // three orthogonal-ish clusters in 6d on the 1/1000 grid; cluster 0
+    // is closest to the query, so pure relevance top-3 takes all of it
+    def grid(v: Seq[Double]): Seq[Double] = v.map(x => math.round(x * 1000).toDouble)
     def jitter(base: Array[Double], i: Int): Seq[Double] =
-      base.zipWithIndex.map { case (x, j) => x + 0.001 * ((i + j) % 3) }.toSeq
+      grid(base.zipWithIndex.map { case (x, j) => x + 0.001 * ((i + j) % 3) }.toSeq)
     val c0 = Array(1.0, 0.1, 0.0, 0.0, 0.0, 0.0)
     val c1 = Array(0.0, 0.0, 1.0, 0.1, 0.0, 0.0)
     val c2 = Array(0.0, 0.0, 0.0, 0.0, 1.0, 0.1)
@@ -158,16 +159,21 @@ class ProfilingSpec extends AnyFunSuite {
       (5 until 10).map(i => (i.toLong, jitter(c1, i))) ++
       (10 until 15).map(i => (i.toLong, jitter(c2, i)))
     val df = rows.toDF("vec_id", "v")
-    val query = Seq(1.0, 0.1, 0.3, 0.0, 0.3, 0.0) // leans to cluster 0
-    val sel = graft.operators.Similarity.mmrSelect(df, query, k = 3, lambda = 0.5)
+    val query = grid(Seq(1.0, 0.1, 0.6, 0.0, 0.6, 0.0)) // leans to cluster 0
+    def cluster(id: Long) = id / 5
+    val relevanceTop3 = rows.map { case (id, v) =>
+      (v.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum, id)
+    }.sorted.take(3).map(_._2)
+    assert(relevanceTop3.forall(cluster(_) == 0L),
+      s"relevance-only top-3 must collapse onto cluster 0: $relevanceTop3")
+    val sel = graft.operators.Similarity.mmrSelectGridL2(df, query, k = 3)
       .orderBy("rank").collect().map(_.getLong(0))
     spark.catalog.clearCache()
-    def cluster(id: Long) = id / 5
     assert(cluster(sel.head) == 0L, s"first pick must be the most relevant: ${sel.toSeq}")
     assert(sel.map(cluster).distinct.length == 3,
-      s"3 MMR picks at lambda=0.5 must cover all 3 clusters: ${sel.toSeq}")
+      s"3 MMR picks at lambda=0.7 must cover all 3 clusters: ${sel.toSeq}")
     // determinism: a second run selects the identical sequence
-    val sel2 = graft.operators.Similarity.mmrSelect(df, query, k = 3, lambda = 0.5)
+    val sel2 = graft.operators.Similarity.mmrSelectGridL2(df, query, k = 3)
       .orderBy("rank").collect().map(_.getLong(0))
     spark.catalog.clearCache()
     assert(sel.sameElements(sel2))
@@ -228,9 +234,9 @@ class ProfilingSpec extends AnyFunSuite {
   test("edge cases: mmrSelect exhausts gracefully, pageRank on empty graph is empty") {
     val s = spark
     import s.implicits._
-    val tiny = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "v")
+    val tiny = Seq((1L, Seq(1000.0, 0.0)), (2L, Seq(0.0, 1000.0))).toDF("vec_id", "v")
     val sel = graft.operators.Similarity
-      .mmrSelect(tiny, Seq(1.0, 0.0), k = 5).collect()
+      .mmrSelectGridL2(tiny, Seq(1000.0, 0.0), k = 5).collect()
     spark.catalog.clearCache()
     assert(sel.length == 2, s"k beyond corpus returns what exists: ${sel.length}")
     val empty = Seq.empty[(String, String)].toDF("src", "dst")

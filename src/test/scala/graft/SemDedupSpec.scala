@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Semantic dedup (q81): soundness on the catalog corpus (every drop is
   * a true cosine-≥τ pair with a smaller surviving id) and recall on a
   * planted fixture (near-identical vectors MUST be caught — they land in
-  * the same k-means cluster because their centroid rankings coincide up
-  * to the perturbation).
+  * the same k-means cluster because their centroid distances coincide
+  * up to the perturbation).
   */
 class SemDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -93,8 +93,9 @@ class SemDedupSpec extends AnyFunSuite {
     val rows: Seq[(Long, Seq[Double])] =
       base.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toSeq ++
         dups.zipWithIndex.map { case (v, i) => ((nBase + i).toLong, v.toSeq) }
-    val res = operators.Similarity
-      .semanticDedup(rows.toDF("vec_id", "v"), threshold = 0.95, nClusters = 8)
+    // d2 ≤ 1e11 on the 1e-6 grid of unit vectors is cosine ≥ 0.95
+    val res = operators.Similarity.semanticDedupGridL2(rows.toDF("vec_id", "v"),
+      d2Threshold = 100000000000L, nClusters = 8)
     val dropped = res.filter(!col("keep")).select("vec_id").collect()
       .map(_.getLong(0)).toSet
     spark.catalog.clearCache()
