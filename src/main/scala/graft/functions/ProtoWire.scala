@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets
 import graft.model._
 
 /** Hand-rolled protobuf wire-format codec for the Envelope message family.
@@ -23,141 +23,182 @@ import graft.model._
   */
 object ProtoWire {
 
-  // ---- primitive writers -------------------------------------------------
-
-  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    out.write(v.toInt & 0x7f)
-  }
+  // ---- writer ------------------------------------------------------------
 
   private def tag(field: Int, wireType: Int): Long = (field.toLong << 3) | wireType
 
-  private def writeVarintField(out: ByteArrayOutputStream, field: Int, v: Long): Unit = {
-    writeVarint(out, tag(field, 0)); writeVarint(out, v)
+  /** One record's bytes in one growable, unsynchronized array. A nested
+    * message gets a one-byte length slot that is filled in once its body
+    * is written; the body moves right only when its length needs more than
+    * one varint byte (bodies of 128 B and up). Each string is UTF-8
+    * encoded once and copied into its field.
+    */
+  private final class Writer(capacity: Int) {
+    private var buf = new Array[Byte](capacity)
+    private var pos = 0
+
+    private def ensure(n: Int): Unit =
+      if (pos + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, pos + n))
+
+    private def varint(v0: Long): Unit = {
+      ensure(10)
+      var v = v0
+      while ((v & ~0x7fL) != 0) {
+        buf(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1
+        v >>>= 7
+      }
+      buf(pos) = v.toByte; pos += 1
+    }
+
+    def varintField(field: Int, v: Long): Unit = { varint(tag(field, 0)); varint(v) }
+
+    def bytesField(field: Int, b: Array[Byte]): Unit = {
+      varint(tag(field, 2)); varint(b.length.toLong)
+      ensure(b.length)
+      System.arraycopy(b, 0, buf, pos, b.length); pos += b.length
+    }
+
+    def stringField(field: Int, s: String): Unit =
+      bytesField(field, s.getBytes(StandardCharsets.UTF_8))
+
+    def doubleField(field: Int, d: Double): Unit = {
+      varint(tag(field, 1))
+      ensure(8)
+      val bits = java.lang.Double.doubleToLongBits(d)
+      var i = 0
+      while (i < 8) { buf(pos) = (bits >>> (8 * i)).toByte; pos += 1; i += 1 }
+    }
+
+    /** Length-delimited field `field` holding `m` as written by `body`. */
+    def nested[A](field: Int, m: A)(body: (Writer, A) => Unit): Unit = {
+      varint(tag(field, 2))
+      ensure(1); pos += 1
+      val slot = pos - 1
+      body(this, m)
+      val len = pos - slot - 1
+      var extra = 0
+      var r = len >>> 7
+      while (r != 0) { extra += 1; r >>>= 7 }
+      if (extra > 0) {
+        ensure(extra)
+        System.arraycopy(buf, slot + 1, buf, slot + 1 + extra, len)
+      }
+      val end = pos + extra
+      pos = slot; varint(len.toLong); pos = end
+    }
+
+    def result(): Array[Byte] = java.util.Arrays.copyOf(buf, pos)
   }
 
-  private def writeBytesField(out: ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit = {
-    writeVarint(out, tag(field, 2)); writeVarint(out, b.length.toLong); out.write(b, 0, b.length)
+  private def encodeWith[A](capacity: Int, m: A)(body: (Writer, A) => Unit): Array[Byte] = {
+    val w = new Writer(capacity)
+    body(w, m)
+    w.result()
   }
 
-  private def writeStringField(out: ByteArrayOutputStream, field: Int, s: String): Unit =
-    writeBytesField(out, field, s.getBytes("UTF-8"))
+  // ---- message bodies ----------------------------------------------------
 
-  private def writeDoubleField(out: ByteArrayOutputStream, field: Int, d: Double): Unit = {
-    writeVarint(out, tag(field, 1))
-    val bits = java.lang.Double.doubleToLongBits(d)
-    var i = 0
-    while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
+  private def logMessage(w: Writer, m: LogMessage): Unit = {
+    w.bytesField(1, m.message)
+    w.varintField(2, Envelope.messageTypeCode(m.message_type).toLong)
+    w.varintField(3, m.timestamp)
+    m.app_id.foreach(w.stringField(4, _))
+    w.stringField(5, m.source_type)
+    w.stringField(6, m.source_instance)
   }
 
-  // ---- message encoders --------------------------------------------------
-
-  def encodeLogMessage(m: LogMessage): Array[Byte] = {
-    val out = new ByteArrayOutputStream(m.message.length + 64)
-    writeBytesField(out, 1, m.message)
-    writeVarintField(out, 2, Envelope.messageTypeCode(m.message_type).toLong)
-    writeVarintField(out, 3, m.timestamp)
-    m.app_id.foreach(writeStringField(out, 4, _))
-    writeStringField(out, 5, m.source_type)
-    writeStringField(out, 6, m.source_instance)
-    out.toByteArray
+  private def valueMetric(w: Writer, m: ValueMetric): Unit = {
+    w.stringField(1, m.name)
+    w.doubleField(2, m.value)
+    w.stringField(3, m.unit)
   }
 
-  def encodeValueMetric(m: ValueMetric): Array[Byte] = {
-    val out = new ByteArrayOutputStream(48)
-    writeStringField(out, 1, m.name)
-    writeDoubleField(out, 2, m.value)
-    writeStringField(out, 3, m.unit)
-    out.toByteArray
+  private def counterEvent(w: Writer, m: CounterEvent): Unit = {
+    w.stringField(1, m.name)
+    w.varintField(2, m.delta)
+    m.total.foreach(w.varintField(3, _))
   }
 
-  def encodeCounterEvent(m: CounterEvent): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    writeStringField(out, 1, m.name)
-    writeVarintField(out, 2, m.delta)
-    m.total.foreach(writeVarintField(out, 3, _))
-    out.toByteArray
-  }
-
-  def encodeError(m: ErrorEvent): Array[Byte] = {
-    val out = new ByteArrayOutputStream(48)
-    writeStringField(out, 1, m.source)
-    writeVarintField(out, 2, m.code.toLong)
-    writeStringField(out, 3, m.message)
-    out.toByteArray
+  private def error(w: Writer, m: ErrorEvent): Unit = {
+    w.stringField(1, m.source)
+    w.varintField(2, m.code.toLong)
+    w.stringField(3, m.message)
   }
 
   /** uuid.pb.go:24-28: low=1, high=2 (varint uint64 — Long bits pass
     * through the varint encoder unchanged, so negative Longs round-trip).
     */
-  def encodeUuid(u: Uuid): Array[Byte] = {
-    val out = new ByteArrayOutputStream(24)
-    writeVarintField(out, 1, u.low)
-    writeVarintField(out, 2, u.high)
-    out.toByteArray
+  private def uuid(w: Writer, u: Uuid): Unit = {
+    w.varintField(1, u.low)
+    w.varintField(2, u.high)
   }
 
   /** http.pb.go:218-234 field layout (note: no field 11; forwarded=15 is
     * `repeated string` — one length-delimited field per element).
     */
-  def encodeHttpStartStop(m: HttpStartStop): Array[Byte] = {
-    val out = new ByteArrayOutputStream(128)
-    writeVarintField(out, 1, m.startTimestamp)
-    writeVarintField(out, 2, m.stopTimestamp)
-    writeBytesField(out, 3, encodeUuid(m.requestId))
-    writeVarintField(out, 4, Envelope.peerTypeCode(m.peerType).toLong)
-    writeVarintField(out, 5, Envelope.methodCode(m.method).toLong)
-    writeStringField(out, 6, m.uri)
-    writeStringField(out, 7, m.remoteAddress)
-    writeStringField(out, 8, m.userAgent)
-    writeVarintField(out, 9, m.statusCode.toLong)
-    writeVarintField(out, 10, m.contentLength)
-    m.applicationId.foreach(u => writeBytesField(out, 12, encodeUuid(u)))
-    m.instanceIndex.foreach(i => writeVarintField(out, 13, i.toLong))
-    m.instanceId.foreach(writeStringField(out, 14, _))
-    m.forwarded.foreach(writeStringField(out, 15, _))
-    out.toByteArray
+  private def httpStartStop(w: Writer, m: HttpStartStop): Unit = {
+    w.varintField(1, m.startTimestamp)
+    w.varintField(2, m.stopTimestamp)
+    w.nested(3, m.requestId)(uuid)
+    w.varintField(4, Envelope.peerTypeCode(m.peerType).toLong)
+    w.varintField(5, Envelope.methodCode(m.method).toLong)
+    w.stringField(6, m.uri)
+    w.stringField(7, m.remoteAddress)
+    w.stringField(8, m.userAgent)
+    w.varintField(9, m.statusCode.toLong)
+    w.varintField(10, m.contentLength)
+    m.applicationId.foreach(w.nested(12, _)(uuid))
+    m.instanceIndex.foreach(i => w.varintField(13, i.toLong))
+    m.instanceId.foreach(w.stringField(14, _))
+    m.forwarded.foreach(w.stringField(15, _))
   }
 
-  def encodeContainerMetric(m: ContainerMetric): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    writeStringField(out, 1, m.applicationId)
-    writeVarintField(out, 2, m.instanceIndex.toLong)
-    writeDoubleField(out, 3, m.cpuPercentage)
-    writeVarintField(out, 4, m.memoryBytes)
-    writeVarintField(out, 5, m.diskBytes)
-    m.memoryBytesQuota.foreach(writeVarintField(out, 6, _))
-    m.diskBytesQuota.foreach(writeVarintField(out, 7, _))
-    out.toByteArray
+  private def containerMetric(w: Writer, m: ContainerMetric): Unit = {
+    w.stringField(1, m.applicationId)
+    w.varintField(2, m.instanceIndex.toLong)
+    w.doubleField(3, m.cpuPercentage)
+    w.varintField(4, m.memoryBytes)
+    w.varintField(5, m.diskBytes)
+    m.memoryBytesQuota.foreach(w.varintField(6, _))
+    m.diskBytesQuota.foreach(w.varintField(7, _))
   }
+
+  /** map<string,string> entry = nested {key=1, value=2}. */
+  private def tagEntry(w: Writer, kv: (String, String)): Unit = {
+    w.stringField(1, kv._1)
+    w.stringField(2, kv._2)
+  }
+
+  // ---- message encoders --------------------------------------------------
+
+  def encodeLogMessage(m: LogMessage): Array[Byte] =
+    encodeWith(m.message.length + 64, m)(logMessage)
+  def encodeValueMetric(m: ValueMetric): Array[Byte] = encodeWith(48, m)(valueMetric)
+  def encodeCounterEvent(m: CounterEvent): Array[Byte] = encodeWith(32, m)(counterEvent)
+  def encodeError(m: ErrorEvent): Array[Byte] = encodeWith(48, m)(error)
+  def encodeUuid(u: Uuid): Array[Byte] = encodeWith(24, u)(uuid)
+  def encodeHttpStartStop(m: HttpStartStop): Array[Byte] = encodeWith(128, m)(httpStartStop)
+  def encodeContainerMetric(m: ContainerMetric): Array[Byte] =
+    encodeWith(64, m)(containerMetric)
 
   def encode(e: Envelope): Array[Byte] = {
-    val out = new ByteArrayOutputStream(256)
-    writeStringField(out, 1, e.origin)
-    writeVarintField(out, 2, Envelope.eventTypeCode(e.eventType).toLong)
-    e.timestamp.foreach(writeVarintField(out, 6, _))
-    e.httpStartStop.foreach(m => writeBytesField(out, 7, encodeHttpStartStop(m)))
-    e.logMessage.foreach(m => writeBytesField(out, 8, encodeLogMessage(m)))
-    e.valueMetric.foreach(m => writeBytesField(out, 9, encodeValueMetric(m)))
-    e.counterEvent.foreach(m => writeBytesField(out, 10, encodeCounterEvent(m)))
-    e.error.foreach(m => writeBytesField(out, 11, encodeError(m)))
-    e.containerMetric.foreach(m => writeBytesField(out, 12, encodeContainerMetric(m)))
-    e.deployment.foreach(writeStringField(out, 13, _))
-    e.job.foreach(writeStringField(out, 14, _))
-    e.index.foreach(writeStringField(out, 15, _))
-    e.ip.foreach(writeStringField(out, 16, _))
-    // map<string,string> = repeated nested {key=1, value=2}
-    e.tags.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      val kv = new ByteArrayOutputStream(k.length + v.length + 8)
-      writeStringField(kv, 1, k)
-      writeStringField(kv, 2, v)
-      writeBytesField(out, 17, kv.toByteArray)
-    }
-    out.toByteArray
+    val w = new Writer(e.logMessage.fold(0)(_.message.length) + 128)
+    w.stringField(1, e.origin)
+    w.varintField(2, Envelope.eventTypeCode(e.eventType).toLong)
+    e.timestamp.foreach(w.varintField(6, _))
+    e.httpStartStop.foreach(w.nested(7, _)(httpStartStop))
+    e.logMessage.foreach(w.nested(8, _)(logMessage))
+    e.valueMetric.foreach(w.nested(9, _)(valueMetric))
+    e.counterEvent.foreach(w.nested(10, _)(counterEvent))
+    e.error.foreach(w.nested(11, _)(error))
+    e.containerMetric.foreach(w.nested(12, _)(containerMetric))
+    e.deployment.foreach(w.stringField(13, _))
+    e.job.foreach(w.stringField(14, _))
+    e.index.foreach(w.stringField(15, _))
+    e.ip.foreach(w.stringField(16, _))
+    if (e.tags.nonEmpty) e.tags.toSeq.sortBy(_._1).foreach(w.nested(17, _)(tagEntry))
+    w.result()
   }
 
   // ---- decoder -----------------------------------------------------------

@@ -147,8 +147,8 @@ object Layout {
     * only the dimension's partitions are read. This is the
     * star-schema-join capability that makes partitioned 100 TB fact
     * tables usable: without DPP every partition is scanned on every
-    * dim-filtered join. StorageLayoutSpec pins
-    * `dynamicpruningexpression` in the fact scan's PartitionFilters;
+    * dim-filtered join. StorageLayoutSpec pins that the executed fact
+    * scan reads fewer files than its static partition filters admit;
     * the oracle runs the equivalent join over the raw table (pruning
     * must be invisible to semantics).
     */

@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -360,7 +361,7 @@ private[sources] class TailMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[TailInputPartition]
-      new TailRangesReader(p.ranges, p.emitPartial)
+      new TailPartitionReader(p.ranges, p.emitPartial)
     }
 
   override def commit(end: Offset): Unit = ()
@@ -372,32 +373,16 @@ private[sources] case class TailInputPartition(ranges: Seq[TailRange],
     emitPartial: Boolean = false)
   extends InputPartition
 
-/** Walks a partition's ranges in order, one [[TailPartitionReader]] at a
-  * time, so a task holds at most one range in memory.
-  */
-private[sources] class TailRangesReader(ranges: Seq[TailRange], emitPartial: Boolean)
-    extends PartitionReader[InternalRow] {
-  private val pending = ranges.iterator
-  private var current: TailPartitionReader = _
-
-  override def next(): Boolean = {
-    while (current == null || !current.next()) {
-      if (!pending.hasNext) return false
-      close()
-      val r = pending.next()
-      current = new TailPartitionReader(r.path, r.start, r.end, emitPartial)
-    }
-    true
-  }
-
-  override def get(): InternalRow = current.get()
-
-  override def close(): Unit = if (current != null) current.close()
-}
-
-/** Reads one file's byte range, emitting complete `\n`-terminated lines
-  * (newline stripped, like Spark's text source; the envelope projection
-  * re-appends it).
+/** Reads a partition's per-file byte ranges in order, emitting complete
+  * `\n`-terminated lines (newline stripped, like Spark's text source; the
+  * envelope projection re-appends it).
+  *
+  * Memory: each range's bytes are read once into one array when the
+  * previous range is exhausted, and each line goes out as a `UTF8String`
+  * view into that array, through one reused row — no per-line copy. A
+  * task therefore holds one range's bytes and nothing per line. The views
+  * are safe because every row leaves the DSv2 scan through Spark's
+  * `UnsafeProjection`, which copies it.
   *
   * Line-fragment protocol: offsets advance to raw file sizes, so a batch
   * boundary can land mid-line. The rules that keep every line emitted
@@ -415,25 +400,26 @@ private[sources] class TailRangesReader(ranges: Seq[TailRange], emitPartial: Boo
   * line into two envelopes on an EOF race (main.go:238-245).
   *
   * `emitPartial` (the opt-in `emitEofPartial` option) reproduces the
-  * reference's byte-level behavior instead: no fragment adoption (the
-  * previous range already emitted its own trailing fragment) and the
-  * range's unterminated tail goes out as a line — so a line racing the
-  * reader CAN split into two emissions, which is precisely
-  * main.go:238-245's ReadString-at-EOF semantics. Parity is exact in the
-  * reference's own configuration (it reads to EOF every poll — no read
-  * caps); under this source's per-batch byte caps a capped range
-  * boundary acts as an EOF surrogate and may additionally split a line
-  * that was fully on disk — emitting is the only lossless choice, since
-  * parity mode never re-reads earlier bytes. Default stays the
-  * exactly-once-unsplit protocol above.
+  * reference's byte-level behavior instead, in the same loop with two
+  * differences: no fragment adoption (the previous range already emitted
+  * its own trailing fragment) and the range's unterminated tail goes out
+  * as a line — so a line racing the reader CAN split into two emissions,
+  * which is precisely main.go:238-245's ReadString-at-EOF semantics.
+  * Parity is exact in the reference's own configuration (it reads to EOF
+  * every poll — no read caps); under this source's per-batch byte caps a
+  * capped range boundary acts as an EOF surrogate and may additionally
+  * split a line that was fully on disk — emitting is the only lossless
+  * choice, since parity mode never re-reads earlier bytes. Default stays
+  * the exactly-once-unsplit protocol above.
   */
-private[sources] class TailPartitionReader(path: String, start: Long, end: Long,
+private[sources] class TailPartitionReader(ranges: Seq[TailRange],
     emitPartial: Boolean = false)
     extends PartitionReader[InternalRow] {
 
-  private val pathUtf8 = UTF8String.fromString(path)
-  private var lines: Iterator[Array[Byte]] = _
-  private var current: Array[Byte] = _
+  private val pending = ranges.iterator
+  private val row = new GenericInternalRow(2)
+  private var buf = Array.emptyByteArray // the current range's bytes
+  private var pos = 0 // first byte of the next line in `buf`
 
   /** Last '\n' in [floor, pos), or -1. Chunked backward scan — bounded
     * below by `floor` so a newline-free prefix cannot drag the scan (and
@@ -458,104 +444,62 @@ private[sources] class TailPartitionReader(path: String, start: Long, end: Long,
     -1L
   }
 
-  /** First '\n' in [from, to), or -1. Chunked forward scan. */
-  private def firstNewlineIn(f: RandomAccessFile, from: Long, to: Long): Long = {
-    val chunk = 64 * 1024
-    var lo = from
-    val buf = new Array[Byte](chunk)
-    while (lo < to) {
-      val n = math.min(chunk.toLong, to - lo).toInt
-      f.seek(lo)
-      f.readFully(buf, 0, n)
-      var i = 0
-      while (i < n) {
-        if (buf(i) == '\n') return lo + i
-        i += 1
-      }
-      lo += n
-    }
-    -1L
-  }
-
-  private def readRange(): Iterator[Array[Byte]] = {
+  /** Makes `r`'s bytes the current range: [start, end) clipped to the
+    * file's length, extended back over an adopted fragment.
+    */
+  private def load(r: TailRange): Unit = {
+    buf = Array.emptyByteArray
+    pos = 0
+    row.update(1, UTF8String.fromString(r.path))
     // the file can be unlinked (rotation) between offset planning on
     // the driver and this task running: a missing file is an EMPTY
     // range — the next trigger's absence/truncation machinery owns the
     // recovery — never a task failure that kills the whole query
-    val f = try new RandomAccessFile(path, "r") catch {
-      case _: java.io.FileNotFoundException => return Iterator.empty
+    val f = try new RandomAccessFile(r.path, "r") catch {
+      case _: java.io.FileNotFoundException => return
     }
     try {
-      val len = math.min(end, f.length())
-      if (len <= start) return Iterator.empty
-      if (emitPartial) {
-        // Reference-parity path: read exactly [start, len), split on
-        // newlines, emit every segment INCLUDING the unterminated tail.
-        f.seek(start)
-        val buf = new Array[Byte]((len - start).toInt)
-        f.readFully(buf)
-        val out = mutable.ArrayBuffer[Array[Byte]]()
-        var lineStart = 0
-        var i = 0
-        while (i < buf.length) {
-          if (buf(i) == '\n') {
-            out += util.Arrays.copyOfRange(buf, lineStart, i)
-            lineStart = i + 1
-          }
-          i += 1
-        }
-        if (lineStart < buf.length)
-          out += util.Arrays.copyOfRange(buf, lineStart, buf.length)
-        return out.iterator
-      }
+      val len = math.min(r.end, f.length())
+      if (len <= r.start) return
       // Adopt the fragment left by the previous range (see protocol
       // above) — but scan back at most ~MaxRangeBytes: a line whose start
       // lies further back than that cannot be materialized in one array
       // (String/Array are Int-indexed), so it is DROPPED and the read
       // resumes after its terminating newline. The -16 slack keeps
       // fragment + range strictly under Int.MaxValue.
-      val window = TailSource.MaxRangeBytes - 16
-      val effStart =
-        if (start == 0L) 0L
-        else {
-          val floor = math.max(0L, start - window)
-          val nl = lastNewlineBefore(f, start, floor)
-          if (nl >= 0) nl + 1
-          else if (floor == 0L) 0L
-          else {
-            val fw = firstNewlineIn(f, start, len)
-            if (fw < 0) return Iterator.empty // still inside the giant line
-            fw + 1
-          }
-        }
-      f.seek(effStart)
-      val buf = new Array[Byte]((len - effStart).toInt)
+      val adopt = !emitPartial && r.start > 0
+      val floor = math.max(0L, r.start - (TailSource.MaxRangeBytes - 16))
+      val nl = if (adopt) lastNewlineBefore(f, r.start, floor) else -1L
+      val giant = adopt && nl < 0 && floor > 0
+      val from = if (adopt && !giant) nl + 1 else r.start // nl + 1 = 0 at BOF
+      f.seek(from)
+      buf = new Array[Byte]((len - from).toInt)
       f.readFully(buf)
-      val out = mutable.ArrayBuffer[Array[Byte]]()
-      var lineStart = 0
-      var i = 0
-      while (i < buf.length) {
-        if (buf(i) == '\n') {
-          // only lines whose newline lies within [start, end) belong here;
-          // earlier newlines were emitted by the previous range
-          if (effStart + i >= start) {
-            out += util.Arrays.copyOfRange(buf, lineStart, i)
-          }
-          lineStart = i + 1
-        }
-        i += 1
+      if (giant) { // still inside the giant line: skip past its newline
+        while (pos < buf.length && buf(pos) != '\n') pos += 1
+        pos += 1
       }
-      out.iterator
     } finally f.close()
   }
 
   override def next(): Boolean = {
-    if (lines == null) lines = readRange()
-    if (lines.hasNext) { current = lines.next(); true } else false
+    while (true) {
+      var nl = pos
+      while (nl < buf.length && buf(nl) != '\n') nl += 1
+      // an unterminated tail is re-read by the range that sees its
+      // newline, except in parity mode, which emits it now
+      if (nl < buf.length || (emitPartial && pos < buf.length)) {
+        row.update(0, UTF8String.fromBytes(buf, pos, nl - pos))
+        pos = nl + 1
+        return true
+      }
+      if (!pending.hasNext) return false
+      load(pending.next())
+    }
+    false
   }
 
-  override def get(): InternalRow =
-    InternalRow(UTF8String.fromBytes(current), pathUtf8)
+  override def get(): InternalRow = row
 
   override def close(): Unit = ()
 }

@@ -221,4 +221,208 @@ class ProtoWireSpec extends AnyFunSuite {
     assert(back.origin === "o")
     assert(back.logMessage.get.timestamp === 5L)
   }
+
+  test("property: the encoder is byte-identical to the ByteArrayOutputStream encoder it replaced") {
+    val rnd = new scala.util.Random(20261019L)
+    val texts = Seq("", "a", "caf\u00e9", "\u65e5\u672c\u8a9e", "\ud83d\ude00 emoji",
+      "lone \ud800 high", "lone \udc00 low", "\udc00\ud800 reversed", "tab\tnul\u0000")
+    def str(max: Int): String = rnd.nextInt(4) match {
+      case 0 => texts(rnd.nextInt(texts.size))
+      case 1 => rnd.alphanumeric.take(rnd.nextInt(max)).mkString
+      case 2 => Seq.fill(rnd.nextInt(max))(texts(rnd.nextInt(texts.size))).mkString
+      case _ => new String(Array.fill(rnd.nextInt(max))(rnd.nextInt(0x10000).toChar))
+    }
+    def opt[A](a: => A): Option[A] = if (rnd.nextBoolean()) Some(a) else None
+    val longs = Seq(0L, 1L, -1L, 127L, 128L, Long.MinValue, Long.MaxValue, Int.MinValue.toLong)
+    def long(): Long = if (rnd.nextBoolean()) longs(rnd.nextInt(longs.size)) else rnd.nextLong()
+    def int(): Int = if (rnd.nextBoolean()) long().toInt else rnd.nextInt()
+    // 1-, 2- and 3-byte length prefixes, on the message field and on the
+    // LogMessage body that carries it
+    val sizes = Seq(0, 1, 127, 128, 16383, 16384, 64 * 1024, 70000)
+    def message(): Array[Byte] = {
+      val n = if (rnd.nextInt(3) == 0) sizes(rnd.nextInt(sizes.size)) else rnd.nextInt(200)
+      val b = new Array[Byte](n); rnd.nextBytes(b); b
+    }
+    def enumName(codes: Map[String, Int], prefix: String): String = rnd.nextInt(4) match {
+      case 0 => s"$prefix${-1 - rnd.nextInt(5)}" // e.g. PEER_TYPE_-3
+      case 1 => s"$prefix${100 + rnd.nextInt(1000)}"
+      case _ => codes.keys.toSeq.sorted.apply(rnd.nextInt(codes.size))
+    }
+    def uuid() = Uuid(long(), long())
+    def logMessage() = LogMessage(message(), enumName(Envelope.MessageTypeCodes, "MESSAGE_TYPE_"),
+      long(), opt(str(20)), str(8), str(40))
+    def http() = HttpStartStop(long(), long(), uuid(),
+      enumName(Envelope.PeerTypeCodes, "PEER_TYPE_"), enumName(Envelope.MethodCodes, "METHOD_"),
+      str(200), str(30), str(60), int(), long(), opt(uuid()), opt(int()), opt(str(12)),
+      Seq.fill(rnd.nextInt(4))(str(16)))
+    val eventTypes = Envelope.EventTypeCodes.keys.toSeq.sorted
+    def payload[A](et: String, own: String)(a: => A): Option[A] =
+      if (et == own || rnd.nextInt(10) == 0) Some(a) else None
+    (0 until 2000).foreach { i =>
+      val et = if (i % 50 == 49) s"EVENT_TYPE_${rnd.nextInt(100)}" else eventTypes(i % eventTypes.size)
+      val env = Envelope(
+        origin = str(12), eventType = et, timestamp = opt(long()),
+        deployment = opt(str(8)), job = opt(str(8)), index = opt(str(4)), ip = opt(str(15)),
+        tags = Seq.fill(rnd.nextInt(4))(str(6) -> str(10)).toMap,
+        httpStartStop = payload(et, "HttpStartStop")(http()),
+        logMessage = payload(et, "LogMessage")(logMessage()),
+        valueMetric = payload(et, "ValueMetric")(ValueMetric(str(8), rnd.nextDouble(), str(4))),
+        counterEvent = payload(et, "CounterEvent")(CounterEvent(str(8), long(), opt(long()))),
+        error = payload(et, "Error")(ErrorEvent(str(8), int(), str(300))),
+        containerMetric = payload(et, "ContainerMetric")(ContainerMetric(str(8), int(),
+          rnd.nextDouble(), long(), long(), opt(long()), opt(long()))))
+      def same(got: Array[Byte], want: Array[Byte], what: String): Unit =
+        assert(java.util.Arrays.equals(got, want), s"trial $i ($et): $what differs")
+      same(ProtoWire.encode(env), LegacyProtoWire.encode(env), "encode")
+      env.logMessage.foreach(m =>
+        same(ProtoWire.encodeLogMessage(m), LegacyProtoWire.encodeLogMessage(m), "encodeLogMessage"))
+      env.httpStartStop.foreach(m => same(ProtoWire.encodeHttpStartStop(m),
+        LegacyProtoWire.encodeHttpStartStop(m), "encodeHttpStartStop"))
+    }
+  }
+}
+
+/** Frozen oracle: the `ByteArrayOutputStream` encoder `ProtoWire` used
+  * before its single-buffer writer, kept verbatim so the property above
+  * pins the new writer's output byte for byte.
+  */
+private object LegacyProtoWire {
+  import java.io.ByteArrayOutputStream
+
+  // ---- primitive writers -------------------------------------------------
+
+  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
+    var v = v0
+    while ((v & ~0x7fL) != 0) {
+      out.write(((v & 0x7f) | 0x80).toInt)
+      v >>>= 7
+    }
+    out.write(v.toInt & 0x7f)
+  }
+
+  private def tag(field: Int, wireType: Int): Long = (field.toLong << 3) | wireType
+
+  private def writeVarintField(out: ByteArrayOutputStream, field: Int, v: Long): Unit = {
+    writeVarint(out, tag(field, 0)); writeVarint(out, v)
+  }
+
+  private def writeBytesField(out: ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit = {
+    writeVarint(out, tag(field, 2)); writeVarint(out, b.length.toLong); out.write(b, 0, b.length)
+  }
+
+  private def writeStringField(out: ByteArrayOutputStream, field: Int, s: String): Unit =
+    writeBytesField(out, field, s.getBytes("UTF-8"))
+
+  private def writeDoubleField(out: ByteArrayOutputStream, field: Int, d: Double): Unit = {
+    writeVarint(out, tag(field, 1))
+    val bits = java.lang.Double.doubleToLongBits(d)
+    var i = 0
+    while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
+  }
+
+  // ---- message encoders --------------------------------------------------
+
+  def encodeLogMessage(m: LogMessage): Array[Byte] = {
+    val out = new ByteArrayOutputStream(m.message.length + 64)
+    writeBytesField(out, 1, m.message)
+    writeVarintField(out, 2, Envelope.messageTypeCode(m.message_type).toLong)
+    writeVarintField(out, 3, m.timestamp)
+    m.app_id.foreach(writeStringField(out, 4, _))
+    writeStringField(out, 5, m.source_type)
+    writeStringField(out, 6, m.source_instance)
+    out.toByteArray
+  }
+
+  def encodeValueMetric(m: ValueMetric): Array[Byte] = {
+    val out = new ByteArrayOutputStream(48)
+    writeStringField(out, 1, m.name)
+    writeDoubleField(out, 2, m.value)
+    writeStringField(out, 3, m.unit)
+    out.toByteArray
+  }
+
+  def encodeCounterEvent(m: CounterEvent): Array[Byte] = {
+    val out = new ByteArrayOutputStream(32)
+    writeStringField(out, 1, m.name)
+    writeVarintField(out, 2, m.delta)
+    m.total.foreach(writeVarintField(out, 3, _))
+    out.toByteArray
+  }
+
+  def encodeError(m: ErrorEvent): Array[Byte] = {
+    val out = new ByteArrayOutputStream(48)
+    writeStringField(out, 1, m.source)
+    writeVarintField(out, 2, m.code.toLong)
+    writeStringField(out, 3, m.message)
+    out.toByteArray
+  }
+
+  /** uuid.pb.go:24-28: low=1, high=2 (varint uint64 — Long bits pass
+    * through the varint encoder unchanged, so negative Longs round-trip).
+    */
+  def encodeUuid(u: Uuid): Array[Byte] = {
+    val out = new ByteArrayOutputStream(24)
+    writeVarintField(out, 1, u.low)
+    writeVarintField(out, 2, u.high)
+    out.toByteArray
+  }
+
+  /** http.pb.go:218-234 field layout (note: no field 11; forwarded=15 is
+    * `repeated string` — one length-delimited field per element).
+    */
+  def encodeHttpStartStop(m: HttpStartStop): Array[Byte] = {
+    val out = new ByteArrayOutputStream(128)
+    writeVarintField(out, 1, m.startTimestamp)
+    writeVarintField(out, 2, m.stopTimestamp)
+    writeBytesField(out, 3, encodeUuid(m.requestId))
+    writeVarintField(out, 4, Envelope.peerTypeCode(m.peerType).toLong)
+    writeVarintField(out, 5, Envelope.methodCode(m.method).toLong)
+    writeStringField(out, 6, m.uri)
+    writeStringField(out, 7, m.remoteAddress)
+    writeStringField(out, 8, m.userAgent)
+    writeVarintField(out, 9, m.statusCode.toLong)
+    writeVarintField(out, 10, m.contentLength)
+    m.applicationId.foreach(u => writeBytesField(out, 12, encodeUuid(u)))
+    m.instanceIndex.foreach(i => writeVarintField(out, 13, i.toLong))
+    m.instanceId.foreach(writeStringField(out, 14, _))
+    m.forwarded.foreach(writeStringField(out, 15, _))
+    out.toByteArray
+  }
+
+  def encodeContainerMetric(m: ContainerMetric): Array[Byte] = {
+    val out = new ByteArrayOutputStream(64)
+    writeStringField(out, 1, m.applicationId)
+    writeVarintField(out, 2, m.instanceIndex.toLong)
+    writeDoubleField(out, 3, m.cpuPercentage)
+    writeVarintField(out, 4, m.memoryBytes)
+    writeVarintField(out, 5, m.diskBytes)
+    m.memoryBytesQuota.foreach(writeVarintField(out, 6, _))
+    m.diskBytesQuota.foreach(writeVarintField(out, 7, _))
+    out.toByteArray
+  }
+
+  def encode(e: Envelope): Array[Byte] = {
+    val out = new ByteArrayOutputStream(256)
+    writeStringField(out, 1, e.origin)
+    writeVarintField(out, 2, Envelope.eventTypeCode(e.eventType).toLong)
+    e.timestamp.foreach(writeVarintField(out, 6, _))
+    e.httpStartStop.foreach(m => writeBytesField(out, 7, encodeHttpStartStop(m)))
+    e.logMessage.foreach(m => writeBytesField(out, 8, encodeLogMessage(m)))
+    e.valueMetric.foreach(m => writeBytesField(out, 9, encodeValueMetric(m)))
+    e.counterEvent.foreach(m => writeBytesField(out, 10, encodeCounterEvent(m)))
+    e.error.foreach(m => writeBytesField(out, 11, encodeError(m)))
+    e.containerMetric.foreach(m => writeBytesField(out, 12, encodeContainerMetric(m)))
+    e.deployment.foreach(writeStringField(out, 13, _))
+    e.job.foreach(writeStringField(out, 14, _))
+    e.index.foreach(writeStringField(out, 15, _))
+    e.ip.foreach(writeStringField(out, 16, _))
+    // map<string,string> = repeated nested {key=1, value=2}
+    e.tags.toSeq.sortBy(_._1).foreach { case (k, v) =>
+      val kv = new ByteArrayOutputStream(k.length + v.length + 8)
+      writeStringField(kv, 1, k)
+      writeStringField(kv, 2, v)
+      writeBytesField(out, 17, kv.toByteArray)
+    }
+    out.toByteArray
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class StorageLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf0001
+  private object adaptive extends AdaptiveSparkPlanHelper
 
   test("partition pruning: event_type filter becomes PartitionFilters, not a row filter") {
     val dir = Files.createTempDirectory("graft-part").toString
@@ -45,12 +48,20 @@ class StorageLayoutSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q148_dynamic_partition_pruning")(spark, sf)
     val out = df.collect()
     assert(out.nonEmpty)
-    val plan = df.queryExecution.executedPlan.toString
-    // the FACT scan's PartitionFilters must contain a runtime subquery
-    // (dynamicpruningexpression), not a literal lang predicate — the
-    // whole point vs q89's static pruning
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"fact scan must be pruned by the dim join at runtime:\n$plan")
+    // the executed FACT scan (the one partitioned by lang) must read fewer
+    // files than its static partition filters admit: a runtime filter AQE
+    // dropped (`dynamicpruningexpression(true)`) prunes nothing
+    val plan = df.queryExecution.executedPlan
+    val factScans = adaptive.collect(plan) {
+      case f: FileSourceScanExec if f.relation.partitionSchema.fieldNames.contains("lang") => f
+    }
+    assert(factScans.size === 1, s"one fact scan:\n$plan")
+    val metrics = factScans.head.metrics
+    assert(metrics.contains("staticFilesNum"),
+      s"fact scan must carry a runtime partition filter:\n$plan")
+    val (read, static) = (metrics("numFiles").value, metrics("staticFilesNum").value)
+    assert(read < static,
+      s"fact scan read $read of $static files — pruned by the dim join at runtime:\n$plan")
     // and the pruned join's langs are a strict subset of all langs
     // (doc_id < 4 never covers every language at this SF)
     val allLangs = Tables.documents(spark, sf)

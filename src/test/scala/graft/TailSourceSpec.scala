@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardOpenOption}
+import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TailOffset
 
@@ -144,18 +147,32 @@ class TailSourceSpec extends AnyFunSuite {
     * lines) the source is EXACTLY-ONCE: the delivered multiset equals
     * the complete lines written. The strongest net over the offset
     * protocol — any committed-vs-read skew, fragment mishandling or
-    * starvation shows up as a diff.
+    * starvation shows up as a diff. Lines include empty ones (`\n\n`),
+    * multi-byte UTF-8 (which a cap boundary can cut mid-character) and
+    * `\r\n`-terminated ones whose `\r` must survive; with `giant`, every
+    * file written in rounds 3 and 9 also gets a ~99 kB line, which
+    * straddles several per-file cap boundaries.
+    * The reader hands out views into its range buffer through one reused
+    * row, so the executed plan must also copy them in a `ProjectExec`
+    * above the scan.
     */
-  test("property: random append-only workload delivers exactly-once") {
+  private def appendOnlyDeliversExactlyOnce(name: String, maxBytesPerFile: Int,
+      giant: Boolean = false): Unit = {
     val rnd = new scala.util.Random(20260812L)
     val root = Files.createTempDirectory("graft-tail")
     val q = startTail(root,
       extraOptions = Map(
-        "maxBytesPerFilePerBatch" -> "64",
+        "maxBytesPerFilePerBatch" -> maxBytesPerFile.toString,
         "maxFilesPerTrigger" -> "2"),
-      name = "tailprop")
+      name = name)
     val written = scala.collection.mutable.ArrayBuffer[String]()
     val partial = scala.collection.mutable.Map[java.nio.file.Path, String]()
+    def line(round: Int, i: Int): String = rnd.nextInt(6) match {
+      case 0 => ""
+      case 1 => s"u$round-$i-" + "\u00e9\u65e5\ud83d\ude00" * rnd.nextInt(4)
+      case 2 => s"w$round-$i-crlf\r"
+      case _ => s"r$round-$i-${rnd.alphanumeric.take(rnd.nextInt(30)).mkString}"
+    }
     try {
       (0 until 15).foreach { round =>
         (0 until 1 + rnd.nextInt(3)).foreach { _ =>
@@ -168,9 +185,14 @@ class TailSourceSpec extends AnyFunSuite {
             written += (head + tail)
           }
           (0 until rnd.nextInt(4)).foreach { i =>
-            val line = s"r$round-$i-${rnd.alphanumeric.take(rnd.nextInt(30)).mkString}"
-            sb.append(line).append('\n')
-            written += line
+            val l = line(round, i)
+            sb.append(l).append('\n')
+            written += l
+          }
+          if (giant && (round == 3 || round == 9)) {
+            val l = s"g$round-" + "\u00e9x" * 30000 + rnd.alphanumeric.take(9000).mkString
+            sb.append(l).append('\n')
+            written += l
           }
           if (rnd.nextBoolean()) { // leave a dangling partial line
             val head = s"p$round-"
@@ -182,10 +204,31 @@ class TailSourceSpec extends AnyFunSuite {
         }
         q.processAllAvailable()
       }
-      val delivered = rows("tailprop").map(_._1)
+      val delivered = rows(name).map(_._1)
       assert(delivered.sorted === written.sorted.toSeq,
         s"delivered ${delivered.size} vs written ${written.size}")
+      // the projection that copies each view sits above the scan
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case p: ProjectExec => p }
+        .exists(_.find(_.isInstanceOf[MicroBatchScanExec]).isDefined), plan.treeString)
     } finally q.stop()
+  }
+
+  test("property: random append-only workload delivers exactly-once") {
+    appendOnlyDeliversExactlyOnce("tailprop", maxBytesPerFile = 64)
+  }
+
+  test("property: lines over 64 KiB straddling the per-file cap arrive exactly once") {
+    appendOnlyDeliversExactlyOnce("tailpropgiant", maxBytesPerFile = 16 * 1024, giant = true)
+  }
+
+  test("property: exactly-once also holds through the interpreted (non-codegen) projection") {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      appendOnlyDeliversExactlyOnce("tailpropinterp", maxBytesPerFile = 64)
+      appendOnlyDeliversExactlyOnce("tailpropinterpgiant", maxBytesPerFile = 16 * 1024,
+        giant = true)
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("restart from checkpoint resumes mid-file: no loss, no duplicates") {
