@@ -2,17 +2,16 @@ package graft.examples
 
 import java.nio.file.{Files, StandardOpenOption}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.functions.ProtoWire
+import graft.pipeline.EnvelopePipeline
 import graft.streaming.FirehoseMetricsListener
 
 /** End-to-end demo of the reference pipeline re-expressed on Spark: the
-  * graft-tail DSv2 source follows growing log files, the envelope
-  * projection + ProtoWire serialization run as streaming transforms, and
-  * the graft-kinesis sink applies the K1–K7 producer semantics against
-  * a registered client (here: the default "accept" client, which
-  * acknowledges everything). Run:
+  * graft-tail DSv2 source follows growing log files, `EnvelopePipeline.
+  * forward` wraps each line in a LogMessage envelope keyed by its file's
+  * path and encodes it with ProtoWire, and the graft-kinesis sink applies
+  * the K1–K7 producer semantics against a registered client (here: the
+  * default "accept" client, which acknowledges everything). Run:
   *
   *   sbt "runMain graft.examples.TailPipelineDemo"
   */
@@ -26,7 +25,6 @@ object TailPipelineDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val watchRoot = Files.createTempDirectory("demo-logs")
     Files.createDirectories(watchRoot.resolve("svc"))
@@ -42,18 +40,8 @@ object TailPipelineDemo {
       .option("glob", "*.log")
       .load()
 
-    // P2/P3/P4 as streaming transforms (path column stands in for
-    // input_file_name, which custom sources don't populate)
-    val projected = lines.select(
-      lit("demo-node").as("origin"),
-      concat(col("value"), lit("\n")).cast("binary").as("message"),
-      (unix_micros(current_timestamp()) * 1000).as("ingest_ns"),
-      col("path").as("source_instance"))
-    val serialized = projected.as[(String, Array[Byte], Long, String)]
-      .map { case (origin, message, ns, path) =>
-        val env = graft.model.Envelope.forLogLine(origin, message, ns, path)
-        (ProtoWire.encode(env), path)
-      }.toDF("data", "partition_key")
+    // P1–P4: one LogMessage envelope per line, keyed by its file's path
+    val serialized = EnvelopePipeline.forward(lines, "demo-node")
 
     val query = serialized.writeStream.format("graft-kinesis")
       .option("checkpointLocation",

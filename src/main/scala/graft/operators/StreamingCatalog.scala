@@ -5,14 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming paths under the DRIVER oracle (VERDICT r4 item #5): the
-  * streaming surface (StreamingOps) was spec-only by design — the
-  * correctness gate runs batch-shaped `queries` entries. These catalog
-  * queries close that gap by running a REAL Structured Streaming
-  * pipeline (MemoryStream source → stateful operator → memory sink)
-  * to completion inside the query function and returning the sink
-  * table, so the driver's DuckDB hash compare certifies a streaming
-  * execution end to end.
+/** Streaming paths under the DRIVER oracle (VERDICT r4 item #5): each
+  * query runs a REAL Structured Streaming pipeline (MemoryStream source
+  * → stateful operator → memory sink) to completion inside the query
+  * function and returns the sink table, so the driver's DuckDB hash
+  * compare certifies a streaming execution end to end. The streaming
+  * operators are the few declarative lines inside these queries; no
+  * named wrapper is kept beside them.
   *
   * Determinism rules that make a streaming result oracle-comparable:
   *  - the input is a BOUNDED, deterministic slice of the events table
@@ -35,23 +34,13 @@ import org.apache.spark.sql.functions._
   * production sources are graft-tail / graft-kinesis-source, which
   * stream partition-local with no driver materialization).
   *
-  * CLOSED: streaming TTL dedup (StreamingOps.ttlDedup) cannot go under
-  * this oracle, and the infeasibility is structural, not an encoding
-  * gap. Two independent blockers: (1) the processor runs on
-  * TimeMode.ProcessingTime — whether a duplicate key is re-ADMITTED
-  * depends on wall-clock elapsed between triggers crossing the TTL, so
-  * the emitted set is not a function of (data, arrival order) and no
-  * deterministic SQL can replay it; choosing TTL ≫ run duration removes
-  * the race but collapses the semantics to q131's dropDuplicates (the
-  * TTL path would never execute — a certification of nothing), and
-  * TTL ≈ 0 re-admits everything, same problem mirrored. (2) A
-  * ProcessingTime query performs TTL maintenance every trigger and
-  * never goes idle, so processAllAvailable()/AvailableNow do not
-  * terminate (measured — see StreamingSpec's polling harness): the
-  * run-to-completion replay this catalog is built on cannot even END.
-  * The TTL semantics are certified by StreamingSpec's real-time polling
-  * spec (drop within TTL, re-admit after expiry) — the right tool for a
-  * wall-clock-coupled operator.
+  * Not in graft: streaming TTL dedup. TTL expiry runs on wall-clock
+  * time between triggers, so the emitted set is not a function of
+  * (data, arrival order) and no deterministic SQL can replay it; a
+  * ProcessingTime query also performs TTL maintenance every trigger and
+  * never goes idle, so the run-to-completion replay cannot end. q249's
+  * watermark-bounded dedup answers the event-time form of the question,
+  * as q135's session windows answer gap sessionization.
   */
 object StreamingCatalog {
 
@@ -764,9 +753,9 @@ object StreamingCatalog {
     * batch; monotone totals), but through `mapGroupsWithState` with a
     * user-defined state tuple (count, max-ts): the hand-rolled state
     * must agree with SQL exactly. Deterministic because both state
-    * folds are order-independent (sum, max) — the TtlDedupProcessor
-    * analysis (NOTES_r5) showed order-DEPENDENT processors cannot go
-    * under the oracle; this is the order-free representative of the
+    * folds are order-independent (sum, max) — the TTL-dedup analysis
+    * (NOTES_r5) showed order-DEPENDENT processors cannot go under the
+    * oracle; this is the order-free representative of the
     * q131/flatMapGroupsWithState family. No timeout, no watermark:
     * state lives for the query lifetime like q145.
     */
@@ -814,8 +803,8 @@ object StreamingCatalog {
     * discipline). One emission per (user, batch-with-data) in update
     * mode. TimeMode.None / TTLConfig.NONE: timers and TTL expiry are
     * wall-clock-dependent and cannot sit under a deterministic hash
-    * oracle — StreamingOps' TTL dedup + timer sessionization own that
-    * surface at spec level.
+    * oracle (see the object header). StreamingSpec pins the same
+    * processor on hand-computed batches.
     */
   private[graft] class TwsUserLedger
       extends org.apache.spark.sql.streaming.StatefulProcessor[

@@ -138,11 +138,10 @@ object TimeJoins {
   /** Batch gap sessionization: split each user's event stream into
     * sessions wherever the gap to the previous event exceeds
     * `gapSeconds`, then aggregate per session. The batch complement of
-    * `StreamingOps.sessionizeWithTimers` (and of builtin
-    * `session_window`) — one shuffle on user_id, one per-user sort,
-    * two window projections (lag → running sum of session-start
-    * flags), then the per-session aggregate reuses the same
-    * partitioning. Nothing quadratic, state bounded per user. Gap
+    * the builtin streaming `session_window` (q135) — one shuffle on
+    * user_id, one per-user sort, two window projections (lag → running
+    * sum of session-start flags), then the per-session aggregate reuses
+    * the same partitioning. Nothing quadratic, state bounded per user. Gap
     * arithmetic runs on the raw nanosecond epochs (`ts_ns`), not
     * second-truncated timestamps, so boundary events land identically
     * in both engines.

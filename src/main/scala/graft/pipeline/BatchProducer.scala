@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 /** Producer configuration — semantics and defaults match the reference's
@@ -115,8 +116,17 @@ final class BatchProducer(
     // indefinitely", batchproducer.go:347).
     val fullnessAtSend = fullnessPct
     val n = math.min(config.batchSize, buffer.size)
-    val batch = (0 until n).map(_ => buffer.dequeue()).toIndexedSeq
-    val result = client.putRecords(batch.map(_.rec))
+    // one pass over concretely typed arrays: Array.fill and Array.map
+    // would store each element through the generic ScalaRunTime.array_update
+    val batch = new Array[Pending](n)
+    val records = new Array[KinesisRecord](n)
+    var k = 0
+    while (k < n) {
+      batch(k) = buffer.dequeue()
+      records(k) = batch(k).rec
+      k += 1
+    }
+    val result = client.putRecords(ArraySeq.unsafeWrapArray(records))
 
     result.requestError match {
       case Some(_) =>

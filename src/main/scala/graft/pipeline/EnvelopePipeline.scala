@@ -1,33 +1,28 @@
 package graft.pipeline
 
 import graft.functions.ProtoWire
-import graft.model.{Envelope, LogMessage}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.model.Envelope
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The reference's data path (SURVEY.md §2.2, main.go:229-347) as a
-  * declarative Spark pipeline:
+/** The reference's data path (SURVEY.md §2.2, main.go:214-347) as one
+  * Spark transform over the graft-tail source:
   *
-  *   P1 line framing   → `text` source (one row per line; Spark strips the
-  *                       trailing newline, the projection re-appends it for
-  *                       byte-exact protobuf parity — main.go:231 keeps it).
-  *                       DELTA: Hadoop's line reader strips \r\n and lone
-  *                       \r too, so CRLF files re-frame as \n-terminated
-  *                       here; the graft-tail source splits on \n ONLY
-  *                       (keeping the \r in the payload) and is the
-  *                       byte-exact path for CRLF input.
-  *   P2 envelope proj  → narrow `select` / typed map (fused by codegen)
-  *   P3 proto encode   → ProtoWire in a typed map (no UDF-boxing per field)
-  *   P4 partition key  → source file path column (main.go:346)
-  *
-  * Batch and streaming share the same projection: the batch form reads
-  * `spark.read.text`, the streaming form `spark.readStream.text` — the plan
-  * below them is identical, which is the point of building on DataFrames.
+  *   P1 line framing   → graft-tail emits each complete `\n`-terminated
+  *                       line (a `\r` stays in the payload); the newline
+  *                       is re-appended for byte-exact protobuf parity
+  *                       (main.go:231 keeps it).
+  *   P2 envelope proj  → `Envelope.forLogLine` in one typed map
+  *   P3 proto encode   → `ProtoWire.encode` in the same map
+  *   P4 partition key  → graft-tail's `path` column (main.go:346)
   */
 object EnvelopePipeline {
 
   /** Reference config-string semantics for DIRS_TO_WATCH entries: split on
     * the FIRST `/**/` only (main.go:402, SplitN(dpath, "/**/", 2)). The
+    * pair is graft-tail's `path` and `glob` options: the source walks
+    * `path` recursively and matches `glob` against basenames, like the
+    * reference's filepath.Walk + filepath.Match (main.go:291-313). The
     * reference panics on patterns without `/**/` and tails "" for empty
     * entries; the engine validates instead (SURVEY.md §2.1 S5/S6).
     */
@@ -44,78 +39,24 @@ object EnvelopePipeline {
     }
   }
 
-  /** Reader options for a `root/**/glob` watch: Hadoop globs treat `**`
-    * as a single path segment, so the reference's recursive walk +
-    * basename match (filepath.Walk + filepath.Match(fglob, basename),
-    * main.go:291-313) maps to `recursiveFileLookup=true` +
-    * `pathGlobFilter=<glob>` — pathGlobFilter matches file names only,
-    * exactly like filepath.Match.
+  /** P1–P4: graft-tail's `(value, path)` lines → `(data, partition_key)`,
+    * the graft-kinesis sink's input, each line one LogMessage envelope
+    * keyed by its file's path. `ingest_ns` carries nanosecond ingest time
+    * like main.go:331; Spark has no nanosecond clock expression, so
+    * micros×1000 is the honest equivalent (documented delta: trailing 3
+    * zeros). Works on streaming and batch frames alike.
     */
-  val RecursiveLookup: Map[String, String] = Map("recursiveFileLookup" -> "true")
-
-  /** P2 + P4 as columnar expressions over a `value: STRING` line
-    * DataFrame (works identically on batch and streaming frames).
-    * `ingest_ns` carries nanosecond ingest time like main.go:331; Spark
-    * has no nanosecond clock expression, so micros×1000 is the honest
-    * equivalent (documented delta: trailing 3 zeros).
-    */
-  def project(lines: DataFrame, origin: String): DataFrame =
+  def forward(lines: DataFrame, origin: String): DataFrame = {
+    val spark = lines.sparkSession
+    import spark.implicits._
     lines.select(
-      lit(origin).as("origin"),
-      lit("LogMessage").as("event_type"),
-      concat(col("value"), lit("\n")).cast("binary").as("message"),
-      lit("OUT").as("message_type"),
-      (unix_micros(current_timestamp()) * 1000).as("ingest_ns"),
-      lit("bosh").as("source_type"),
-      input_file_name().as("source_instance"),
-      input_file_name().as("partition_key"))
-
-  /** Typed envelope rows from the projected frame. */
-  def toEnvelopes(projected: DataFrame)(implicit s: SparkSession): Dataset[Envelope] = {
-    import s.implicits._
-    projected.map { r =>
-      Envelope.forLogLine(
-        origin = r.getAs[String]("origin"),
-        line = r.getAs[Array[Byte]]("message"),
-        ingestNanos = r.getAs[Long]("ingest_ns"),
-        sourcePath = r.getAs[String]("source_instance"))
-    }
+        lit(origin).as("origin"),
+        concat(col("value"), lit("\n")).cast("binary").as("message"),
+        (unix_micros(current_timestamp()) * 1000).as("ingest_ns"),
+        col("path").as("source_instance"))
+      .as[(String, Array[Byte], Long, String)]
+      .map { case (o, message, ns, path) =>
+        (ProtoWire.encode(Envelope.forLogLine(o, message, ns, path)), path)
+      }.toDF("data", "partition_key")
   }
-
-  /** P3: serialize to wire bytes, keyed for the sink (K3's input shape). */
-  def serialize(envelopes: Dataset[Envelope])(implicit s: SparkSession): Dataset[(Array[Byte], String)] = {
-    import s.implicits._
-    envelopes.map { e =>
-      (ProtoWire.encode(e), e.logMessage.map(_.source_instance).getOrElse(""))
-    }
-  }
-
-  /** Full batch path: text files → envelopes → wire bytes + key. */
-  def batch(spark: SparkSession, paths: Seq[String], origin: String): Dataset[(Array[Byte], String)] = {
-    implicit val s: SparkSession = spark
-    serialize(toEnvelopes(project(spark.read.textFile(paths: _*).toDF("value"), origin)))
-  }
-
-  /** One implementation for both watch forms: the reader differs, the
-    * options (RecursiveLookup + basename glob) and projection are shared.
-    */
-  private def watch(load: (Map[String, String], String) => DataFrame,
-      pattern: String, origin: String): Option[DataFrame] =
-    parseWatchPattern(pattern).map { case (root, glob) =>
-      project(load(RecursiveLookup + ("pathGlobFilter" -> glob), root), origin)
-    }
-
-  /** Streaming source over a watch pattern (S3/S5 semantics): Spark's file
-    * source re-lists the glob every micro-batch — new files are discovered
-    * exactly like the reference's 60s WatchDir rescan, with the listing
-    * interval = trigger interval.
-    */
-  def stream(spark: SparkSession, pattern: String, origin: String): Option[DataFrame] =
-    watch((opts, root) => spark.readStream.format("text").options(opts)
-      .load(root).toDF("value"), pattern, origin)
-
-  /** Batch form of the same watch semantics (used by specs and backfills). */
-  def batchWatch(spark: SparkSession, pattern: String, origin: String): Option[DataFrame] =
-    watch((opts, root) => spark.read.format("text").options(opts)
-      .load(root).toDF("value"), pattern, origin)
 }

@@ -14,6 +14,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.{BatchProducer, KinesisClient, ProducerConfig, PutRecordsResult, RecordResult, KinesisRecord}
 
@@ -177,9 +178,21 @@ private[sources] class KinesisWriterFactory(
 
 private[sources] class KinesisDataWriter(producer: BatchProducer)
     extends DataWriter[InternalRow] {
+  // Every row of a file range carries the same path, so the key is
+  // decoded once per run of equal keys. The cached key is a clone: the
+  // row's buffer is reused for the next row, so a view would change
+  // under the cache.
+  private var lastKey: UTF8String = _
+  private var lastKeyString: String = _
 
-  override def write(row: InternalRow): Unit =
-    producer.add(row.getBinary(0), row.getUTF8String(1).toString)
+  override def write(row: InternalRow): Unit = {
+    val key = row.getUTF8String(1)
+    if (lastKey == null || !lastKey.equals(key)) {
+      lastKey = key.clone()
+      lastKeyString = lastKey.toString
+    }
+    producer.add(row.getBinary(0), lastKeyString)
+  }
 
   override def commit(): WriterCommitMessage = {
     // Bounded drain: a persistently failing client below the load-shed

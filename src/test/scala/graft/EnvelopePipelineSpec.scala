@@ -3,11 +3,15 @@ package graft
 import graft.functions.ProtoWire
 import graft.pipeline.{EnvelopePipeline => EP, KinesisClient, KinesisRecord, PutRecordsResult, RecordResult}
 import graft.sources.{KinesisClientRegistry, KinesisWriteSink}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+/** The forwarding job: graft-tail → `EnvelopePipeline.forward` → wire
+  * bytes keyed by the source file's path.
+  */
 class EnvelopePipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -21,6 +25,22 @@ class EnvelopePipelineSpec extends AnyFunSuite {
     root
   }
 
+  /** graft-tail over `root/**/*.log`, the unterminated `y` emitted too. */
+  private def tail(root: Path): DataFrame =
+    spark.readStream.format("graft-tail")
+      .option("path", root.toString).option("glob", "*.log")
+      .option("emitEofPartial", "true").load()
+
+  /** The (path, message) multiset the fixture must forward: every line
+    * of both .log files plus `\n`, keyed by its own file's path. */
+  private def expected(root: Path): Seq[(String, String)] = {
+    val a = root.resolve("a.log").toString
+    val b = root.resolve("sub/deep/b.log").toString
+    Seq((a, "l1\n"), (a, "l2\n"), (b, "x\n"), (b, "y\n")).sorted
+  }
+
+  private def ckpt(): String = Files.createTempDirectory("graft-forward-ckpt").toString
+
   test("watch pattern parses on the FIRST /**/ only (main.go:402 semantics)") {
     assert(EP.parseWatchPattern("/var/log/**/*.log") === Some(("/var/log", "*.log")))
     assert(EP.parseWatchPattern("/a/**/b/**/c.log") === Some(("/a", "b/**/c.log")))
@@ -28,42 +48,34 @@ class EnvelopePipelineSpec extends AnyFunSuite {
     assert(EP.parseWatchPattern("/var/log/x.log") === None) // no /**/ → invalid dir pattern
   }
 
-  test("recursive watch matches basenames only, at any depth") {
-    val root = writeFixture()
-    val df = EP.batchWatch(spark, s"$root/**/*.log", "test-origin").get
-    val rows = df.collect()
-    assert(rows.length === 4) // l1, l2, x, y — notlog.txt excluded
-    val sources = rows.map(_.getAs[String]("source_instance")).distinct.sorted
-    assert(sources.exists(_.endsWith("a.log")) && sources.exists(_.endsWith("b.log")))
-    assert(!sources.exists(_.endsWith("notlog.txt")))
-  }
-
   test("P2 projection: constants, partition key = source path, newline re-appended") {
     val root = writeFixture()
-    val df = EP.batchWatch(spark, s"$root/**/*.log", "inst-1").get
-    val rows = df.collect()
-    rows.foreach { row =>
-      assert(row.getAs[String]("origin") === "inst-1")
-      assert(row.getAs[String]("event_type") === "LogMessage")
-      assert(row.getAs[String]("message_type") === "OUT")
-      assert(row.getAs[String]("source_type") === "bosh")
-      assert(row.getAs[String]("partition_key") === row.getAs[String]("source_instance"))
-      val msg = new String(row.getAs[Array[Byte]]("message"), "UTF-8")
-      assert(msg.endsWith("\n")) // known delta: EOF-partial lines also get \n (SURVEY §7 risk b)
-      assert(row.getAs[Long]("ingest_ns") > 1000000000000000000L)
+    val q = EP.forward(tail(root), "inst-1")
+      .writeStream.format("memory").queryName("forward_p2")
+      .option("checkpointLocation", ckpt()).start()
+    val rows = try {
+      q.processAllAvailable()
+      spark.table("forward_p2").collect()
+        .map(r => (r.getAs[Array[Byte]]("data"), r.getAs[String]("partition_key")))
+    } finally q.stop()
+    val decoded = rows.toSeq.map { case (data, key) =>
+      val env = ProtoWire.decode(data)
+      val log = env.logMessage.get
+      assert(key.nonEmpty) // Kinesis accepts partition keys of 1–256 characters
+      assert(log.source_instance === key)
+      assert(env.origin === "inst-1")
+      assert(env.eventType === "LogMessage")
+      assert(log.message_type === "OUT")
+      assert(log.source_type === "bosh")
+      assert(log.timestamp > 1000000000000000000L)
+      (key, new String(log.message, UTF_8))
     }
-    val payloads = rows.map(r2 => new String(r2.getAs[Array[Byte]]("message"), "UTF-8")).sorted
-    assert(payloads === Seq("l1\n", "l2\n", "x\n", "y\n"))
+    // notlog.txt excluded; every line keyed by the file it came from
+    assert(decoded.sorted === expected(root))
   }
 
   test("end-to-end: files → envelopes → wire bytes → fake sink via Spark") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
     val root = writeFixture()
-    val serialized = EP.batch(spark,
-      Seq(root.resolve("a.log").toString, root.resolve("sub/deep/b.log").toString),
-      origin = "e2e")
     val captured = new ConcurrentLinkedQueue[KinesisRecord]()
     KinesisClientRegistry.register("envelope-e2e", () => new KinesisClient {
       override def putRecords(records: Seq[KinesisRecord]): PutRecordsResult = {
@@ -71,35 +83,26 @@ class EnvelopePipelineSpec extends AnyFunSuite {
         PutRecordsResult(None, Seq.fill(records.size)(RecordResult()))
       }
     })
-    val rows = serialized.collect()
-    val in = MemoryStream[(Array[Byte], String)]
-    val q = in.toDF().toDF("data", "partition_key")
+    val q = EP.forward(tail(root), "e2e")
       .writeStream.format("graft-kinesis")
       .option("client", "envelope-e2e")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-envelope-e2e").toString)
+      .option("checkpointLocation", ckpt())
       .start()
     try {
-      in.addData(rows.toSeq: _*)
       q.processAllAvailable()
       val sink = q.lastProgress.sink.metrics
       assert(sink.get(KinesisWriteSink.SentMetric) === "4")
       assert(sink.get(KinesisWriteSink.DroppedMetric) === "0")
     } finally q.stop()
-    // the delivered bytes are exactly the batch's, and decode back to
-    // valid envelopes keyed by their source path
+    // the delivered records decode back to envelopes keyed by their path
     val delivered = captured.toArray(Array.empty[KinesisRecord]).toSeq
-    assert(delivered.length === 4)
-    def wire(bytes: Array[Byte], key: String) =
-      (bytes.map("%02x".format(_)).mkString, key)
-    assert(delivered.map(r => wire(r.data, r.partitionKey)).sorted ===
-      rows.map { case (b, k) => wire(b, k) }.toSeq.sorted)
     val decoded = delivered.map { r =>
       val env = ProtoWire.decode(r.data)
+      assert(env.origin === "e2e")
       assert(env.eventType === "LogMessage")
       assert(env.logMessage.get.source_instance === r.partitionKey)
-      env
+      (r.partitionKey, new String(env.logMessage.get.message, UTF_8))
     }
-    assert(decoded.length === 4)
+    assert(decoded.sorted === expected(root))
   }
 }

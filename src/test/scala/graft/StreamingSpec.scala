@@ -12,30 +12,23 @@ class StreamingSpec extends AnyFunSuite {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
-  private def ev(id: Long, minute: Int, uid: Long, typ: String = "click", v: Double = 1.0) =
-    StreamEvent(id, ts(minute), uid, typ, v)
+  /** (event_id, ts, user_id, event_type, value), the `events` shape. */
+  private type Ev = (Long, Timestamp, Long, String, Double)
+  private val EvCols = Seq("event_id", "ts", "user_id", "event_type", "value")
 
-  test("tumbling window counts (complete mode over MemoryStream)") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.tumblingCounts(in.toDF())
-      .writeStream.format("memory").queryName("tumbling").outputMode("complete").start()
-    try {
-      in.addData(ev(1, 0, 1), ev(2, 5, 1), ev(3, 12, 2), ev(4, 19, 2))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM tumbling ORDER BY wstart").collect()
-      assert(rows.map(_.getAs[Long]("n")).toSeq === Seq(2L, 2L))
-    } finally q.stop()
-  }
+  private def ev(id: Long, minute: Int, uid: Long, typ: String = "click", v: Double = 1.0): Ev =
+    (id, ts(minute), uid, typ, v)
 
   test("watermark drops late rows in append mode") {
     implicit val s = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.tumblingCounts(in.toDF(), window_ = "10 minutes", watermark = "5 minutes")
+    val in = MemoryStream[Ev]
+    // q130's watermarked tumbling window, with a 5-minute watermark
+    val q = in.toDF().toDF(EvCols: _*)
+      .withWatermark("ts", "5 minutes")
+      .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName("wm").outputMode("append").start()
     try {
       in.addData(ev(1, 0, 1), ev(2, 5, 1))
@@ -52,93 +45,6 @@ class StreamingSpec extends AnyFunSuite {
       val total = spark.sql("SELECT sum(n) s FROM wm").collect().head.getLong(0)
       assert(total <= 3L) // rows 1,2 and possibly 3; late row 4 dropped
     } finally q.stop()
-  }
-
-  test("session windows with 30-minute gap") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.sessionCounts(in.toDF())
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      // user 1: events at 10:00,10:05 (one session), then 11:00 (new session)
-      in.addData(ev(1, 0, 1), ev(2, 5, 1))
-      q.processAllAvailable()
-      in.addData(StreamEvent(3, Timestamp.valueOf("2024-01-01 11:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // push watermark far ahead so both sessions finalize
-      in.addData(StreamEvent(4, Timestamp.valueOf("2024-01-01 15:00:00"), 2, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(StreamEvent(5, Timestamp.valueOf("2024-01-01 20:00:00"), 2, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT user_id, n FROM sess WHERE user_id = 1 ORDER BY sstart").collect()
-      assert(rows.map(_.getAs[Long]("n")).toSeq === Seq(2L, 1L))
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark removes dup event ids") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.dedupWithinWatermark(in.toDF())
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      in.addData(ev(1, 0, 1), ev(1, 1, 1), ev(2, 2, 1), ev(1, 3, 1))
-      q.processAllAvailable()
-      val n = spark.sql("SELECT count(*) c FROM dedup").collect().head.getLong(0)
-      assert(n === 2L) // event_ids 1 and 2
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState keeps per-user running totals across batches") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.statefulUserTotals(in.toDS())
-      .writeStream.format("memory").queryName("stateful").outputMode("append").start()
-    try {
-      in.addData(ev(1, 0, 7, v = 2.0), ev(2, 1, 7, v = 3.0))
-      q.processAllAvailable()
-      in.addData(ev(3, 2, 7, v = 5.0))
-      q.processAllAvailable()
-      val last = spark.sql(
-        "SELECT n_events, total_value FROM stateful WHERE user_id = 7 ORDER BY n_events DESC LIMIT 1")
-        .collect().head
-      assert(last.getLong(0) === 3L)
-      assert(last.getDouble(1) === 10.0)
-    } finally q.stop()
-  }
-
-  test("transformWithState (state v2, RocksDB) keeps per-user totals") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.statefulUserTotalsV2(in.toDS())
-      .writeStream.format("memory").queryName("statefulv2").outputMode("append").start()
-    try {
-      in.addData(ev(1, 0, 3, v = 1.5), ev(2, 1, 3, v = 2.5))
-      q.processAllAvailable()
-      in.addData(ev(3, 2, 3, v = 6.0))
-      q.processAllAvailable()
-      val last = spark.sql(
-        "SELECT n_events, total_value FROM statefulv2 WHERE user_id = 3 ORDER BY n_events DESC LIMIT 1")
-        .collect().head
-      assert(last.getLong(0) === 3L)
-      assert(last.getDouble(1) === 10.0)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("TwsUserLedger: hand-computed value/map/list state across batches") {
@@ -195,75 +101,13 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  // NOTE: a TimeMode.ProcessingTime query performs TTL maintenance on
-  // every trigger, so it NEVER goes idle: processAllAvailable() does not
-  // converge and even Trigger.AvailableNow does not terminate (both
-  // verified empirically). That matches production — such a query runs
-  // forever on a trigger interval — so the test polls the sink for the
-  // expected rows while the query runs, instead of waiting for an idle
-  // signal that never comes.
-  test("TTL'd dedup (state v2) drops within-TTL duplicates, re-admits after expiry") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def ids(table: String): Seq[Long] =
-      spark.sql(s"SELECT event_id FROM $table")
-        .collect().map(_.getLong(0)).toSeq.sorted
-    // poll until the sink holds exactly `want` ids (more would also stop
-    // the wait — the assert then reports the surplus)
-    def awaitIds(table: String, want: Seq[Long], timeoutMs: Long = 90000L): Unit = {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      while (ids(table).size < want.size && System.currentTimeMillis() < deadline)
-        Thread.sleep(200L)
-      // grace period to catch over-emission (a dup leaking through shows
-      // up as an EXTRA row shortly after the expected ones)
-      Thread.sleep(1500L)
-      assert(ids(table) === want)
-    }
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.dedupWithTtl(in.toDS(), ttlMillis = 600000L)
-      .writeStream.format("memory").queryName("ttldedup")
-      .outputMode("append").trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
-      in.addData(ev(1, 0, 1, v = 1.0), ev(1, 0, 1, v = 1.0), ev(2, 1, 2, v = 2.0))
-      awaitIds("ttldedup", Seq(1L, 2L))
-      in.addData(ev(1, 2, 1, v = 1.0), ev(3, 3, 3, v = 3.0)) // key 1 = dup
-      awaitIds("ttldedup", Seq(1L, 2L, 3L))
-      // expiry: with a short TTL, a key re-added after sleep >> ttl has
-      // expired state and must be re-admitted
-      val in2 = MemoryStream[StreamEvent]
-      val q2 = StreamingOps.dedupWithTtl(in2.toDS(), ttlMillis = 300L)
-        .writeStream.format("memory").queryName("ttldedup2")
-        .outputMode("append").trigger(Trigger.ProcessingTime("200 milliseconds"))
-        .start()
-      try {
-        in2.addData(ev(7, 0, 7, v = 1.0))
-        awaitIds("ttldedup2", Seq(7L))
-        Thread.sleep(2500L)
-        in2.addData(ev(7, 5, 7, v = 1.0))
-        awaitIds("ttldedup2", Seq(7L, 7L))
-      } finally q2.stop()
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("FirehoseMetricsListener exposes reference metric names from progress") {
     implicit val s = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     import s.implicits._
     val listener = new FirehoseMetricsListener("node-1")
     spark.streams.addListener(listener)
-    val in = MemoryStream[StreamEvent]
+    val in = MemoryStream[Ev]
     val q = in.toDF().writeStream.format("memory").queryName("mx").start()
     try {
       in.addData(ev(1, 0, 1), ev(2, 1, 1), ev(3, 2, 1))
@@ -278,58 +122,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); spark.streams.removeListener(listener) }
   }
 
-  test("stream-stream interval join matches views within the lookback only") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val all = in.toDF()
-    val q = StreamingOps.clickViewJoin(
-        all.filter(col("event_type") === "click"),
-        all.filter(col("event_type") === "view"))
-      .writeStream.format("memory").queryName("ssj").outputMode("append").start()
-    try {
-      in.addData(
-        ev(1, 0, 1, "view"),   // within 10 min of click@8 → match
-        ev(2, 30, 1, "view"),  // AFTER the click → no match
-        ev(3, 8, 1, "click"),
-        ev(4, 5, 2, "view"),   // other user's view
-        ev(5, 40, 2, "click")) // >10 min after view 4 → no match
-      q.processAllAvailable()
-      val got = spark.sql("SELECT click_id, view_id FROM ssj ORDER BY click_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(got === Seq((3L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming as-of join carries the last view across micro-batches") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.streamingAsOf(in.toDS())
-      .writeStream.format("memory").queryName("asof").outputMode("append").start()
-    try {
-      // batch 1: view(10) then click(11) for user 1; click(20) for user 2
-      // with no view yet → None
-      in.addData(ev(10, 0, 1, "view"), ev(11, 2, 1, "click"),
-        ev(20, 1, 2, "click"))
-      q.processAllAvailable()
-      // batch 2: user 1 clicks again (still matches view 10 from batch
-      // 1's state), then a newer view(12) and a click after it
-      in.addData(ev(13, 5, 1, "click"), ev(12, 7, 1, "view"),
-        ev(14, 9, 1, "click"))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT click_id, prev_view_id FROM asof ORDER BY click_id")
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-      assert(rows(11L) === Some(10L)) // same-batch view before click
-      assert(rows(20L) === None) // no view for user 2
-      assert(rows(13L) === Some(10L)) // state carried from batch 1
-      assert(rows(14L) === Some(12L)) // newer view supersedes within batch 2
-    } finally q.stop()
-  }
-
   test("A4: /metrics serves Prometheus exposition over HTTP (reference main.go:410-413)") {
     implicit val s = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -337,7 +129,7 @@ class StreamingSpec extends AnyFunSuite {
     val listener = new FirehoseMetricsListener("web/0")
     spark.streams.addListener(listener)
     val http = new MetricsHttpServer(() => listener.snapshot, port = 0)
-    val in = MemoryStream[StreamEvent]
+    val in = MemoryStream[Ev]
     val q = in.toDF().writeStream.format("memory").queryName("mxh").start()
     try {
       in.addData(ev(1, 0, 1), ev(2, 1, 1))
@@ -358,65 +150,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); http.close(); spark.streams.removeListener(listener) }
   }
 
-  test("timer sessionizer closes sessions when the watermark passes the gap") {
-    implicit val s = spark
-    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import s.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[StreamEvent]
-    val q = StreamingOps.sessionizeWithTimers(in.toDS(), gapMillis = 600000L)
-      .writeStream.format("memory").queryName("timersess")
-      .outputMode("append").start()
-    try {
-      // user 1: two events in one session; user 2: one event
-      in.addData(ev(1, 0, 1, v = 1.0), ev(2, 1, 1, v = 2.0), ev(3, 0, 2, v = 5.0))
-      q.processAllAvailable()
-      // nothing closed yet — watermark is still at 10:01 - 1s
-      assert(spark.sql("SELECT * FROM timersess").count() == 0L)
-      // an event 30 min later advances the watermark past both
-      // close timers (last + 10 min); timers fire on the NEXT batch
-      in.addData(ev(4, 30, 3))
-      q.processAllAvailable()
-      in.addData(ev(5, 31, 3))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM timersess ORDER BY user_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      assert(rows.toSeq == Seq((1L, 2L, 3.0, true), (2L, 1L, 5.0, true)),
-        s"both idle sessions closed exactly once: ${rows.toSeq}")
-      // user 9: two events 30 min apart in ONE batch — an event-time
-      // gap > 10 min must SPLIT them into two sessions (the
-      // session_window rule), not fold them into one accumulator
-      in.addData(ev(6, 60, 9, v = 1.0), ev(7, 90, 9, v = 2.0))
-      q.processAllAvailable()
-      in.addData(ev(8, 130, 3)) // advance watermark past both closes
-      q.processAllAvailable()
-      in.addData(ev(9, 131, 3)) // timers fire on the next batch
-      q.processAllAvailable()
-      val split = spark.sql(
-          "SELECT * FROM timersess WHERE user_id = 9 ORDER BY n_events")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      assert(split.toSeq == Seq((9L, 1L, 1.0, true), (9L, 1L, 2.0, true)),
-        s"a 30-min gap splits into two 1-event sessions: ${split.toSeq}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("idempotent sink end-to-end: a foreachBatch stream lands each batch exactly once") {
     implicit val s = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-idem-e2e").toString
-    val in = MemoryStream[StreamEvent]
+    val in = MemoryStream[Ev]
     val write = StreamingOps.idempotentBatchWriter(root)
-    val q = in.toDF().select(col("event_id"))
+    val q = in.toDF().toDF(EvCols: _*).select(col("event_id"))
       .writeStream.foreachBatch(write).start()
     try {
       in.addData(ev(1, 0, 1), ev(2, 1, 1))

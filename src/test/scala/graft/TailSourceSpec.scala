@@ -92,6 +92,23 @@ class TailSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** S5 (static file list): a `path` naming one file tails that file. */
+  test("path naming a single file tails that file and not its sibling") {
+    val root = Files.createTempDirectory("graft-tail")
+    val f = root.resolve("app.log")
+    val sibling = root.resolve("other.log")
+    Files.writeString(f, "one\n")
+    Files.writeString(sibling, "skip\n")
+    val q = startTail(f, name = "tailfile")
+    try {
+      q.processAllAvailable()
+      Files.writeString(f, "two\n", StandardOpenOption.APPEND)
+      Files.writeString(sibling, "skip too\n", StandardOpenOption.APPEND)
+      q.processAllAvailable()
+      assert(rows("tailfile") === Seq(("one", f.toString), ("two", f.toString)))
+    } finally q.stop()
+  }
+
   /** Regression for the committed-vs-read offset bug: the per-file byte
     * cap used to be applied in planInputPartitions while latestOffset
     * reported (and the engine committed) the uncapped file size — every
