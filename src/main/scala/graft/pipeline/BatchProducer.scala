@@ -66,7 +66,8 @@ final class BatchProducer(
 
   private final case class Pending(rec: KinesisRecord, attempts: Int)
 
-  private val buffer = mutable.Queue[Pending]()
+  // sized once: K1 keeps at most ~bufferSize records queued
+  private val buffer = new mutable.Queue[Pending](config.bufferSize)
   private var consecutiveErrors = 0
   private var sentCount = 0L
   private var droppedRecordCount = 0L
@@ -147,18 +148,18 @@ final class BatchProducer(
         }
       case None =>
         consecutiveErrors = 0
-        if (result.failedCount == 0) {
-          sentCount += batch.size
-        } else {
-          // K6: partial success — per-record retry-or-drop
-          val results = result.records
-          batch.zipWithIndex.foreach { case (p, i) =>
-            if (i < results.size && results(i).errorCode.nonEmpty) {
-              recordErrorCount += 1
-              if (p.attempts + 1 >= config.maxAttemptsPerRecord) droppedRecordCount += 1
-              else buffer.enqueue(Pending(p.rec, p.attempts + 1))
-            } else sentCount += 1
-          }
+        // K6: one pass over the results — each record is sent, or failed
+        // inside a partial success and retried or dropped
+        val results = result.records.iterator
+        var i = 0
+        while (i < n) {
+          val p = batch(i)
+          if (results.hasNext && results.next().errorCode.nonEmpty) {
+            recordErrorCount += 1
+            if (p.attempts + 1 >= config.maxAttemptsPerRecord) droppedRecordCount += 1
+            else buffer.enqueue(Pending(p.rec, p.attempts + 1))
+          } else sentCount += 1
+          i += 1
         }
     }
   }
