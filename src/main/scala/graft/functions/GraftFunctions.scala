@@ -9,10 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the same fused kernels the DataFrame API exposes through
   * [[CosineSimilarity.cosineSim]] / [[PolyHash]]:
   *
-  *  - as a session extension (`spark.sql.extensions=graft.GraftExtensions`
-  *    on a cluster, or `builder.withExtensions`), the cluster-wide
-  *    deployment path — every new session gets the functions with no
-  *    per-session code;
+  *  - as a session extension: [[graft.GraftExtensions]] is loaded through
+  *    its ServiceLoader entry (and by `spark.sql.extensions` or
+  *    `builder.withExtensions` where a deployment names it), so every new
+  *    session gets the functions with no per-session code;
   *  - or imperatively on an existing session via [[register]] (the
   *    notebook path, and q152's — Spark applies extension classes only
   *    at session INSTANTIATION, so an already-running session cannot

@@ -427,29 +427,37 @@ object Curation {
     // the pipeline's most expensive stage (the round-3 bench measured
     // the unmaterialized form at 2× its quiet cost). Doc-sized frames —
     // cheap to hold.
-    // r16 (guide §5/§3.3 plan truncation): a LAZY localCheckpoint
-    // replaces the lazy persist at each stage seam — blocks still
-    // materialize on first use exactly as the persist did. The composed plan
+    // r16 (guide §5/§3.3 plan truncation): a localCheckpoint at each
+    // stage seam. The composed plan
     // repeated each stage's subtree in every consumer (the pair
     // self-join alone references qual twice), so q75's explain grew to
     // 14k lines and Catalyst re-analysis became a real fraction of the
     // query; LogicalRDD seams make each stage's plan O(stage), the
     // same bytes end up in the block manager, and the work is
-    // identical — each stage was materialized exactly once before too.
+    // identical — each stage is materialized exactly once.
+    // The seams are EAGER. A lazy one is marked checkpointed by the
+    // first runJob that completes over it (a broadcast's collect),
+    // which drops the producing plan while AQE map stages submitted
+    // next to it still run tasks serialized with that plan's lineage;
+    // each such task then reports SQL metrics the driver has garbage-
+    // collected (`AccumulatorContext: Attempted to access garbage
+    // collected accumulator` + a DAGScheduler ERROR per metric: 286 log
+    // lines in one test run, all inside q75). Eager seams are marked
+    // inside their own action, before any consumer is planned.
     val qual = docs.join(
       TextAnalysis.gopherRules(docs).filter(col("keep")).select(col("doc_id")),
       "doc_id")
-      .localCheckpoint(false)
+      .localCheckpoint()
     val pairs = pairFinder(qual.select(col("doc_id"), col("text")))
     val deduped = qual.join(
       pairs.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint()
     val contam = Dedup.decontaminate(
       deduped.select(col("doc_id"), col("text")),
       benchmark.select(col("doc_id"), col("text")))
     val clean = deduped.join(
       contam.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint()
     (qual, deduped, clean, sequencePack(clean, budget))
   }
 
@@ -1708,9 +1716,9 @@ object Curation {
     // r16 round 2: ty/sub/ec are SEAMS consumed by several downstream
     // branches — as lazy persists the composed plan re-inlined each
     // subtree per consumer (a 48k-line q292 explain, mostly Catalyst
-    // re-analysis); as lazy localCheckpoints (the q75 curateStages
-    // treatment) the same bytes materialize exactly once and every
-    // consumer reads a LogicalRDD seam.
+    // re-analysis); as lazy localCheckpoints the same bytes
+    // materialize exactly once and every consumer reads a LogicalRDD
+    // seam.
     val ty = wordTypes(docs).localCheckpoint(false)
     val sub = ty.select(col("freq"), explode(expr(
         s"""flatten(transform(sequence(1, length(w)),

@@ -25,8 +25,8 @@ object Scalars {
   /** q152: the custom codegen expressions reached through PURE SQL —
     * [[graft.functions.GraftFunctions.register]] puts `cosine_sim`
     * (fused cosine Expression) into the session's function registry
-    * (the same descriptors `graft.GraftExtensions` injects cluster-wide
-    * via spark.sql.extensions), and the query text uses it
+    * (the same descriptors `graft.GraftExtensions` injects into every
+    * session through its ServiceLoader entry), and the query text uses it
     * like any builtin. The oracle recomputes the cosine with DuckDB
     * list arithmetic on the q129 ppm grid — so the compare certifies
     * the SQL surface AND the fused kernel's arithmetic in one shot.

@@ -83,17 +83,33 @@ object StreamingCatalog {
   private def slice(s: SparkSession, d: String): Seq[(Long, Long, String)] =
     sliceWithIds(s, d).map(t => (t._1, t._2, t._3))
 
+  /** No-data micro-batches in [[runToCompletion]]'s replays: off (see there). */
+  private val noDataBatches = false
+
+  /** Sentinel rounds that flush an `nSentinels`-deep stateful chain. With
+    * no-data batches off each sentinel is the only batch of its
+    * processAllAvailable, so the final watermark-apply step rides one
+    * more data-carrying batch: one round more than the chain depth. */
+  private def roundsFor(nSentinels: Int): Int =
+    nSentinels + (if (noDataBatches) 0 else 1)
+
   /** Run `build(stream)` to completion over the slice in BatchRows-sized
-    * micro-batches (+ sentinel), return the memory-sink table.
-    */
-  /** `nSentinels`: chained stateful operators advance the watermark one
+    * micro-batches (+ sentinel rounds), return the memory-sink table.
+    *
+    * `nSentinels`: chained stateful operators advance the watermark one
     * operator per BATCH (the sentinel batch updates the input
     * watermark; the downstream operator only sees the propagated value
     * a batch later), so an N-deep stateful chain needs N sentinel
     * rounds for the final windows to flush — each round is its own
-    * addData + processAllAvailable with a further-future timestamp.
-    */
-  /** `batchRows`: micro-batch size for the replay. Queries whose
+    * addData + processAllAvailable with a timestamp 1 h past the
+    * previous one. The replay pins no-data micro-batches off
+    * (`noDataBatches`), so [[roundsFor]] adds one more round. The last
+    * sentinel then lands at `sentinelTs + nSentinels` h, which moves the
+    * final watermark 1 h further than `nSentinels` rounds alone would.
+    * Size `sentinelLeadMinutes` so the lead alone covers a query's
+    * window, gap or TTL, without counting on that hour.
+    *
+    * `batchRows`: micro-batch size for the replay. Queries whose
     * ORACLE models per-batch structure (q147/q151 update-mode emission
     * counts, q240 observe, q244 watermark progression, q249 within-
     * watermark thinning — all via `rn // $BatchRows`) must stay on the
@@ -116,14 +132,14 @@ object StreamingCatalog {
     // (r15, guide §1/§2: measured on q252 — HALF the micro-batches were
     // empty watermark-apply batches at ~0.7 s of fixed machinery each).
     // Emission then rides the NEXT data batch, so one extra sentinel
-    // round below replaces the trailing no-data flush; the emitted SET
+    // round (roundsFor) replaces the trailing no-data flush; the emitted SET
     // is unchanged (oracle hash-certified at both sfs for all 19
     // queries through this harness). q229/q249 keep their own harnesses
     // on the default: q249's oracle models no-data-batch eviction
     // timing, and q229's restart replays are watermark-cadence-pinned.
     val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val priorNoData = s.conf.getOption(noData)
-    s.conf.set(noData, "false")
+    s.conf.set(noData, noDataBatches.toString)
     try {
     val rows = slice(s, d)
     val maxTs = rows.iterator.map(_._1).max
@@ -150,10 +166,7 @@ object StreamingCatalog {
         in.addData(chunk: _*)
         q.processAllAvailable()
       }
-      // +1 round vs the no-data-batch world: each sentinel is now the
-      // only batch of its processAllAvailable, so the final
-      // watermark-apply step needs one more data-carrying batch
-      (1 to nSentinels + 1).foreach { k =>
+      (1 to roundsFor(nSentinels)).foreach { k =>
         in.addData((sentinelTs + (k - 1) * 3600000000L, -1L, Sentinel))
         q.processAllAvailable()
       }

@@ -44,7 +44,12 @@ object EnvelopePipeline {
     * keyed by its file's path. `ingest_ns` carries nanosecond ingest time
     * like main.go:331; Spark has no nanosecond clock expression, so
     * micros×1000 is the honest equivalent (documented delta: trailing 3
-    * zeros). Works on streaming and batch frames alike.
+    * zeros). On a stream that time is the micro-batch's timestamp
+    * (`batchTimestampMs` in the checkpoint's `offsets/<n>`), the same for
+    * every line of a batch. [[graft.GraftExtensions]]' optimizer rule
+    * ([[graft.functions.BatchTimestampInProject]]) keeps it out of the
+    * generated code, so the plan compiles once and not on every trigger.
+    * Works on streaming and batch frames alike.
     */
   def forward(lines: DataFrame, origin: String): DataFrame = {
     val spark = lines.sparkSession

@@ -52,7 +52,8 @@ class ExtendedSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers graft_cosine via spark.sql.extensions") {
-    // TestSpark's session is built with spark.sql.extensions=GraftExtensions,
+    // GraftExtensions reaches TestSpark's session through its ServiceLoader
+    // entry (a deployment's spark.sql.extensions applies the same class),
     // so the function must resolve through plain SQL with no manual
     // registration call.
     Tables.embeddings(spark, sf).limit(3).createOrReplaceTempView("e3")

@@ -3,10 +3,17 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CosineSimilarity, GraftFunctions, NfcNormalize,
-  PolyHash, VectorFunctions => VF}
+import graft.functions.{BatchTimestampExpr, BatchTimestampInProject, CosineSimilarity,
+  GraftFunctions, NfcNormalize, PolyHash, VectorFunctions => VF}
+import org.apache.spark.sql.catalyst.expressions.{Alias, CurrentBatchTimestamp, GreaterThan,
+  Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, OneRowRelation, Project}
+import org.apache.spark.sql.types.TimestampType
 
-/** The SQL function surface (GraftFunctions.register / GraftExtensions): the
+/** The session-extension surface. GraftExtensions loads through its
+  * ServiceLoader entry and installs the batch-timestamp optimizer rule
+  * next to the SQL functions. The SQL function surface
+  * (GraftFunctions.register / GraftExtensions): the
   * registered `cosine_sim` and `poly_hash` SQL functions must be the
   * SAME expressions the DataFrame API builds — pinned by exact equality
   * of results on real data (cosine is float: bit equality holds because
@@ -81,6 +88,54 @@ class ExtensionsSpec extends AnyFunSuite {
       Set("cosine_sim", "poly_hash", "nfc_normalize",
         "graft_cosine", "graft_polyhash"))
     assert(collected.toSeq == GraftFunctions.descriptors)
+  }
+
+  /** The optimizer of `s`, and how often it holds the batch-timestamp rule. */
+  private def ruleCount(s: org.apache.spark.sql.SparkSession): Int =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.optimizer
+      .extendedOperatorOptimizationRules.count(_ eq BatchTimestampInProject)
+
+  /** A streaming projection of `current_timestamp()` under a Filter on
+    * it, as IncrementalExecution hands it to the optimizer. */
+  private def batchPlan(s: org.apache.spark.sql.SparkSession) = {
+    val ts = CurrentBatchTimestamp(1792460882829L, TimestampType, Some("UTC"))
+    val plan = Project(Seq(Alias(ts, "t")()),
+      Filter(GreaterThan(ts, Literal(0L, TimestampType)), OneRowRelation()))
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.optimizer
+      .execute(plan)
+  }
+
+  test("without spark.sql.extensions the ServiceLoader entry installs functions and rule") {
+    val s = spark
+    assert(!s.sparkContext.getConf.contains("spark.sql.extensions"))
+    assert(ruleCount(s) === 1)
+    Tables.embeddings(s, sf).limit(2).createOrReplaceTempView("ext_sl")
+    assert(s.sql("SELECT graft_cosine(embedding, embedding) FROM ext_sl").count() === 2L)
+    s.catalog.dropTempView("ext_sl")
+    val optimized = batchPlan(s)
+    // the projection reads the batch's value by reference, the filter keeps
+    // Spark's CurrentBatchTimestamp (IncrementalExecution makes it a literal)
+    val Project(Seq(Alias(BatchTimestampExpr(v, TimestampType), "t")), f: Filter) = optimized
+    assert(v === 1792460882829000L)
+    assert(f.condition.find(_.isInstanceOf[CurrentBatchTimestamp]).isDefined)
+  }
+
+  test("applying the extension twice (ServiceLoader plus an explicit one) is harmless") {
+    // spark.sql.extensions is static conf of the shared SparkContext, so a
+    // second session adds the explicit application through withExtensions,
+    // which runs the same GraftExtensions.apply on the session's extensions
+    val twice = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    try {
+      assert(ruleCount(twice) === 2)
+      Tables.embeddings(twice, sf).limit(2).createOrReplaceTempView("ext_twice")
+      assert(twice.sql("SELECT graft_cosine(embedding, embedding) FROM ext_twice")
+        .count() === 2L)
+      assert(batchPlan(twice).canonicalized === batchPlan(spark).canonicalized)
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
   }
 
   test("nfc_normalize: ASCII identity fast path, recomposition, SQL==API") {

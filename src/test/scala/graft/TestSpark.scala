@@ -2,14 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole (forked) test JVM. */
+/** One shared local session for the whole (forked) test JVM. It sets no
+  * `spark.sql.extensions`: graft.GraftExtensions reaches it through its
+  * ServiceLoader entry, as it reaches any session with graft on the
+  * classpath (a JVM's sessions share the SparkContext's static conf, so
+  * setting it here would hide that path from every spec). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Spark 4.1's checkpoint file-checksum writer deadlocks stateful
