@@ -35,23 +35,4 @@ object ZOrder {
     */
   def zvalue2(x: Column, y: Column): Column =
     spread16(x).bitwiseOR(shiftleft(spread16(y), 1))
-
-  /** Spread the low 10 bits of `c` so bit i lands at bit 3i (3-way
-    * dilation masks).
-    */
-  def spread10x3(c: Column): Column = {
-    val x0 = c.cast("long").bitwiseAND(lit(0x3FFL))
-    val x1 = (x0.bitwiseOR(shiftleft(x0, 16))).bitwiseAND(lit(0x30000FFL))
-    val x2 = (x1.bitwiseOR(shiftleft(x1, 8))).bitwiseAND(lit(0x300F00FL))
-    val x3 = (x2.bitwiseOR(shiftleft(x2, 4))).bitwiseAND(lit(0x30C30C3L))
-    (x3.bitwiseOR(shiftleft(x3, 2))).bitwiseAND(lit(0x9249249L))
-  }
-
-  /** 30-bit Morton code of (x, y, z) — 10 bits per dimension. Same
-    * layout contract as [[zvalue2]]: x lowest stripe, then y, then z.
-    */
-  def zvalue3(x: Column, y: Column, z: Column): Column =
-    spread10x3(x)
-      .bitwiseOR(shiftleft(spread10x3(y), 1))
-      .bitwiseOR(shiftleft(spread10x3(z), 2))
 }

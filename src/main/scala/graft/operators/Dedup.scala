@@ -484,14 +484,16 @@ object Dedup {
     * B~C must collapse to ONE survivor). Iterative min-label propagation
     * with an early-stop convergence check; iterations are bounded by the
     * component diameter, which for near-dup graphs is tiny (dup clusters
-    * are cliques-ish). Each iteration is one join + one aggregate —
-    * at 100 TB you would switch to the alternating large-star/small-star
-    * algorithm (same primitive ops, O(log n) rounds on pathological
-    * chains); for dedup-shaped graphs plain propagation converges in a
-    * handful of rounds. Returns (doc_id, cluster_id, keep) where
-    * cluster_id = min doc id in the component and keep marks the
-    * survivor. An empty `pairs` frame returns an empty result (a clean
-    * corpus is not an error).
+    * are cliques-ish). Each iteration is one join + one aggregate. A
+    * component whose diameter outlasts `maxIters` (a long near-dup
+    * chain) is finished by [[starComponents]] over the original pairs,
+    * which needs O(log n) rounds on any shape. Min-label stays the first
+    * pass because it is the cheaper one on dedup-shaped graphs: at sf0.1
+    * on 4 cores q57 took 2.8 s warm in 31 jobs this way, against 3.9 s
+    * in 41 jobs through the star kernel alone. Returns (doc_id,
+    * cluster_id, keep) where cluster_id = min doc id in the component
+    * and keep marks the survivor. An empty `pairs` frame returns an
+    * empty result (a clean corpus is not an error).
     *
     * Cache contract: the RETURNED frame is persisted (MEMORY_AND_DISK)
     * and already materialized; every intermediate persist is released
@@ -540,7 +542,7 @@ object Dedup {
       val msgs = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("label"))
-      // r16 (guide §5, the dedupClustersStars discipline): each round
+      // r16 (guide §5, the starComponents discipline): each round
       // references `labels` TWICE (msgs join + union), so the lazy
       // persist let the LOGICAL plan double per round — q57's explain
       // hit 51k lines and a growing share of each round was Catalyst
@@ -560,73 +562,62 @@ object Dedup {
       val newSum = Option(updated
         .agg(sum(col("label").cast("decimal(38,0)"))).collect()(0).get(0))
         .map(_.toString).getOrElse("0")
-      labels.unpersist() // round-0 init persist; no-op on checkpoints
-      freeCheckpoint(labels) // a dead round's blocks are never re-read
+      // a dead round is never re-read: round 0's labels are a persist
+      // over `edges`, every later round a checkpoint of its own
+      if (iter == 0) labels.unpersist() else freeCheckpoint(labels)
       labels = updated
       converged = labelSum.contains(newSum)
       labelSum = Some(newSum)
       iter += 1
     }
-    require(converged,
-      s"label propagation did not converge in $maxIters rounds — component " +
-        "diameter exceeds the bound; raise maxIters or use alternating stars")
+    // Past the cap the partial labels are no use to the star kernel:
+    // after r rounds on a chain, the link i → i−r−1 splits it into r+1
+    // strands. The kernel gets the original (symmetric) edges instead.
+    val comps =
+      if (converged) labels
+      else starComponents(edges.select(col("src").as("a"), col("dst").as("b")), Nil)
+        .select(col("node").as("id"), col("m").as("label"))
     // Materialize the result BEFORE releasing the iteration caches so the
     // returned frame is self-contained: the caller gets exactly one
     // persisted frame (the result itself) and releases it with
     // `result.unpersist()` — nothing else leaks per call. The frame is
     // small by construction (only docs that appear in a near-dup pair).
-    val out = labels
+    val out = comps
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
         (col("id") === col("label")).as("keep"))
       .orderBy(col("doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    // `out` is fully materialized in cache, so the final round's and
-    // the edge frame's checkpoint blocks are dead — free them now (the
-    // standard localCheckpoint trade: re-reading `got` after the
-    // caller's final unpersist would need a recompute these blocks no
-    // longer back, same as dedupClustersStars).
-    freeCheckpoint(labels)
-    freeCheckpoint(edges)
+    // `out` is fully materialized in cache, so the checkpoints behind
+    // the components, the last round and the edge frame are dead — free
+    // them now (the standard localCheckpoint trade: re-reading `out`
+    // after the caller's final unpersist would need a recompute these
+    // blocks no longer back).
+    Seq(comps, labels, edges).foreach(freeCheckpoint)
     out
   }
 
-  /** Release the blocks behind a locally-checkpointed frame once it is
-    * provably dead (nothing will read it again). No-op for frames that
-    * are not checkpoint-backed.
+  /** Release the blocks of every locally-checkpointed frame `df` reads
+    * once they are provably dead (nothing will read them again). No-op
+    * for frames that read no checkpoint.
     */
   private def freeCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.GraftBridge.checkpointRdd(df)
+    org.apache.spark.sql.GraftBridge.checkpointRdds(df)
       .foreach(_.unpersist(false))
 
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the 100 TB upgrade of [[dedupClusters]]: O(log n)
-    * rounds on ANY graph shape, including the pathological long chains
-    * where plain min-label propagation needs diameter rounds. Built on
-    * [[starComponents]]; returns [[dedupClusters]]' contract: (doc_id,
-    * cluster_id, keep), empty input → empty output, the RETURNED frame
-    * is persisted and materialized (release with `result.unpersist()`).
-    */
-  def dedupClustersStars(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    val out = starComponents(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), Nil, maxIters)
-      .select(col("node").as("doc_id"), col("m").as("cluster_id"),
-        (col("node") === col("m")).as("keep"))
-      .orderBy(col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
-  }
-
-  /** The large-star/small-star kernel, run over MANY edge sets at once:
+    * SoCC 2014): O(log n) rounds on ANY graph shape, including the
+    * pathological long chains where plain min-label propagation needs
+    * diameter rounds. The kernel runs over MANY edge sets at once:
     * `pairs` carries (keys…, a, b) rows meaning "undirected edge {a, b}
     * belongs to the subproblem named by the `keys` columns", and every
     * groupBy/join of a round carries the keys along. Plain connected
     * components pass `keys = Nil`; the articulation/bridge exclusion
     * index passes the excluded node `x` and solves every G∖{x} jointly.
     * Returns (keys…, node, m): the canonical (min-member) component
-    * label of every node that carries an edge in its subproblem.
+    * label of every node that carries an edge in its subproblem; empty
+    * input → empty output.
     *
     * Edges only ever point "downhill" (a > b). large-star: every node
     * links its strictly-larger neighbors to the minimum of its closed
@@ -642,12 +633,15 @@ object Dedup {
     * The seed and every round's edge frame are localCheckpoint'd: one
     * round references its input ~6 times, so an uncut LOGICAL plan
     * would grow ~6× per round and the analyzer — not the data — would
-    * become the bottleneck. Their blocks are reclaimed by the ContextCleaner as
-    * the loop drops references; on a cluster a lost executor fails the
-    * in-flight job (re-run) — the standard localCheckpoint trade (set a
-    * reliable checkpoint dir instead if executors are preemptible).
+    * become the bottleneck. Each dead round's blocks are freed as soon
+    * as the next round is materialized; the last round's blocks back
+    * the returned frame ([[dedupClusters]] frees them once its result
+    * is cached, other callers leave them to the ContextCleaner). On a
+    * cluster a lost executor fails the in-flight job (re-run) — the
+    * standard localCheckpoint trade (set a reliable checkpoint dir
+    * instead if executors are preemptible).
     */
-  private[operators] def starComponents(pairs: DataFrame, keys: Seq[String],
+  def starComponents(pairs: DataFrame, keys: Seq[String],
       maxIters: Int = 30): DataFrame = {
     val k = keys.map(col)
     var edges = pairs
@@ -702,6 +696,7 @@ object Dedup {
       val newSig = (row.getLong(0),
         Option(row.get(1)).map(_.toString).getOrElse("0"))
       converged = sig.contains(newSig) && next.exceptAll(edges).isEmpty
+      freeCheckpoint(edges)
       edges = next
       sig = Some(newSig)
       iter += 1

@@ -911,39 +911,18 @@ object Extended {
       .orderBy(col("o_orderstatus"))
   }
 
-  /** Builtin-sketch summary: Spark's HLL++ distinct count and
-    * approximate-percentile aggregates per return flag. Library surface
-    * only — sketch internals are engine-specific, so this frame is NOT
-    * replayable by an independent engine; ExtendedSpec certifies it by
-    * tolerance against the exact answers instead. At 100 TB these are
-    * the ONLY affordable forms (single pass, bounded memory, mergeable
-    * partial sketches).
-    */
-  def builtinSketchSummary(s: SparkSession, d: String): DataFrame =
-    // sketches only — mixing an exact countDistinct in forces an Expand
-    // (one row per distinct-agg per input row); ExtendedSpec computes the
-    // exact answers separately for the tolerance check
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_orderkey")).as("approx_orders"),
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000)).as("approx_median"),
-        count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"))
-
-  /** q46: approximate sketches, ORACLE-CHECKED — the same two questions
-    * the builtin-sketch path answers (distinct orders + median price per
-    * return flag), re-expressed on the repo's PORTABLE sketch primitives
-    * so an independent engine replays every register and bucket exactly:
-    * distinct via the md5-HLL register table (Scale.hllRegisters /
-    * hllEstimate — the q96 machinery), median via the integer-grid
-    * histogram sketch (Scale.histogramSketch / sketchQuantiles — the
-    * q155 machinery) on price cents with $1000 buckets. Same single-pass
-    * / bounded-state / mergeable 100 TB shape as the builtins; the
-    * builtin-aggregate variant stays available as
-    * [[builtinSketchSummary]] (tolerance-pinned in ExtendedSpec — its
-    * sketch bytes are engine-internal and deliberately not a catalog
-    * gate).
+  /** q46: approximate sketches, ORACLE-CHECKED — the two questions
+    * Spark's builtin HLL++ / `percentile_approx` aggregates answer
+    * (distinct orders + median price per return flag), expressed on the
+    * repo's PORTABLE sketch primitives so an independent engine replays
+    * every register and bucket exactly: distinct via the md5-HLL
+    * register table (Scale.hllRegisters / hllEstimate — the q96
+    * machinery), median via the integer-grid histogram sketch
+    * (Scale.histogramSketch / sketchQuantiles — the q155 machinery) on
+    * price cents with $1000 buckets. Same single-pass / bounded-state /
+    * mergeable 100 TB shape as the builtins, whose sketch bytes are
+    * engine-internal and so could not be a catalog gate. ExtendedSpec
+    * pins both answers within tolerance of the exact ones.
     */
   val q46: QueryDef = QueryDef.checked(
     "q46_approx_sketches",

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components (those live in
-  * Dedup.dedupClusters / dedupClustersStars): fixed-iteration PageRank
+  * Dedup.dedupClusters / starComponents): fixed-iteration PageRank
   * on an integer grid. The reference engine has no graph surface
   * (capability-parity, SURVEY.md §2.5).
   *
@@ -54,7 +54,7 @@ object Graph {
     * map-side combined. The edge frame (with outdeg attached) is
     * persisted once and reused every round; a fixed small iteration
     * count keeps lineage shallow (no checkpointing needed — contrast
-    * dedupClustersStars, whose round count is data-dependent). At
+    * Dedup.starComponents, whose round count is data-dependent). At
     * 100 TB you would bucket BOTH edge endpoints so the per-round join
     * reuses a co-located layout (q80's bucketing) instead of
     * re-shuffling edges every round.
@@ -721,7 +721,7 @@ object Graph {
     * core's nodes with their in-core degree (all ≥ k).
     *
     * The round count is DATA-DEPENDENT (a chain peels one layer per
-    * round), so this uses the dedupClustersStars convergence treatment,
+    * round), so this uses the starComponents convergence treatment,
     * not a fixed unroll: each round's induced edge frame is
     * `localCheckpoint(true)` — one round references only the previous
     * round's materialized RDD, keeping lineage depth constant — and the

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.ZOrder
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional storage layout: Z-order (Morton) clustering so
@@ -12,12 +12,15 @@ import org.apache.spark.sql.functions._
   * or dies by how many files a predicate can skip, which is why this is
   * a first-class operator here.
   *
-  * `zorderWrite` needs no custom write path: `repartitionByRange` on
-  * the z-expression assigns each output file a contiguous z-range
-  * (sampled range boundaries — balanced files even under skew), and
-  * `sortWithinPartitions` makes every file's (x, y) min/max rectangle
-  * compact. Readers are plain `spark.read.parquet` + predicates;
-  * pruning comes from parquet stats, not from this library.
+  * Every clustered layout here is one write, [[zoneMapWrite]], keyed
+  * by a column expression: a plain column, `ZOrder.zvalue2(x, y)` or
+  * `HilbertCode.hilbert(x, y, bits)`. `repartitionByRange` on the key
+  * assigns each output file a contiguous key range (sampled range
+  * boundaries — balanced files even under skew), and
+  * `sortWithinPartitions` makes every file's min/max zone (for a curve
+  * key, its (x, y) rectangle) compact. Readers are plain
+  * `spark.read.parquet` + predicates; pruning comes from parquet stats,
+  * not from this library.
   */
 object Layout {
 
@@ -306,17 +309,6 @@ object Layout {
       graft.functions.HilbertCode.hilbert(col(cx), col(cy), bits))
   }
 
-  /** Write `df` clustered by the Hilbert index of (cx, cy) —
-    * [[zorderWrite]] with the better-locality curve.
-    */
-  def hilbertWrite(df: DataFrame, cx: String, cy: String, path: String,
-      numFiles: Int, bits: Int = 16): Unit =
-    withHilbert(df, cx, cy, "_h", bits)
-      .repartitionByRange(numFiles, col("_h"))
-      .sortWithinPartitions(col("_h"))
-      .drop("_h")
-      .write.mode("overwrite").parquet(path)
-
   /** The staged oracle CTEs for [[withHilbert]] — generated from the
     * same loop as the Spark stages so the two texts cannot
     * desynchronize. Carries (o_orderkey, x0, y0) through every stage.
@@ -367,17 +359,6 @@ object Layout {
       .orderBy(col("o_orderkey"))
   }
 
-  /** Write `df` clustered by the Morton code of (cx, cy) into
-    * `numFiles` range-partitioned, internally sorted parquet files.
-    */
-  def zorderWrite(df: DataFrame, cx: String, cy: String, path: String,
-      numFiles: Int): Unit = {
-    val z = ZOrder.zvalue2(col(cx), col(cy))
-    df.repartitionByRange(numFiles, z)
-      .sortWithinPartitions(z)
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** q73: Morton codes over orders — x = customer key's low 16 bits,
     * y = order date as days since epoch of the TPC-H date floor. Both
     * engines compute the identical interleave from the same bitwise
@@ -416,14 +397,17 @@ object Layout {
   // -------------------------------------------------------------------
 
   /** Range-clustered write: each of the `nFiles` output files covers a
-    * contiguous `sortCol` range (sampled range boundaries balance file
+    * contiguous range of `key` (sampled range boundaries balance file
     * sizes even under skew), so per-file min/max zone maps are TIGHT —
-    * the precondition for any skipping index to prune.
+    * the precondition for any skipping index to prune. A space-filling
+    * curve key (`ZOrder.zvalue2`, `HilbertCode.hilbert`) gives every
+    * file a compact rectangle in its two source columns, so a slab of
+    * EITHER column skips files.
     */
-  def zoneMapWrite(df: DataFrame, path: String, sortCol: String,
+  def zoneMapWrite(df: DataFrame, path: String, key: Column,
       nFiles: Int = 8): Unit =
-    df.repartitionByRange(nFiles, col(sortCol))
-      .sortWithinPartitions(col(sortCol))
+    df.repartitionByRange(nFiles, key)
+      .sortWithinPartitions(key)
       .write.mode("overwrite").parquet(path)
 
   /** The zone-map manifest: per data file, min/max of `sortCol`
@@ -494,7 +478,7 @@ object Layout {
     val root = memoizedLayout(d, "zmap_li") { r =>
       zoneMapWrite(Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_extendedprice"), col("l_shipdate")),
-        s"$r/li", "l_shipdate")
+        s"$r/li", col("l_shipdate"))
     }
     val (pruned, _, _) = zoneMapRead(s, s"$root/li", "l_shipdate",
       "1996-01-01 00:00:00", "1996-07-01 00:00:00")

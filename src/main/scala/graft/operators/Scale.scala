@@ -847,41 +847,16 @@ object Scale {
       .orderBy(col("event_type"))
   }
 
-  /** Mergeable distinct-count sketches (Apache DataSketches HLL via the
-    * Spark 4 builtins): each slice builds a BINARY sketch once; any
-    * re-grouping — union across slices, rollups over time partitions,
-    * cross-cluster merges — happens on the sketches, never by
-    * re-scanning rows. THE pattern for distinct counts at 100 TB:
-    * per-partition sketches persist beside the data and every
-    * downstream distinct query is a sketch merge. Sketch bytes are
-    * engine-specific → rows-only; ScaleSpec pins the estimates within
-    * tolerance of exact and the union == direct-global property.
-    */
-  def sliceSketchUnion(df: org.apache.spark.sql.DataFrame,
-      sliceCol: String, valueCol: String): org.apache.spark.sql.DataFrame = {
-    // materialized once (#slices rows): it feeds BOTH the per-slice
-    // estimate branch and the union row — left lazy, each branch would
-    // re-scan the full input and re-sketch it
-    val perSlice = df.groupBy(col(sliceCol).as("slice"))
-      .agg(hll_sketch_agg(col(valueCol)).as("sk"))
-      .localCheckpoint(true)
-    perSlice
-      .select(col("slice"), hll_sketch_estimate(col("sk")).as("est"))
-      .unionByName(perSlice.agg(
-        hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
-        .withColumn("slice", lit("__total__")))
-  }
-
   /** Engine-portable HLL register table: m = 4096 registers, bucket =
     * the first 3 md5 hex chars (12 bits), rho = 1 + the leading-zero
     * BIT count of the next 32 hash bits (8 hex chars; 33 when they are
     * all zero — the standard rho convention for a 32-bit suffix).
     * Register state is (bucket -> max rho): exact integers, so builds,
     * merges (per-register max — commutative, idempotent) and summaries
-    * are bit-identical in ANY engine with md5. This is the
-    * oracle-checkable complement of the DataSketches binary-register
-    * path ([[sliceSketchUnion]]) — same mergeability contract, portable
-    * registers instead of library-defined bytes. The leading-zero count
+    * are bit-identical in ANY engine with md5 — the mergeability of a
+    * binary HLL sketch (Spark's `hll_sketch_agg`/`hll_union_agg`), with
+    * portable registers instead of library-defined bytes, so every
+    * build and merge is oracle-checkable. The leading-zero count
     * never parses the 32-bit value: 8 - length(hex with leading zeros
     * stripped) counts whole zero NIBBLES and the first surviving hex
     * digit contributes its own 0-3 zero bits by a 16-way CASE — pure
@@ -985,9 +960,8 @@ object Scale {
     * total over the documents corpus, on the PORTABLE md5-HLL —
     * ORACLE-CHECKED end to end (DuckDB rebuilds every register, the
     * per-register-max union, the exact scaled denominator and the
-    * corrected estimate). The DataSketches binary-sketch path stays as
-    * the [[sliceSketchUnion]] library API (ScaleSpec pins its accuracy
-    * + union == direct-global mergeability).
+    * corrected estimate). ScaleSpec pins every estimate, the union's
+    * included, within 5 % of the exact distinct count.
     */
   val q96: QueryDef = QueryDef.checked(
     "q96_hll_sketch_union",
@@ -1362,8 +1336,7 @@ object Scale {
     * property exact distinct cannot have). Built on the PORTABLE
     * md5-HLL ([[hllRegisters]]/[[hllEstimate]]) so the whole pipeline —
     * register build, trailing merge, corrected estimate — is
-    * ORACLE-CHECKED; the DataSketches binary-register form of the same
-    * merge remains via [[sliceSketchUnion]]. The day spine × registers
+    * ORACLE-CHECKED. The day spine × registers
     * range join duplicates at most 7 × 4096 register rows per day —
     * bounded by the calendar, not the corpus. ScaleSpec additionally
     * pins every day's estimate within 5 % of q165's exact count.

@@ -30,16 +30,15 @@ object GraftBridge {
   def stopStateStoreMaintenance(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
-  /** The materialized RDD behind a locally-checkpointed Dataset (its
-    * analyzed plan is a LogicalRDD leaf). Lets iterative operators
-    * free a dead round's blocks deterministically — the ContextCleaner
-    * would reclaim them eventually, but an explicit release keeps the
-    * operators' "no leaked frames" cache contract testable. None for
-    * frames that are not checkpoint-backed.
+  /** The materialized RDDs behind the locally-checkpointed Datasets
+    * `df` reads (each is a LogicalRDD leaf of its analyzed plan). Lets
+    * iterative operators free a dead round's blocks deterministically —
+    * the ContextCleaner would reclaim them eventually, but an explicit
+    * release keeps the operators' "no leaked frames" cache contract
+    * testable. Empty for frames that read no checkpoint.
     */
-  def checkpointRdd(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
+  def checkpointRdds(df: Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 }

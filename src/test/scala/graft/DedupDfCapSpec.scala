@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupDfCapSpec extends AnyFunSuite {
@@ -75,19 +76,69 @@ class DedupDfCapSpec extends AnyFunSuite {
     // cache counts see other suites' frames (including deliberate
     // session memos like q183's component assignment). A systematic
     // leak inside dedupClusters fails every attempt; concurrent-suite
-    // noise passes on a quiet one.
-    val attempts = (1 to 3).iterator.map { _ =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-      val got = operators.Dedup.dedupClusters(pairs)
-      // exactly one NEW persisted frame may remain: the result itself
-      val mid = spark.sparkContext.getPersistentRDDs.keySet -- before
-      got.unpersist()
-      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-      (mid.size <= 1) && after.isEmpty
+    // noise passes on a quiet one. The 22-node chain outlasts the
+    // min-label round cap, so it also covers the star-kernel finish.
+    for (pairs <- Seq(Seq((1L, 2L), (2L, 3L)), chain(22))) {
+      val attempts = (1 to 3).iterator.map { _ =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val got = operators.Dedup.dedupClusters(pairs.toDF("doc_a", "doc_b"))
+        // exactly one NEW persisted frame may remain: the result itself
+        val mid = spark.sparkContext.getPersistentRDDs.keySet -- before
+        got.unpersist()
+        val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+        (mid.size <= 1) && after.isEmpty
+      }
+      assert(attempts.exists(identity),
+        s"dedupClusters leaked intermediate caches on all 3 attempts " +
+          s"(${pairs.size} pairs)")
     }
-    assert(attempts.exists(identity),
-      "dedupClusters leaked intermediate caches on all 3 attempts")
+  }
+
+  /** A path over `n` nodes: n − 1 hops from its minimum to its far end. */
+  private def chain(n: Int): Seq[(Long, Long)] =
+    (0 until n - 1).map(i => (i.toLong, i + 1L))
+
+  /** Component minimum of every node that carries an edge, by union-find
+    * on the driver — the reference `dedupClusters` is checked against.
+    */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("dedupClusters finishes components longer than its round cap") {
+    val s = spark
+    import s.implicits._
+    // min-label needs one round per hop from a component's minimum, so
+    // a 22-node chain is the first to outlast the 20-round cap. The
+    // forests hang each node off one of the few nodes before it in a
+    // random order, which makes paths of dozens of hops, and relabel
+    // the nodes at random so the minimum sits anywhere on them.
+    def forest(seed: Int, n: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val id = rnd.shuffle((0L until n.toLong).map(_ * 3 + 5).toVector)
+      (1 until n).filter(_ % 97 != 0)
+        .map(i => (id(i), id(i - 1 - rnd.nextInt(math.min(i, 3)))))
+    }
+    for ((name, pairs) <- Seq("chain 22" -> chain(22), "chain 64" -> chain(64),
+        "forest 1" -> forest(1, 300), "forest 2" -> forest(2, 300))) {
+      val got = operators.Dedup.dedupClusters(pairs.toDF("doc_a", "doc_b"))
+      val rows = got.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      got.unpersist()
+      val want = unionFindLabels(pairs).toSeq.sorted
+        .map { case (n, m) => (n, m, n == m) }
+      assert(rows === want, name)
+    }
+    spark.catalog.clearCache()
   }
 
   test("dedupClusters collapses transitive chains to one survivor") {
@@ -107,10 +158,12 @@ class DedupDfCapSpec extends AnyFunSuite {
   test("star-contraction clustering matches label propagation on real pairs") {
     val pairs = operators.Dedup.exactNearDups(
       graft.Tables.documents(spark, sf).select("doc_id", "text"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val prop = rows(operators.Dedup.dedupClusters(pairs))
-    val stars = rows(operators.Dedup.dedupClustersStars(pairs))
+    val clu = operators.Dedup.dedupClusters(pairs)
+    val prop = clu.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    clu.unpersist()
+    val stars = operators.Dedup.starComponents(
+        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), Nil)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(prop.nonEmpty)
     assert(stars === prop)
     spark.catalog.clearCache()
@@ -121,12 +174,11 @@ class DedupDfCapSpec extends AnyFunSuite {
     import s.implicits._
     // diameter-63 chain: plain propagation needs 63 rounds; alternating
     // stars must finish (converge + verify) within 10
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = operators.Dedup.dedupClustersStars(chain, maxIters = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    val got = operators.Dedup.starComponents(chain(64).toDF("a", "b"), Nil,
+        maxIters = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length === 64)
     assert(got.forall(_._2 == 0L))
-    assert(got.count(_._3) === 1)
     spark.catalog.clearCache()
   }
 
@@ -203,10 +255,8 @@ class DedupDfCapSpec extends AnyFunSuite {
   test("star-contraction clustering on a clean corpus returns empty") {
     val s = spark
     import s.implicits._
-    val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    val got = operators.Dedup.dedupClustersStars(noPairs)
-    assert(got.count() === 0L)
-    got.unpersist()
+    val noPairs = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(operators.Dedup.starComponents(noPairs, Nil).count() === 0L)
     spark.catalog.clearCache()
   }
 }

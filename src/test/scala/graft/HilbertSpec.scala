@@ -50,7 +50,8 @@ class HilbertSpec extends AnyFunSuite {
       .map(_ => (rnd.nextInt(4096).toLong, rnd.nextInt(4096).toLong))
       .toDF("x", "y")
     val hDir = Files.createTempDirectory("graft-hilbert").toString
-    operators.Layout.hilbertWrite(pts, "x", "y", hDir, numFiles = 32, bits = 12)
+    operators.Layout.zoneMapWrite(pts, hDir,
+      graft.functions.HilbertCode.hilbert(col("x"), col("y"), 12), nFiles = 32)
     def filesTouched(pred: org.apache.spark.sql.Column): Long =
       spark.read.parquet(hDir).filter(pred)
         .select(input_file_name()).distinct().count()

@@ -320,7 +320,7 @@ class ScaleSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("HLL slice sketches: estimates near exact, sketch-union == direct global") {
+  test("md5-HLL slice sketches: per-slice and register-union estimates near exact") {
     val s2 = spark
     import org.apache.spark.sql.functions._
     val tok = Tables.documents(s2, sf).select(col("source"),
@@ -339,22 +339,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(math.abs(got("__total__") - exactTotal) <=
       math.max(2L, (exactTotal * 0.05).toLong),
       s"union est ${got("__total__")} vs exact $exactTotal")
-    // the DataSketches binary-register library path: estimates near
-    // exact, and the union of per-slice sketches must equal the sketch
-    // built directly over the whole corpus
-    val lib = graft.operators.Scale.sliceSketchUnion(tok, "source", "t")
-      .select(col("slice"), col("est"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     spark.catalog.clearCache()
-    exactPer.foreach { case (src, n) =>
-      assert(math.abs(lib(src) - n) <= math.max(2L, (n * 0.05).toLong),
-        s"sketch $src: est ${lib(src)} vs exact $n")
-    }
-    val direct = tok.agg(
-      hll_sketch_estimate(hll_sketch_agg(col("t"))).as("e"))
-      .head().getLong(0)
-    assert(lib("__total__") == direct,
-      s"sketch-union ${lib("__total__")} != direct-global $direct")
   }
 
   test("md5-HLL estimator holds ±5% across the linear-counting and raw branches") {

@@ -71,30 +71,22 @@ class StorageLayoutSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("zvalue2/zvalue3 match a bit-by-bit interleave reference") {
+  test("zvalue2 matches a bit-by-bit interleave reference") {
     val s = spark
     import s.implicits._
     import graft.functions.ZOrder
     def ref2(x: Long, y: Long): Long =
       (0 until 16).map(i =>
         (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))).reduce(_ | _)
-    def ref3(x: Long, y: Long, z: Long): Long =
-      (0 until 10).map(i =>
-        (((x >> i) & 1L) << (3 * i)) | (((y >> i) & 1L) << (3 * i + 1)) |
-          (((z >> i) & 1L) << (3 * i + 2))).reduce(_ | _)
     val rnd = new scala.util.Random(29)
     val rows = (0 until 500).map(_ =>
-      (rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong, rnd.nextInt(1024).toLong))
-    val df = rows.toDF("x", "y", "z")
-      .select(col("x"), col("y"), col("z"),
-        ZOrder.zvalue2(col("x"), col("y")).as("z2"),
-        ZOrder.zvalue3(col("x").bitwiseAND(lit(1023L)), col("y").bitwiseAND(lit(1023L)),
-          col("z")).as("z3"))
+      (rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong))
+    val df = rows.toDF("x", "y")
+      .select(col("x"), col("y"), ZOrder.zvalue2(col("x"), col("y")).as("z2"))
       .collect()
     df.foreach { r =>
-      val (x, y, z) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      assert(r.getLong(3) === ref2(x, y), s"zvalue2($x,$y)")
-      assert(r.getLong(4) === ref3(x & 1023L, y & 1023L, z), s"zvalue3($x,$y,$z)")
+      val (x, y) = (r.getLong(0), r.getLong(1))
+      assert(r.getLong(2) === ref2(x, y), s"zvalue2($x,$y)")
     }
   }
 
@@ -108,7 +100,8 @@ class StorageLayoutSpec extends AnyFunSuite {
       .toDF("x", "y")
     val zDir = Files.createTempDirectory("graft-zorder").toString
     val linDir = Files.createTempDirectory("graft-linear").toString
-    graft.operators.Layout.zorderWrite(pts, "x", "y", zDir, numFiles = 32)
+    graft.operators.Layout.zoneMapWrite(pts, zDir,
+      graft.functions.ZOrder.zvalue2(col("x"), col("y")), nFiles = 32)
     pts.repartitionByRange(32, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(linDir)
     // distinct source files of the matching rows = files a min/max-
@@ -219,7 +212,7 @@ class StorageLayoutSpec extends AnyFunSuite {
       .createTempDirectory("graft-zmap-spec").toAbsolutePath.toString
     val li = graft.Tables.lineitem(s, TestSpark.Sf0001)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_shipdate"))
-    operators.Layout.zoneMapWrite(li, s"$root/li", "l_shipdate", nFiles = 8)
+    operators.Layout.zoneMapWrite(li, s"$root/li", col("l_shipdate"), nFiles = 8)
     val (lo, hi) = ("1996-01-01 00:00:00", "1996-07-01 00:00:00")
     val (pruned, nRead, nTotal) =
       operators.Layout.zoneMapRead(s, s"$root/li", "l_shipdate", lo, hi)
